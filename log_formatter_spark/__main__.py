@@ -7,8 +7,9 @@
     python -m log_formatter_spark --list-queries
 
 Batch mode plans and drives the configured input→formatters→output DAG
-(plans/planner.py). Streaming mode runs the checkpoint-resumable
-foreachBatch flagship over the configured source directory — the
+(plans/planner.py). Streaming mode runs the config's ``pipeline``
+section as a checkpoint-resumable foreachBatch job over the configured
+source directory, writing under ``--out`` — the
 graceful-stop + resume answer to the reference's drain-with-timeout
 shutdown (agent/manager.go:81-88). ``--query`` runs any named catalog
 operator (contract.queries()) over an sf-style parquet dir — every
@@ -68,8 +69,7 @@ def main(argv: list[str] | None = None) -> int:
         if args.streaming:
             if not (args.out and args.checkpoint):
                 ap.error("--streaming requires --out and --checkpoint")
-            from log_formatter_spark.streaming import run_streaming_pipeline
-            from log_formatter_spark.streaming.job import TRANSCRIPT_SCHEMA
+            from log_formatter_spark.streaming import TRANSCRIPT_SCHEMA, run_streaming_pipeline
 
             # streaming mode requires a transcript-parquet source: fail
             # loudly on a config whose input is some other table shape
@@ -93,7 +93,7 @@ def main(argv: list[str] | None = None) -> int:
                     f"missing columns {sorted(missing)}"
                 )
             ledger = run_streaming_pipeline(
-                spark, src, args.out, args.checkpoint,
+                spark, src, args.out, args.checkpoint, cfg["pipeline"] or {},
                 max_files_per_trigger=inp.get("max_files_per_trigger"),
             )
             print(ledger.snapshot())

@@ -652,8 +652,6 @@ def _streaming_pipeline_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_streaming_pipeline,
     )
 
-    from log_formatter_spark.pipeline import PipelineOptions
-
     work = tempfile.mkdtemp(prefix="lfs_contract_stream_")
     src = f"{work}/in"
     transcripts_from_events(spark, sf_dir).repartition(4).write.mode(

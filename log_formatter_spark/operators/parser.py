@@ -145,7 +145,8 @@ def _arrow_extract_cols(pattern: str, target: str, with_flag: bool) -> dict[str,
 
         @pandas_udf(schema)
         def parse(s: pd.Series) -> pd.DataFrame:
-            pat = re.compile(wrapped)  # compiled once per executor python worker
+            # compiled once per executor python worker; ASCII \d \w \s as in RE2
+            pat = re.compile(wrapped, re.ASCII)
             ext = s.str.extract(pat)
             ok = ext[_WRAP].notna()
             out = {}
@@ -169,8 +170,9 @@ _NAMED_GROUP = re.compile(r"\(\?P<[^>]+>")
 
 def _to_java_regex(pattern: str) -> str:
     """Python named groups -> plain Java groups (extraction is by index;
-    Java group names reject underscores, so names are dropped)."""
-    return _NAMED_GROUP.sub("(", pattern)
+    Java group names reject underscores, so names are dropped). ``(?d)``:
+    ``.`` stops only at ``\n``, as in RE2, not also at ``\r`` etc."""
+    return "(?d)" + _NAMED_GROUP.sub("(", pattern)
 
 
 def _jvm_extract_cols(pattern: str, target: str, with_flag: bool) -> dict[str, Column]:

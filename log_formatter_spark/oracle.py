@@ -24,10 +24,10 @@ TOOL_MAP = {t: (k, s) for t, k, s in TOOL_ROWS}
 
 
 def parse_doc(doc: dict, pattern: str = TRANSCRIPT_PATTERN, target: str = "text"):
-    """Reference parser semantics: search; no match -> error (None);
+    """Reference parser semantics (Go RE2): search; no match -> error (None);
     matched: every named group becomes a field, ``""`` for
     non-participating groups, names ending in ``_`` dropped."""
-    m = re.search(pattern, doc[target] or "")
+    m = re.search(pattern, doc[target] or "", re.ASCII)  # RE2: ASCII \d \w \s
     if m is None:
         return None
     out = dict(doc)

@@ -1,12 +1,12 @@
 """The flagship parse → enrich → route → aggregate DAG.
 
-Composes the operator library into the north-rule pipeline over a
-transcript DataFrame. This is the declarative logical plan; Catalyst
-picks the physical strategy (broadcast joins, partial aggs, codegen).
-At 10^12 rows the plan has exactly two shuffles: the optional salted
-repartition by hash(conv_id) and the final aggregate's key-only
-exchange. Everything between scan and aggregate is one fused
-WholeStageCodegen + one Arrow UDF stage.
+A ``pipeline`` section built next to ``TRANSCRIPT_PATTERN`` (which the
+oracle and the DuckDB twins also read) and compiled by the planner's
+``apply_pipeline``, like every batch and streaming run. At 10^12 rows
+the plan has exactly two shuffles: the optional salted repartition by
+hash(conv_id) and the final aggregate's key-only exchange. Everything
+between scan and aggregate is one fused WholeStageCodegen + one Arrow
+UDF stage.
 """
 
 from __future__ import annotations
@@ -15,34 +15,28 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from log_formatter_spark.lookups import role_lookup, tool_lookup
 from log_formatter_spark.operators.aggregate import sink_aggregates
-from log_formatter_spark.operators.enrich import enrich_role_tool
-from log_formatter_spark.operators.parser import ParserConfig, apply_parser
-from log_formatter_spark.operators.route import add_route
-from log_formatter_spark.operators.skew import salted_repartition
+from log_formatter_spark.plans.planner import apply_pipeline
 from log_formatter_spark.transcripts import TRANSCRIPT_PATTERN
 
 
 @dataclass(frozen=True)
 class PipelineOptions:
-    pattern: str = TRANSCRIPT_PATTERN
     engine: str = "arrow"  # grok engine: arrow | jvm
-    repartition: int | None = None  # hash(conv_id) partitions; None = leave as scanned
-    n_salts: int = 16
+    repartition: int | None = None  # salted hash(conv_id) partitions; None = as scanned
+
+    def section(self) -> dict:
+        """The flagship's ``pipeline`` config section."""
+        parser = {"components_regex": TRANSCRIPT_PATTERN, "engine": self.engine}
+        chain = [{"parser": parser}, "enrich", "route"]
+        return {"worker": self.repartition or 0, "formatters": chain}
 
 
 def parsed_enriched_routed(
     spark: SparkSession, transcripts: DataFrame, opts: PipelineOptions = PipelineOptions()
 ) -> DataFrame:
     """transcripts -> parsed + enriched + routed row-level DataFrame."""
-    df = transcripts
-    if opts.repartition:
-        df = salted_repartition(df, opts.repartition, opts.n_salts)
-    df = apply_parser(df, ParserConfig(opts.pattern, "text", engine=opts.engine))
-    df = enrich_role_tool(df, role_lookup(spark), tool_lookup(spark))
-    df = add_route(df)
-    return df
+    return apply_pipeline(transcripts, opts.section())
 
 
 def full_pipeline(

@@ -16,7 +16,8 @@ Here the same document compiles to a declarative DataFrame DAG:
 - ``pipeline.labels``   → lit-column stamping
 - ``output.target``     → sinks registry; ``output.index`` with
   ``{{field}}`` templates reproduces the ES dynamic-index fan-out
-  (util/config.go:16-32)
+  (util/config.go:16-32); ``output.aggregates`` (parquet only) adds the
+  per-sink (route, role, tool, hour) count table
 
 There is deliberately no optimizer here (the reference has none either,
 SURVEY.md §4.1) — the plan is handed to Catalyst, which does the
@@ -147,11 +148,10 @@ def register_formatter(name: str, fn: FormatterFn) -> None:
 # --- plan construction ----------------------------------------------------
 
 
-def build_pipeline(spark: SparkSession, cfg: dict) -> DataFrame:
-    """input + formatter chain → the routed DataFrame (logical plan)."""
-    df = build_source(spark, cfg["input"])
-    pipe = cfg.get("pipeline") or {}
-
+def apply_pipeline(df: DataFrame, pipe: dict) -> DataFrame:
+    """The one DAG builder (batch, each streaming micro-batch, the
+    flagship): a ``pipeline`` section's ``worker`` salted repartition,
+    then its formatter chain, then its labels."""
     worker = int(pipe.get("worker", 0))
     if worker and "conv_id" in df.columns:
         from log_formatter_spark.operators.skew import salted_repartition
@@ -174,6 +174,11 @@ def build_pipeline(spark: SparkSession, cfg: dict) -> DataFrame:
     return df
 
 
+def build_pipeline(spark: SparkSession, cfg: dict) -> DataFrame:
+    """input + pipeline section → the routed DataFrame (logical plan)."""
+    return apply_pipeline(build_source(spark, cfg["input"]), cfg.get("pipeline") or {})
+
+
 def run_batch(spark: SparkSession, cfg: dict) -> DataFrame:
     """Build the plan and drive it into the configured sink (the
     single-output rule mirrors agent/output/output.go:49-51). Returns
@@ -183,5 +188,7 @@ def run_batch(spark: SparkSession, cfg: dict) -> DataFrame:
     target = out.get("target")
     if not target or target not in SINKS:
         raise ValueError(f"unknown or missing output target: {target!r}")
+    if out.get("aggregates") and target != "parquet":
+        raise ValueError(f"output.aggregates needs the parquet target, got {target!r}")
     SINKS[target](df, out)
     return df

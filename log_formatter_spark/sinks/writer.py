@@ -5,13 +5,14 @@ own fields (``index: "logs-{{level}}"`` — reference
 agent/output/elasticsearch/elasticsearch.go:82 + util/config.go:16-32).
 The Spark rendering:
 
-- **Batch**: one single-pass ``partitionBy(route)`` write. The route
-  column becomes the partition directory — one scan, no per-sink jobs,
-  and downstream readers get partition pruning on the route for free.
-- **Streaming**: per-sink filtered writes inside ``foreachBatch``
-  (streaming/job.py) — Spark's standard multi-sink idiom, micro-batch ≡
-  the reference's size/time-bounded bulk buffer
-  (elasticsearch.go:103-131).
+- **Routed rows**: one single-pass ``partitionBy(route)`` write. The
+  route column becomes the partition directory — one scan, no per-sink
+  jobs, and downstream readers get partition pruning on the route for
+  free.
+- **Pipeline output** (``write_pipeline_output``): that write plus the
+  per-sink aggregate table, shared by batch (``output.aggregates``) and
+  every streaming micro-batch (≡ the reference's bulk buffer,
+  elasticsearch.go:103-131).
 
 A name→writer registry mirrors the reference's output factory registry
 (agent/output/output.go:23-38); Python callables replace `.so` plugins
@@ -25,6 +26,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from log_formatter_spark.operators.aggregate import sink_aggregates
 from log_formatter_spark.operators.route import ROUTE
 
 
@@ -63,6 +65,22 @@ def write_routed(
         .format(fmt)
         .save(base_dir)
     )
+
+
+def write_pipeline_output(
+    df: DataFrame, routed_dir: str, agg_dir: str, mode: str = "overwrite"
+) -> DataFrame:
+    """Write the routed rows once, then the per-sink (route, role, tool,
+    hour) aggregate of the committed rows to ``agg_dir`` as flat parquet.
+    The aggregate reads the routed parquet back, pruned to its key
+    columns, instead of caching ``df``; the read takes ``df``'s schema,
+    as a write of zero rows leaves no file to infer one from. Returns
+    the read-back for further counts."""
+    write_routed(df, routed_dir, mode=mode, fmt="parquet")
+    read = df.sparkSession.read.schema(df.schema).option("basePath", routed_dir)
+    committed = read.parquet(routed_dir)
+    sink_aggregates(committed).coalesce(1).write.mode("overwrite").parquet(agg_dir)
+    return committed
 
 
 def _write_routed_iceberg(df: DataFrame, table: str) -> None:
@@ -113,13 +131,17 @@ def _console_sink(df: DataFrame, cfg: dict) -> None:
 
 
 def _parquet_sink(df: DataFrame, cfg: dict) -> None:
+    mode = cfg.get("mode", "overwrite")
     if cfg.get("index"):  # dynamic {{field}} routing like the ES sink
         from log_formatter_spark.operators.route import sink_template_route
 
         df = sink_template_route(df, cfg["index"])
-        write_routed(df, cfg["path"], mode=cfg.get("mode", "overwrite"))
+    if cfg.get("aggregates"):
+        write_pipeline_output(df, cfg["path"], cfg["aggregates"], mode=mode)
+    elif cfg.get("index"):
+        write_routed(df, cfg["path"], mode=mode)
     else:
-        df.write.mode(cfg.get("mode", "overwrite")).parquet(cfg["path"])
+        df.write.mode(mode).parquet(cfg["path"])
 
 
 def _noop_sink(df: DataFrame, cfg: dict) -> None:

@@ -1,4 +1,4 @@
-"""The streaming flagship: checkpoint-resumable parse → enrich → route →
+"""The streaming pipeline: checkpoint-resumable parse → enrich → route →
 aggregate over a transcript file stream.
 
 Execution model vs the reference: the reference pumps docs through
@@ -12,7 +12,7 @@ micro-batch is exactly-once:
   so a replayed batch rewrites byte-identical output instead of
   appending twice — the multi-sink-atomicity answer from SURVEY.md §7.3.
 
-Aggregation strategy: per-batch *partial* hash aggregates are persisted,
+Aggregation strategy: per-batch *partial* hash aggregates are written,
 and the final counts are an idempotent sum over partials at read time
 (``read_final_aggregates``). This keeps state out of the streaming query
 (no state store growth at 10^12 turns) while staying exactly equal to
@@ -23,6 +23,7 @@ genuinely unbounded late data is ``streaming_hourly_counts``.
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,10 +35,11 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from log_formatter_spark.operators.aggregate import sink_aggregates
 from log_formatter_spark.operators.parser import PARSE_OK
-from log_formatter_spark.operators.route import ROUTE
-from log_formatter_spark.pipeline import PipelineOptions, parsed_enriched_routed
+from log_formatter_spark.operators.route import DEFAULT_ROUTES, ROUTE
+from log_formatter_spark.pipeline import PipelineOptions
+from log_formatter_spark.plans.planner import apply_pipeline
+from log_formatter_spark.sinks.writer import read_sink, write_pipeline_output
 from log_formatter_spark.streaming.ledger import MetricsLedger
 
 # input_hint schema (BASELINE.json)
@@ -95,74 +97,43 @@ def write_ordered_slices(path: str, *slices: DataFrame) -> None:
             os.utime(f, (base + 10.0 * i, base + 10.0 * i))
 
 
-def _routed_dir(out_dir: str) -> str:
-    return os.path.join(out_dir, "routed")
-
-
-def _agg_dir(out_dir: str) -> str:
-    return os.path.join(out_dir, "agg")
-
-
 def run_streaming_pipeline(
     spark: SparkSession,
     src_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    opts: PipelineOptions = PipelineOptions(),
+    opts: PipelineOptions | dict = PipelineOptions(),
     max_files_per_trigger: int | None = None,
 ) -> MetricsLedger:
-    """Run the flagship DAG over all currently-available input
-    (Trigger.AvailableNow), resumable from ``checkpoint_dir``.
+    """Run ``opts`` (``PipelineOptions`` or a config's ``pipeline``
+    section) over all currently-available input (Trigger.AvailableNow),
+    resumable from ``checkpoint_dir``; every micro-batch goes through
+    the batch run's ``apply_pipeline`` and ``write_pipeline_output``.
 
     Returns the ledger; per-sink tables land under
     ``out/routed/batch_id=*/route=*/`` (partition-pruned reads via
     read_routed_stream_output).
     """
-    from log_formatter_spark.operators.route import DEFAULT_ROUTES
-
-    ledger = MetricsLedger(
-        spark, DEFAULT_ROUTES, os.path.join(out_dir, "ledger")
-    )
+    pipe = opts.section() if isinstance(opts, PipelineOptions) else opts
+    ledger = MetricsLedger(spark, DEFAULT_ROUTES, os.path.join(out_dir, "ledger"))
     stream = stream_transcripts(spark, src_dir, max_files_per_trigger)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        routed = parsed_enriched_routed(spark, batch_df, opts).persist()
-        try:
-            # 1. multi-sink fan-out: ONE partitioned write, per-sink dirs
-            (
-                routed.write.mode("overwrite")
-                .partitionBy(ROUTE)
-                .parquet(os.path.join(_routed_dir(out_dir), f"batch_id={batch_id}"))
-            )
-            # 2. partial per-sink aggregates for this batch
-            (
-                sink_aggregates(routed)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(_agg_dir(out_dir), f"batch_id={batch_id}"))
-            )
-            # 3. metrics: one grouped count pass over the cached batch
-            route_counts = {
-                f"routed_{r[ROUTE]}": r["n"]
-                for r in routed.groupBy(ROUTE).agg(F.count(F.lit(1)).alias("n")).collect()
-            }
-            ok = sum(
-                r["n"]
-                for r in routed.groupBy(PARSE_OK).agg(F.count(F.lit(1)).alias("n")).collect()
-                if r[PARSE_OK]
-            )
-            total = sum(route_counts.values())
-            ledger.record_batch(
-                batch_id,
-                {
-                    "rows_in": total,
-                    "rows_parsed": ok,
-                    "rows_discarded": total - ok,
-                    **route_counts,
-                },
-            )
-        finally:
-            routed.unpersist()
+        committed = write_pipeline_output(
+            apply_pipeline(batch_df, pipe),
+            os.path.join(out_dir, "routed", f"batch_id={batch_id}"),
+            os.path.join(out_dir, "agg", f"batch_id={batch_id}"),
+        )
+        # metrics: one grouped count pass over the committed rows
+        counts, ok = Counter(), 0
+        for r in committed.groupBy(ROUTE, PARSE_OK).count().collect():
+            counts[f"routed_{r[ROUTE]}"] += r["count"]
+            ok += r["count"] if r[PARSE_OK] else 0
+        total = sum(counts.values())
+        ledger.record_batch(
+            batch_id,
+            {"rows_in": total, "rows_parsed": ok, "rows_discarded": total - ok, **counts},
+        )
 
     q = (
         stream.writeStream.foreachBatch(write_batch)
@@ -177,16 +148,12 @@ def run_streaming_pipeline(
 def read_routed_stream_output(
     spark: SparkSession, out_dir: str, route: str | None = None
 ) -> DataFrame:
-    base = _routed_dir(out_dir)
-    df = spark.read.option("basePath", base).parquet(base)
-    if route is not None:
-        df = df.where(df[ROUTE] == route)
-    return df
+    return read_sink(spark, os.path.join(out_dir, "routed"), route, fmt="parquet")
 
 
 def read_final_aggregates(spark: SparkSession, out_dir: str) -> DataFrame:
     """Exactly-once final counts: sum of per-batch partial aggregates."""
-    base = _agg_dir(out_dir)
+    base = os.path.join(out_dir, "agg")
     df = spark.read.option("basePath", base).parquet(base)
     return df.groupBy(ROUTE, "role", "tool", "hour").agg(F.sum("n").alias("n"))
 

@@ -2,13 +2,15 @@
 garbage) input strings, both parse engines must agree exactly with the
 pure-Python oracle's reference semantics (search-anywhere, all-named-
 groups extraction, `_`-discard, non-participating group → \"\", no
-match → discard flag)."""
+match → discard flag) in the reference's regex dialect, Go RE2: ``.``
+stops only at ``\\n``, and ``\\d \\w \\s`` are ASCII classes."""
 
 from __future__ import annotations
 
 from datetime import datetime, timezone
 
-from hypothesis import HealthCheck, given, settings
+import pytest
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from log_formatter_spark.operators.parser import ParserConfig, apply_parser
@@ -17,6 +19,8 @@ from log_formatter_spark.transcripts import TRANSCRIPT_PATTERN
 
 _LEVELS = ["INFO", "WARN", "ERROR", "DEBUG", ""]
 _TOOLS = ["bash", "read", "", "grep"]
+# characters some regex engines treat as line terminators for ``.``
+_TERMINATORS = "\r\u0085\u2028\u2029"
 
 
 @st.composite
@@ -27,7 +31,7 @@ def log_lines(draw):
     t = datetime.fromtimestamp(ts, tz=timezone.utc).strftime("%Y-%m-%d %H:%M:%S")
     level = draw(st.sampled_from(_LEVELS))
     tool = draw(st.sampled_from(_TOOLS))
-    body = draw(st.text(alphabet="abc xyz=[]()0 9", min_size=0, max_size=30))
+    body = draw(st.text(alphabet="abc xyz=[]()0 9é" + _TERMINATORS, min_size=0, max_size=30))
     turn = draw(st.integers(0, 999))
     if kind == 0:  # canonical
         return f"{t} {level or 'INFO'} [{tool}] {body} turn={turn}"
@@ -62,6 +66,7 @@ def test_null_text_is_parse_failure_in_every_engine(spark):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(st.lists(log_lines(), min_size=1, max_size=40))
+@example([f"2024-01-02 03:04:05 INFO [bash] a{c}b turn=1" for c in _TERMINATORS])
 def test_engines_match_python_oracle(spark, lines):
     df = spark.createDataFrame([(i, s) for i, s in enumerate(lines)], "i long, text string")
     want = []
@@ -80,3 +85,29 @@ def test_engines_match_python_oracle(spark, lines):
             for r in out.orderBy("i").collect()
         ]
         assert got == want, f"engine={engine} diverged from oracle"
+
+
+@pytest.mark.parametrize(
+    "text",
+    [
+        "2024-01-02 03:04:05 INFO [outil_é] body turn=1",  # non-ASCII \w
+        "2024-01-02 03:04:05 INFO [bash] body turn=\u0663\u0664",  # Arabic-Indic \d
+        "2024-01-02 03:04:05 INFO [bash] body turn=12",
+    ],
+)
+def test_unicode_classes_are_ascii_in_every_engine(spark, text):
+    """RE2 (the arrow engine, the DuckDB twins, the reference) and Java
+    match \\w and \\d against ASCII only; the oracle and the pandas
+    fallback, both Python ``re``, must too."""
+    want = parse_doc({"text": text}, TRANSCRIPT_PATTERN)
+    want = None if want is None else want["tool_tag"]
+    df = spark.createDataFrame([(text,)], "text string")
+    # a lookahead RE2 rejects sends the arrow engine to the pandas fallback
+    configs = [
+        ParserConfig(TRANSCRIPT_PATTERN, engine="arrow"),
+        ParserConfig(TRANSCRIPT_PATTERN, engine="jvm"),
+        ParserConfig(TRANSCRIPT_PATTERN + "(?=)", engine="arrow"),
+    ]
+    for cfg in configs:
+        r = apply_parser(df, cfg).first()
+        assert (r["parse_ok"], r["tool_tag"]) == (want is not None, want), cfg

@@ -82,7 +82,7 @@ def test_parallelism_invariance(spark, transcripts):
         map(
             str,
             full_pipeline(
-                spark, transcripts, PipelineOptions(repartition=16, n_salts=8)
+                spark, transcripts, PipelineOptions(repartition=16)
             ).collect(),
         )
     )
