@@ -1,9 +1,10 @@
 """Enrichment lookup tables (broadcast-join side).
 
 The north rule requires "broadcast-join enrichment keyed on role and
-tool". These are the canonical small dims (FIXTURES.md §2) with both a
-Spark constructor and the DuckDB VALUES rendering so enrich queries are
-oracle-checkable.
+tool". These are the canonical small dims (FIXTURES.md §2), rendered
+once as SQL VALUES: Spark reads them as inline tables (a JVM local
+relation, no Python worker) and the DuckDB oracle reads the same
+strings, so enrich queries are oracle-checkable.
 """
 
 from __future__ import annotations
@@ -26,23 +27,6 @@ TOOL_ROWS = [
     ("", "none", False),
 ]
 
-
-def _one_slice(spark: SparkSession, rows, schema: str) -> DataFrame:
-    # single-slice parallelize: createDataFrame spreads driver rows over
-    # default parallelism (32 near-empty python partitions), and every
-    # consumer of the broadcast build then pays a Python-worker
-    # round-trip per partition; one slice = one round-trip
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-
-
-def role_lookup(spark: SparkSession) -> DataFrame:
-    return _one_slice(spark, ROLE_ROWS, "role string, role_class string, priority int")
-
-
-def tool_lookup(spark: SparkSession) -> DataFrame:
-    return _one_slice(spark, TOOL_ROWS, "tool string, tool_kind string, is_sideeffect boolean")
-
-
 ROLE_LOOKUP_SQL = (
     "(VALUES " + ", ".join(f"('{r}', '{c}', {p})" for r, c, p in ROLE_ROWS)
     + ") AS role_lookup(role, role_class, priority)"
@@ -52,3 +36,11 @@ TOOL_LOOKUP_SQL = (
     "(VALUES " + ", ".join(f"('{t}', '{k}', {str(s).upper()})" for t, k, s in TOOL_ROWS)
     + ") AS tool_lookup(tool, tool_kind, is_sideeffect)"
 )
+
+
+def role_lookup(spark: SparkSession) -> DataFrame:
+    return spark.sql(f"SELECT * FROM {ROLE_LOOKUP_SQL}")
+
+
+def tool_lookup(spark: SparkSession) -> DataFrame:
+    return spark.sql(f"SELECT * FROM {TOOL_LOOKUP_SQL}")

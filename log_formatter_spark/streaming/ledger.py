@@ -15,9 +15,10 @@ heartbeats (agent/manager.go:166-208) with:
 
 from __future__ import annotations
 
+import glob
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -38,13 +39,15 @@ class MetricsLedger:
 
     def _recover(self) -> dict[str, int]:
         """Resume lineage: seed cumulative counters from the last committed
-        batch of an existing ledger (checkpoint-restart continuity)."""
-        if not os.path.isdir(self.ledger_dir):
+        batch of an existing ledger (checkpoint-restart continuity).
+        Every batch records every accumulator, so the newest committed
+        partition alone holds all cumulatives; restart cost does not grow
+        with the ledger's history."""
+        parts = glob.glob(os.path.join(self.ledger_dir, "batch_id=*", "*.parquet"))
+        if not parts:
             return {}
-        led = read_ledger(self.spark, self.ledger_dir)
-        w = Window.partitionBy("metric").orderBy(F.col("batch_id").desc())
-        last = led.withColumn("_rk", F.row_number().over(w)).where(F.col("_rk") == 1)
-        return {r["metric"]: int(r["cumulative"]) for r in last.collect()}
+        last = max({os.path.dirname(p) for p in parts}, key=lambda d: int(d.rsplit("=", 1)[1]))
+        return {r["metric"]: int(r["cumulative"]) for r in self.spark.read.parquet(last).collect()}
 
     def _read_batch_values(self, batch_id: int) -> dict[str, int]:
         """Previously recorded batch_values for one batch (empty if the
@@ -75,21 +78,15 @@ class MetricsLedger:
             if name not in self.acc:
                 self.acc[name] = self.spark.sparkContext.accumulator(0)
             self.acc[name].add(int(v))
+        # column literals, not a SQL string (route names can hold quotes);
+        # the cast names the columns and keeps them nullable (optional in
+        # the parquet schema)
         rows = [
-            (name, int(counts.get(name, 0)), int(self.acc[name].value))
+            F.struct(F.lit(name), F.lit(int(counts.get(name, 0))), F.lit(int(self.acc[name].value)))
             for name in sorted(self.acc)
         ]
-        # ONE explicit slice, not createDataFrame + coalesce(1):
-        # createDataFrame parallelizes driver rows across default
-        # parallelism (32 mostly-empty partitions), and a coalesce(1)
-        # task then round-trips a Python worker per parent partition
-        # SEQUENTIALLY — measured ~6 s per ledger write (32 × ~0.2 s)
-        # vs ~0.4 s for a single-slice parallelize. This was the real
-        # cost behind the streaming contract query's 20 s gate time.
-        df = self.spark.createDataFrame(
-            self.spark.sparkContext.parallelize(rows, 1),
-            "metric string, batch_value long, cumulative long",
-        )
+        schema = "array<struct<metric string, batch_value bigint, cumulative bigint>>"
+        df = self.spark.range(1, numPartitions=1).select(F.inline(F.array(*rows).cast(schema)))
         path = os.path.join(self.ledger_dir, f"batch_id={batch_id}")
         df.write.mode("overwrite").parquet(path)
 

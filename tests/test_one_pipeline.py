@@ -14,8 +14,9 @@ from pyspark.sql import functions as F
 
 import log_formatter_spark
 from log_formatter_spark.__main__ import main
+from log_formatter_spark.lookups import ROLE_ROWS, TOOL_ROWS, role_lookup, tool_lookup
 from log_formatter_spark.operators.route import DEFAULT_ROUTES
-from log_formatter_spark.pipeline import PipelineOptions
+from log_formatter_spark.pipeline import PipelineOptions, parsed_enriched_routed
 from log_formatter_spark.plans import run_batch
 from log_formatter_spark.sinks import read_sink
 from log_formatter_spark.streaming import (
@@ -24,6 +25,7 @@ from log_formatter_spark.streaming import (
     read_routed_stream_output,
     run_streaming_pipeline,
 )
+from log_formatter_spark.streaming.ledger import MetricsLedger
 from log_formatter_spark.transcripts import TRANSCRIPT_PATTERN, transcripts_from_events
 
 
@@ -127,3 +129,43 @@ def test_empty_input_through_the_shared_writer(spark, src, tmp_path):
     )
     assert read_ledger(spark, str(tmp_path / "stream" / "ledger")).count() > 0
     assert ledger.snapshot()["rows_in"] == 0
+
+
+def _nodes(plan):
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _nodes(kids.apply(i))
+
+
+def test_jvm_pipeline_runs_no_python(spark, src, tmp_path):
+    """The jvm engine needs no Python worker: the enrich lookups are
+    local relations broadcast straight from the driver, and the ledger
+    rows are column literals."""
+    df = parsed_enriched_routed(spark, spark.read.parquet(src), PipelineOptions(engine="jvm"))
+    plan = df._jdf.queryExecution().executedPlan()
+    assert "ExistingRDD" not in plan.toString()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    joins = [n for n in _nodes(plan) if n.nodeName() == "BroadcastHashJoin"]
+    assert len(joins) == 2
+    for join in joins:
+        build = [n.nodeName() for n in _nodes(join.right())]
+        assert build == ["BroadcastExchange", "LocalTableScan"]
+
+    roles, tools = role_lookup(spark), tool_lookup(spark)
+    assert [tuple(r) for r in roles.collect()] == ROLE_ROWS
+    assert [tuple(r) for r in tools.collect()] == TOOL_ROWS
+    assert roles.schema.simpleString() == "struct<role:string,role_class:string,priority:int>"
+    assert tools.schema.simpleString() == "struct<tool:string,tool_kind:string,is_sideeffect:boolean>"
+
+    # a route name with a quote, and a count past 32 bits
+    MetricsLedger(spark, ["it's"], str(tmp_path / "ledger")).record_batch(0, {"rows_in": 2**40})
+    part = spark.read.parquet(str(tmp_path / "ledger" / "batch_id=0"))
+    assert part.schema.simpleString() == "struct<metric:string,batch_value:bigint,cumulative:bigint>"
+    assert sorted(tuple(r) for r in part.collect()) == [
+        ("routed_it's", 0, 0),
+        ("rows_discarded", 0, 0),
+        ("rows_in", 2**40, 2**40),
+        ("rows_parsed", 0, 0),
+    ]

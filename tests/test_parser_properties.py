@@ -23,15 +23,23 @@ _TOOLS = ["bash", "read", "", "grep"]
 _TERMINATORS = "\r\u0085\u2028\u2029"
 
 
+def _long(body: str) -> str:
+    """``body`` repeated into a ≥2 KB tool-output body."""
+    return (body + " é0") * (2048 // (len(body) + 3) + 1)
+
+
 @st.composite
 def log_lines(draw):
-    """Mostly-well-formed lines with adversarial mutations mixed in."""
-    kind = draw(st.integers(0, 4))
+    """Mostly-well-formed lines with adversarial mutations mixed in:
+    NULL and empty text, and ≥2 KB tool-output bodies."""
+    kind = draw(st.integers(0, 6))
     ts = draw(st.integers(0, 10**9))
     t = datetime.fromtimestamp(ts, tz=timezone.utc).strftime("%Y-%m-%d %H:%M:%S")
     level = draw(st.sampled_from(_LEVELS))
     tool = draw(st.sampled_from(_TOOLS))
     body = draw(st.text(alphabet="abc xyz=[]()0 9é" + _TERMINATORS, min_size=0, max_size=30))
+    if draw(st.booleans()):  # long tool output
+        body = _long(body)
     turn = draw(st.integers(0, 999))
     if kind == 0:  # canonical
         return f"{t} {level or 'INFO'} [{tool}] {body} turn={turn}"
@@ -41,6 +49,10 @@ def log_lines(draw):
         return f"noise {t} {level or 'WARN'} [{tool}] {body} turn={turn}"
     if kind == 3:  # missing turn suffix
         return f"{t} {level or 'INFO'} [{tool}] {body}"
+    if kind == 5:  # NULL text
+        return None
+    if kind == 6:  # empty text
+        return ""
     return draw(st.text(max_size=60))  # arbitrary garbage
 
 
@@ -67,6 +79,7 @@ def test_null_text_is_parse_failure_in_every_engine(spark):
 )
 @given(st.lists(log_lines(), min_size=1, max_size=40))
 @example([f"2024-01-02 03:04:05 INFO [bash] a{c}b turn=1" for c in _TERMINATORS])
+@example([None, "", f"2024-01-02 03:04:05 INFO [bash] {_long('a' + _TERMINATORS)} turn=1"])
 def test_engines_match_python_oracle(spark, lines):
     df = spark.createDataFrame([(i, s) for i, s in enumerate(lines)], "i long, text string")
     want = []

@@ -132,6 +132,22 @@ def test_ledger_replay_does_not_double_count(spark, sf_dir, tmp_path):
     assert after == before
 
 
+def test_ledger_recovers_a_metric_first_seen_in_a_later_batch(spark, tmp_path):
+    """Recovery reads only the newest partition; every batch records
+    every accumulator, so a metric that appeared after batch 0 and a
+    metric absent from the newest batch's counts both come back."""
+    from log_formatter_spark.streaming.ledger import MetricsLedger
+
+    led = str(tmp_path / "ledger")
+    ledger = MetricsLedger(spark, ["a"], led)
+    ledger.record_batch(0, {"rows_in": 3, "routed_a": 3})
+    ledger.record_batch(1, {"rows_in": 2, "routed_b": 2})
+    ledger.record_batch(2, {"rows_in": 1})
+    want = {"rows_in": 6, "rows_parsed": 0, "rows_discarded": 0, "routed_a": 3, "routed_b": 2}
+    assert ledger.snapshot() == want
+    assert MetricsLedger(spark, ["a"], led).snapshot() == want
+
+
 def test_watermarked_hourly_counts(spark, sf_dir, tmp_path):
     src = str(tmp_path / "in")
     t = transcripts_from_events(spark, sf_dir)
