@@ -40,23 +40,15 @@ HEADLINE = [
     "corpus_filter",
     "similarity_topk",
     "similarity_lsh",
-    # round 2: the all-pairs dedup_embedding crossJoin (12.7 s at sf0.1,
-    # O(n^2) at scale) is replaced by the banded-LSH bucket-join plan
-    "dedup_embedding_lsh",
     # round 2b: as-of join, winnowing, IVF ANN, relational OLAP trio
     "asof_last_click",
     "attribution_window",
     "doc_winnow",
     "similarity_ivf",
     "similarity_ivf_trained",
-    "dedup_embedding_lsh_prod",
     "pricing_summary",
     "segment_top_orders",
     "regional_revenue",
-    # round 3: lexical retrieval + RRF hybrid fusion
-    "bm25_topk",
-    "hybrid_rrf",
-    "hybrid_rrf_ivf",
     # round 3c: conversation-level curation + corpus hygiene
     "conv_dedup",
     "conv_qa",
@@ -78,11 +70,9 @@ HEADLINE = [
     "dsir_contrast",
     "validate_events",
     "quality_deciles",
-    # round 4: exact-substring spans, trained classifier, ANN-dense hybrid
+    # round 4: exact-substring spans, trained classifier
     "exact_substring_spans",
     "span_dup_fraction",
-    "semdedup",
-    "semdedup_prod",
     "source_overlap",
     "embedding_outliers",
     "source_drift",
@@ -92,7 +82,6 @@ HEADLINE = [
     # edit-distance-verified near-dup
     "preference_pairs",
     "neardup_edit",
-    "semantic_decontaminate",
     "bloom_membership",
     "dup_families",
     "strip_boilerplate",
@@ -119,11 +108,9 @@ HEADLINE = [
     "compact_regenerations",
     "mixture_temperature",
     "hll_distinct_users",
-    # round 5 session 2: PPS Poisson sampling + snapshot diff + MMR
+    # round 5 session 2: PPS Poisson sampling + snapshot diff
     "weighted_sample",
     "dataset_diff",
-    "mmr_select",
-    "mmr_select_prod",
     # round 5 session 3: n-gram novelty + crawl-fragment stitching
     "ngram_novelty",
     "stitch_fragments",
@@ -133,16 +120,13 @@ HEADLINE = [
     # round 5 session 5: triplet assembly + length-bucketed padding report
     "contrastive_triplets",
     "length_buckets",
-    # round 5 session 6: SQ8 compressed index, containment, kappa audit,
-    # water-filling budget allocation, per-source quality calibration
-    "sq_codes",
-    "sq_topk",
+    # round 5 session 6: containment, kappa audit, water-filling budget
+    # allocation, per-source quality calibration
     "containment_pairs",
     "rater_agreement",
     "token_budget_fill",
     "quality_calibration",
     "containment_probe",
-    "sq_topk_ivf",
     # round 5 session 7: leakage-safe cluster split + shared-prefix depth
     "cluster_split",
     "prefix_share",
@@ -157,35 +141,6 @@ def _materialize(df) -> int:
     return -1
 
 
-def _embedding_lsh_auto(spark, sf_dir):
-    # production configuration: bucket bits auto-sized to the corpus
-    # (bits ∝ log2 n keeps verify work linear — BENCH.md §5a measured
-    # 97.5 s fixed-bits vs 10.7 s auto at 10×). The CONTRACT query pins
-    # n_bits because its DuckDB oracle is a static SQL string; the bench
-    # measures the operator as it would ship.
-    from log_formatter_spark.operators import dedup
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return dedup.embedding_dup_pairs_lsh(emb, min_cos=contract.EMBED_MIN_COS)
-
-
-def _sem_decon_auto(spark, sf_dir):
-    # production configuration: bucket bits auto-sized (the same §5a law
-    # as dedup_embedding_lsh — the pinned-3-bit CONTRACT config measured
-    # 552 s at 100× where auto stays linear; the pin exists only because
-    # the DuckDB oracle is a static SQL string)
-    from pyspark.sql import functions as F
-
-    from log_formatter_spark.operators import corpus
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return corpus.semantic_decontaminate(
-        emb,
-        eval_pred=F.col("vec_id") % contract.DECONTAM_EVAL_MOD == 0,
-        min_cos=contract.SEM_DECON_MIN_COS,
-    )
-
-
 def _ivf_trained(spark, sf_dir):
     # production ANN configuration (non-oracled knobs): k-means-trained
     # centroids auto-sized to ~sqrt(n), Arrow/numpy rerank kernel
@@ -197,17 +152,6 @@ def _ivf_trained(spark, sf_dir):
     )
 
 
-def _embedding_lsh_prod(spark, sf_dir):
-    # production near-dup configuration: auto-sized bucket bits AND the
-    # vectorized verify kernel (the interpreted fold is the oracle path)
-    from log_formatter_spark.operators import dedup
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return dedup.embedding_dup_pairs_lsh(
-        emb, min_cos=contract.EMBED_MIN_COS, verify="grouped"
-    )
-
-
 def _pq_trained(spark, sf_dir):
     # production PQ configuration (non-oracled knob): per-sub-space
     # k-means codebooks instead of the deterministic anchor slices
@@ -215,18 +159,6 @@ def _pq_trained(spark, sf_dir):
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return similarity.pq_topk(emb, k=10, codebooks="trained")
-
-
-def _hybrid_rrf_ivf(spark, sf_dir):
-    # production hybrid configuration (VERDICT r3 #3): the dense list
-    # comes from the IVF ANN index instead of the exact all-pairs
-    # scorer — the shape that survives 10^12 vectors. The CONTRACT
-    # query keeps dense="brute" (the only DuckDB-renderable dense list).
-    from log_formatter_spark.operators import retrieval
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return retrieval.rrf_hybrid(docs, emb, k=20, depth=50, dense="ivf")
 
 
 def _exact_spans_raw(spark, sf_dir):
@@ -269,19 +201,6 @@ def _pq_k16_kernel(spark, sf_dir):
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return similarity.pq_topk(emb, k=10, n_centroids=16, codebooks="trained")
-
-
-def _semdedup_auto(spark, sf_dir):
-    # auto-sized cluster count (k ~ sqrt(n) keeps per-cell O(|cell|^2)
-    # work linear in n), anchor centroids + the oracle's fold kernel.
-    # The CONTRACT query pins n_clusters=8 because its DuckDB oracle is
-    # a static SQL string — at 100x a pinned k makes cells O(n/8), a
-    # fixture artifact exactly like dedup_embedding's all-pairs oracle;
-    # the bench measures the operator as it would ship.
-    from log_formatter_spark.operators import dedup
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return dedup.semdedup(emb, n_clusters=None, min_cos=contract.SEMDEDUP_MIN_COS)
 
 
 _BAND_INDEX_MEMO: dict = {}
@@ -346,67 +265,14 @@ def _outliers_auto(spark, sf_dir):
     return similarity.embedding_outliers(emb, n_clusters=None)
 
 
-def _semdedup_prod(spark, sf_dir):
-    # production SemDeDup configuration (non-oracled knobs): k-means
-    # trained centroids auto-sized to ~sqrt(n) and the per-cell gram
-    # matmul grouped verify — the config that keeps cells executor-sized
-    # and crosses each cell to Python exactly once at real occupancies
-    from log_formatter_spark.operators import dedup
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return dedup.semdedup(
-        emb,
-        n_clusters=None,
-        min_cos=contract.SEMDEDUP_MIN_COS,
-        centroids="trained",
-        verify="grouped",
-    )
-
-
-def _mmr_prod(spark, sf_dir):
-    # production MMR: the O(corpus) pool-relevance scan runs on the
-    # Arrow/numpy einsum kernel instead of the interpreted fold (the
-    # dot_kernel swap every ANN operator exposes); the greedy rerank is
-    # pool-sized either way. The CONTRACT query keeps scorer="fold"
-    # (the only bit-exact-oracle kernel).
-    from log_formatter_spark.operators import retrieval
-
-    return retrieval.mmr_select(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"), scorer="vectorized"
-    )
-
-
-def _sq_topk_ivf(spark, sf_dir):
-    # composed production ANN: IVF cell candidate formation (equi-join,
-    # auto-sized trained centroids) scored on the SQ8 codes — per-query
-    # work n_probe/k of the corpus AND no float vector at scan time.
-    # The CONTRACT query keeps candidates="all" (the oracle-exact scan).
-    from log_formatter_spark.operators import similarity
-
-    return similarity.sq_topk(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
-        candidates="ivf",
-        n_centroids=None,
-        centroids="trained",
-    )
-
-
 BENCH_OVERRIDES = {
-    "sq_topk_ivf": _sq_topk_ivf,
-    "dedup_embedding_lsh": _embedding_lsh_auto,
-    "semantic_decontaminate": _sem_decon_auto,
-    "semdedup": _semdedup_auto,
-    "semdedup_prod": _semdedup_prod,
     "embedding_outliers": _outliers_auto,
     "neardup_indexed": _neardup_probe_indexed,
     "conv_neardup": _conv_neardup_raw,
     "conv_curation": _conv_curation_raw,
     "similarity_ivf_trained": _ivf_trained,
-    "dedup_embedding_lsh_prod": _embedding_lsh_prod,
     "pq_topk_trained": _pq_trained,
     "pq_topk_k16": _pq_k16_kernel,
-    "hybrid_rrf_ivf": _hybrid_rrf_ivf,
-    "mmr_select_prod": _mmr_prod,
     "classifier_margin_trained": _classifier_trained,
     "exact_substring_spans": _exact_spans_raw,
     "span_dup_fraction": _span_dup_raw,

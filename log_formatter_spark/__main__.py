@@ -1,17 +1,16 @@
 """CLI entry point — the rebuild of ``go run agent.go -c config.yml``
 (reference agent.go:44-75).
 
-    python -m log_formatter_spark -c pipeline.yml [--streaming] \
-        [--out DIR] [--checkpoint DIR]
+    python -m log_formatter_spark -c pipeline.yml [--streaming --checkpoint DIR]
     python -m log_formatter_spark --query NAME --sf-dir DIR [--out DIR]
     python -m log_formatter_spark --list-queries
 
 Batch mode plans and drives the configured input→formatters→output DAG
 (plans/planner.py). Streaming mode runs the config's ``pipeline``
 section as a checkpoint-resumable foreachBatch job over the configured
-source directory, writing under ``--out`` — the
-graceful-stop + resume answer to the reference's drain-with-timeout
-shutdown (agent/manager.go:81-88). ``--query`` runs any named catalog
+source directory, writing under the config's ``output.path`` (parquet
+target only) — the graceful-stop + resume answer to the reference's
+drain-with-timeout shutdown (agent/manager.go:81-88). ``--query`` runs any named catalog
 operator (contract.queries()) over an sf-style parquet dir — every
 operator in SURVEY §8 is reachable from the CLI, written to parquet
 with ``--out`` or shown on the console otherwise. Designed to be
@@ -29,7 +28,7 @@ def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="log_formatter_spark")
     ap.add_argument("-c", "--config", help="YAML pipeline spec")
     ap.add_argument("--streaming", action="store_true")
-    ap.add_argument("--out", help="output dir (streaming / --query mode)")
+    ap.add_argument("--out", help="output dir (--query mode)")
     ap.add_argument("--checkpoint", help="checkpoint dir (streaming mode)")
     ap.add_argument("--cores", type=int, default=None)
     ap.add_argument("--query", help="run a named catalog query instead of a config")
@@ -64,11 +63,25 @@ def main(argv: list[str] | None = None) -> int:
         ap.error("one of -c/--config, --query or --list-queries is required")
 
     cfg = load_config(args.config)
+    if args.streaming:
+        # the stream writes routed rows, aggregates and the ledger under
+        # one directory: only output.path can be honoured, so every other
+        # output setting is refused rather than ignored
+        if args.out:
+            ap.error("--streaming writes to output.path; --out is for --query")
+        if not args.checkpoint:
+            ap.error("--streaming requires --checkpoint")
+        out = cfg["output"] or {}
+        if out.get("target") != "parquet":
+            ap.error(f"streaming requires output.target parquet, got {out.get('target')!r}")
+        extra = sorted(set(out) - {"target", "path"})
+        if extra:
+            ap.error(f"streaming cannot honour output key(s) {extra}")
+        if not out.get("path"):
+            ap.error("streaming requires output.path")
     spark = get_spark("log-formatter-spark", cores=args.cores)
     try:
         if args.streaming:
-            if not (args.out and args.checkpoint):
-                ap.error("--streaming requires --out and --checkpoint")
             from log_formatter_spark.streaming import TRANSCRIPT_SCHEMA, run_streaming_pipeline
 
             # streaming mode requires a transcript-parquet source: fail
@@ -93,7 +106,7 @@ def main(argv: list[str] | None = None) -> int:
                     f"missing columns {sorted(missing)}"
                 )
             ledger = run_streaming_pipeline(
-                spark, src, args.out, args.checkpoint, cfg["pipeline"] or {},
+                spark, src, cfg["output"]["path"], args.checkpoint, cfg["pipeline"] or {},
                 max_files_per_trigger=inp.get("max_files_per_trigger"),
             )
             print(ledger.snapshot())

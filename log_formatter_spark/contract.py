@@ -42,14 +42,12 @@ from log_formatter_spark.operators import (
     layout,
     olap,
     packing,
-    retrieval,
     sessions,
     similarity,
     validate,
 )
 from log_formatter_spark.sources import kafka_fixture
 from log_formatter_spark.operators.filter import apply_filter
-from log_formatter_spark.operators.similarity import auto_bits, auto_centroids
 from log_formatter_spark.operators.labels import stamp_labels
 from log_formatter_spark.operators.ordering import with_turn_order
 from log_formatter_spark.operators.parser import ParserConfig, apply_parser
@@ -92,15 +90,6 @@ NGRAM_MIN_JACCARD = 0.05
 # inverted-index self-join (at sf0.01's 500 docs nothing trips it; it is
 # exercised by the adversarial corpus in tests/test_dedup_blocked.py)
 NGRAM_MAX_DF = 200
-# production near-dup would sit at ~0.95; the driver's synthetic
-# embeddings top out at cos≈0.51 (random-ish cluster structure), so the
-# demo threshold is set where the result set is non-trivial
-EMBED_MIN_COS = 0.4
-# SemDeDup within-cluster threshold: lower than the pair-demo threshold
-# because candidate pairs are cluster-bounded (8 Voronoi cells on the
-# same weak-cosine corpus: 174/500 dup rows at sf0.001 — both branches
-# of the is_dup flag well exercised at every sf)
-SEMDEDUP_MIN_COS = 0.3
 # conversation template-prefix dedup: key on the first k turns
 # (150 convs -> 57 prefix groups at sf0.01; 15 -> 14 at sf0.001)
 CONV_DEDUP_PREFIX = 2
@@ -114,39 +103,12 @@ DECONTAM_EVAL_MOD = 23
 # at distance 4-12, so 6 exercises both the keep and reject branches
 # (24 kept / 4 rejected at sf0.001; 24 / 1 at sf0.01)
 EDIT_MAX_DIST = 6
-# semantic decontamination threshold: the synthetic embeddings' weak
-# cluster structure tops out near cos 0.5 (the EMBED_MIN_COS note), so
-# 0.3 yields a non-trivial flag set (56/500 train vectors at sf0.01 vs
-# 3/500 at 0.4); production would sit near 0.9
-SEM_DECON_MIN_COS = 0.3
 # bloom filter sized so the fixture exercises ALL THREE outcome classes
 # at the driver's sf0.01 (m=2048/k=3 over ~400 corpus keys: 50 true
 # hits, 3 false positives, 47 true negatives); production m scales with
 # the corpus key count (bits/key ~ 14 for 1e-4 FP), still broadcastable
 BLOOM_M_BITS = 2048
 BLOOM_K = 3
-
-# --- auto-sized-config gate corpus (VERDICT r4 "what's wrong" #1) ----------
-# The LSH-family contract rows pin n_bits/n_clusters because each DuckDB
-# oracle is a static SQL string, but the SHIPPING defaults auto-size to
-# the corpus (auto_bits / auto_centroids) — and at the driver's sf0.01
-# (500 embeddings) the auto formulas CLAMP to the same small values, so
-# no hash-exact row ever graded a grown bucket code. The *_auto rows fix
-# that: both engines deterministically expand the embeddings table
-# 10× (replica r gets vec_id + r·STRIDE and a per-replica SIGN-FLIP of
-# every 3rd element — sign flips are exact in IEEE float, so both
-# engines build the bit-identical corpus, and within-replica pairwise
-# dots equal the base corpus' exactly), growing n to 5 000 where
-# auto_bits(n)=7 (> the pinned 3) and auto_centroids(n)=71 (> the
-# pinned 8). The Spark side runs the TRUE auto path (n_bits=None /
-# n_clusters=None → count + auto sizing on the expanded frame); the SQL
-# renders the same formulas' values as static knobs, and
-# tests/test_auto_config_contract.py pins formula ⇄ constant agreement
-# so testdata drift fails loudly.
-AUTO_EXP_REPLICAS = 10
-AUTO_EXP_STRIDE = 1_000_000
-SF001_EMB_N = 500  # sf0.01 embeddings row count, asserted in tests
-AUTO_EXP_N = AUTO_EXP_REPLICAS * SF001_EMB_N
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -159,57 +121,25 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
-def _emb_expanded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 10×-expanded embeddings corpus (see the AUTO_EXP_* note):
-    replica r shifts ids by r·STRIDE and sign-flips elements where
-    (i + r) % 3 == 0 (0-based i) — exact IEEE ops, bit-identical to the
-    DuckDB twin in ``_EXPANDED_EMB_CTE``."""
-    return (
-        _emb(spark, sf_dir)
-        .select(
-            "vec_id",
-            "embedding",
-            F.explode(
-                F.sequence(F.lit(0), F.lit(AUTO_EXP_REPLICAS - 1))
-            ).alias("r"),
-        )
-        .select(
-            (
-                F.col("vec_id") + F.col("r").cast("long") * F.lit(AUTO_EXP_STRIDE)
-            ).alias("vec_id"),
-            F.expr(
-                "transform(embedding, (x, i) -> "
-                "CASE WHEN (i + r) % 3 = 0 THEN -x ELSE x END)"
-            ).alias("embedding"),
-        )
-    )
-
-
-# DuckDB twin of _emb_expanded (list_transform's index is 1-BASED, so
-# (i - 1 + r) matches Spark's 0-based (i + r))
-_EXPANDED_EMB_CTE = f"""expanded AS (
-  SELECT e.vec_id + r.r * {AUTO_EXP_STRIDE} AS vec_id,
-         list_transform(e.embedding,
-                        (x, i) -> CASE WHEN (i - 1 + r.r) % 3 = 0
-                                       THEN -x ELSE x END) AS embedding
-  FROM embeddings e, range(0, {AUTO_EXP_REPLICAS}) r(r)
-)"""
-
-
 # --- transcript-pipeline oracle CTE chain ---------------------------------
 
 _P = TRANSCRIPT_PATTERN
-_EXTRACT = ",\n         ".join(
-    f"CASE WHEN regexp_matches(text, '{_P}') THEN regexp_extract(text, '{_P}', {i + 1}) END AS {g}"
-    for i, g in enumerate(["ts_str", "level", "tool_tag", "body"])
+# The DuckDB rendering of the parse layer over a ``text`` column:
+# ``parse_ok`` plus the four groups, NULL where the line does not match.
+# The transcript oracles below and the parser property test both use it.
+PARSE_SQL = ",\n         ".join(
+    [f"coalesce(regexp_matches(text, '{_P}'), FALSE) AS parse_ok"]
+    + [
+        f"CASE WHEN regexp_matches(text, '{_P}') THEN regexp_extract(text, '{_P}', {i + 1}) END AS {g}"
+        for i, g in enumerate(["ts_str", "level", "tool_tag", "body"])
+    ]
 )
 
 TRANSCRIPT_CTES = f"""
 WITH transcripts AS ({TRANSCRIPTS_SQL}),
 parsed AS (
   SELECT t.*,
-         coalesce(regexp_matches(text, '{_P}'), FALSE) AS parse_ok,
-         {_EXTRACT}
+         {PARSE_SQL}
   FROM transcripts t
 ),
 enriched AS (
@@ -1539,12 +1469,8 @@ _GATE_ORDER = [
     "tool_pagerank",
     "sink_agg_merge",
     "strip_repetition",
-    # round-5 additions: the auto-sized LSH-family configs (VERDICT r4
-    # "what's wrong" #1) — placed inside the window per the freeze rule,
-    # displacing three block-C refreshes
-    "dedup_embedding_lsh_auto",
-    "semdedup_auto",
-    "semantic_decontaminate_auto",
+    # round-5 additions (window-placed per the freeze rule, displacing
+    # block-C refreshes)
     "conv_curation",
     "streaming_tool_transitions",
     # round-5 late additions (window-placed per the freeze rule,
@@ -1558,7 +1484,6 @@ _GATE_ORDER = [
     # snapshot diff
     "weighted_sample",
     "dataset_diff",
-    "mmr_select",
     # round-5 session-3 additions (window-placed per the freeze rule,
     # displacing three more block-B refreshes): n-gram novelty (batch +
     # streaming twin) and crawl-fragment stitching
@@ -1578,12 +1503,9 @@ _GATE_ORDER = [
     "contrastive_triplets",
     "length_buckets",
     # round-5 session-6 additions (window-placed per the freeze rule,
-    # displacing five more block-B refreshes): the SQ8 compressed-index
-    # family, asymmetric containment, and the label-QA kappa audit
+    # displacing five more block-B refreshes): asymmetric containment
+    # and the label-QA kappa audit
     "rater_agreement",
-    "sq_codes",
-    "sq_topk",
-    "ann_recall_sq",
     "containment_pairs",
     "token_budget_fill",
     "quality_calibration",
@@ -1618,7 +1540,6 @@ _GATE_ORDER = [
     "corpus_filter",
     "similarity_topk",
     "similarity_lsh",
-    "dedup_embedding",
     "dedup_simhash_pairs",
     "dedup_simhash",
     "dedup_minhash_signatures",
@@ -1682,8 +1603,6 @@ _GATE_ORDER = [
     "parse_grok",
     "pq_codes",
     "pq_topk",
-    "bm25_topk",
-    "hybrid_rrf",
     "source_quota_sample",
     "quality_deciles",
     "hash_sample",
@@ -1703,14 +1622,12 @@ _GATE_ORDER = [
     "ann_recall_pq",
     "similarity_ivf",
     "dedup_clusters",
-    "dedup_embedding_lsh",
     "streaming_incremental_dedup",
     "streaming_attribution",
     "streaming_conv_keys",
     "classifier_train_step",
     "exact_substring_spans",
     "span_dup_fraction",
-    "semdedup",
     "source_overlap",
     "embedding_outliers",
     "source_drift",
@@ -1719,7 +1636,6 @@ _GATE_ORDER = [
     "conv_neardup",
     "preference_pairs",
     "neardup_edit",
-    "semantic_decontaminate",
     "bloom_membership",
     "dup_families",
     "strip_boilerplate",
@@ -2017,36 +1933,6 @@ def _catalog() -> dict[str, QueryFn]:
         "containment_pairs": lambda s, d: dedup.containment_pairs(
             _docs(s, d), n=3, min_containment=0.5, max_doc_freq=NGRAM_MAX_DF
         ),
-        "dedup_embedding": lambda s, d: dedup.embedding_dup_pairs(
-            _emb(s, d), min_cos=EMBED_MIN_COS
-        ),
-        # banded sign-LSH near-dup (the scale path; exact baseline above).
-        # n_bits pinned (not auto-sized) so the static SQL oracle renders
-        # the identical banding at any sf
-        "dedup_embedding_lsh": lambda s, d: dedup.embedding_dup_pairs_lsh(
-            _emb(s, d), min_cos=EMBED_MIN_COS, n_bits=dedup.EMBED_LSH_BITS
-        ),
-        # the AUTO-SIZED config on the 10×-expanded corpus: n_bits=None
-        # → the operator counts the frame and picks auto_bits(5000)=7 —
-        # a GROWN bucket code, the config class that ships at scale
-        # (VERDICT r4 "what's wrong" #1); the oracle renders the same
-        # formula's value as its static knob
-        "dedup_embedding_lsh_auto": lambda s, d: dedup.embedding_dup_pairs_lsh(
-            _emb_expanded(s, d), min_cos=EMBED_MIN_COS
-        ),
-        # SemDeDup: Voronoi-cluster the embedding space, prune near-dups
-        # within cells only (keep-lowest-id); anchors + fold kernel = the
-        # oracled config, trained centroids / grouped verify are the knobs
-        "semdedup": lambda s, d: dedup.semdedup(
-            _emb(s, d), n_clusters=8, min_cos=SEMDEDUP_MIN_COS
-        ),
-        # auto-sized cluster count on the expanded corpus:
-        # n_clusters=None → auto_centroids(5000)=71 (~sqrt(n), the
-        # shipping default; the pinned-8 row keeps grading the legacy
-        # static config)
-        "semdedup_auto": lambda s, d: dedup.semdedup(
-            _emb_expanded(s, d), n_clusters=None, min_cos=SEMDEDUP_MIN_COS
-        ),
         # cross-source containment audit over the banded MinHash pairs
         "source_overlap": lambda s, d: corpus.source_overlap(_docs(s, d)),
         # per-source unigram total-variation drift (exact-integer form)
@@ -2106,21 +1992,6 @@ def _catalog() -> dict[str, QueryFn]:
         "decontaminate": lambda s, d: corpus.decontaminate(
             _docs(s, d), eval_pred=F.col("doc_id") % DECONTAM_EVAL_MOD == 0
         ),
-        # n_bits pinned so the static SQL oracle renders the same anchors;
-        # the operator default is auto-sized (bench override = production)
-        "semantic_decontaminate": lambda s, d: corpus.semantic_decontaminate(
-            _emb(s, d),
-            eval_pred=F.col("vec_id") % DECONTAM_EVAL_MOD == 0,
-            min_cos=SEM_DECON_MIN_COS,
-            n_bits=dedup.EMBED_LSH_BITS,
-        ),
-        # auto-sized n_bits on the expanded corpus (n_bits=None →
-        # auto_bits(5000)=7, the grown-code config; see AUTO_EXP_* note)
-        "semantic_decontaminate_auto": lambda s, d: corpus.semantic_decontaminate(
-            _emb_expanded(s, d),
-            eval_pred=F.col("vec_id") % DECONTAM_EVAL_MOD == 0,
-            min_cos=SEM_DECON_MIN_COS,
-        ),
         "boilerplate_frac": lambda s, d: corpus.boilerplate_fraction(_docs(s, d)),
         # label QA: Cohen's kappa between the shipping quality rule and an
         # independent crude labeler, per source
@@ -2155,11 +2026,6 @@ def _catalog() -> dict[str, QueryFn]:
         "context_budget": lambda s, d: packing.context_budget(
             transcripts_from_events(s, d)
         ),
-        # lexical retrieval (sparse half of hybrid search) + RRF fusion
-        "bm25_topk": lambda s, d: retrieval.bm25_topk(_docs(s, d)),
-        "hybrid_rrf": lambda s, d: retrieval.rrf_hybrid(_docs(s, d), _emb(s, d)),
-        # MMR diverse top-k (greedy rerank over the retrieved pool)
-        "mmr_select": lambda s, d: retrieval.mmr_select(_emb(s, d)),
         # similarity search
         "similarity_topk": lambda s, d: similarity.brute_topk(_emb(s, d), k=10),
         # n_anchors pinned (not auto-sized) for the static SQL oracle
@@ -2180,13 +2046,9 @@ def _catalog() -> dict[str, QueryFn]:
         "ann_recall_ivf": lambda s, d: similarity.ann_recall(_emb(s, d), method="ivf"),
         "ann_recall_lsh": lambda s, d: similarity.ann_recall(_emb(s, d), method="lsh"),
         "ann_recall_pq": lambda s, d: similarity.ann_recall(_emb(s, d), method="pq"),
-        "ann_recall_sq": lambda s, d: similarity.ann_recall(_emb(s, d), method="sq"),
         # rank-aware index quality: NDCG@k vs the exact ranking (recall
         # is order-blind; this grades WHERE each true neighbor landed)
         "ann_ndcg_ivf": lambda s, d: similarity.ann_ndcg(_emb(s, d), method="ivf"),
-        # scalar (int8) quantization: the codebook-free compressed tier
-        "sq_codes": lambda s, d: similarity.sq_codes(_emb(s, d)),
-        "sq_topk": lambda s, d: similarity.sq_topk(_emb(s, d)),
         "label_centroids": lambda s, d: similarity.label_centroids(_emb(s, d)),
         # multimodal plumbing
         "multimodal_meta": lambda s, d: multimodal.media_metadata(_docs(s, d)),
@@ -2401,24 +2263,6 @@ def oracle_sql() -> dict[str, str]:
         "dedup_clusters": dedup.cluster_pairs_sql(
             dedup.minhash_pairs_sql(n=3, min_est=0.5)
         ),
-        "dedup_embedding": dedup.embedding_dup_pairs_sql(min_cos=EMBED_MIN_COS),
-        "dedup_embedding_lsh": dedup.embedding_dup_pairs_lsh_sql(min_cos=EMBED_MIN_COS),
-        # the auto-sized twins render the SAME auto_bits/auto_centroids
-        # formulas the operators compute on the expanded frame (pinned
-        # formula ⇄ constant in tests/test_auto_config_contract.py)
-        "dedup_embedding_lsh_auto": dedup.embedding_dup_pairs_lsh_sql(
-            min_cos=EMBED_MIN_COS,
-            n_bits=auto_bits(AUTO_EXP_N, dedup.EMBED_LSH_TARGET_BUCKET),
-            src="expanded",
-            pre_cte=_EXPANDED_EMB_CTE,
-        ),
-        "semdedup": dedup.semdedup_sql(n_clusters=8, min_cos=SEMDEDUP_MIN_COS),
-        "semdedup_auto": dedup.semdedup_sql(
-            n_clusters=auto_centroids(AUTO_EXP_N),
-            min_cos=SEMDEDUP_MIN_COS,
-            src="expanded",
-            pre_cte=_EXPANDED_EMB_CTE,
-        ),
         "source_overlap": corpus.source_overlap_sql(),
         "source_drift": corpus.source_drift_sql(),
         "streaming_neardup": dedup.incremental_neardup_sql(
@@ -2464,17 +2308,6 @@ def oracle_sql() -> dict[str, str]:
         "decontaminate": corpus.decontaminate_sql(
             f"doc_id % {DECONTAM_EVAL_MOD} = 0"
         ),
-        "semantic_decontaminate": corpus.semantic_decontaminate_sql(
-            "({id}) % " + f"{DECONTAM_EVAL_MOD} = 0",
-            min_cos=SEM_DECON_MIN_COS,
-        ),
-        "semantic_decontaminate_auto": corpus.semantic_decontaminate_sql(
-            "({id}) % " + f"{DECONTAM_EVAL_MOD} = 0",
-            min_cos=SEM_DECON_MIN_COS,
-            n_bits=auto_bits(AUTO_EXP_N, dedup.EMBED_LSH_TARGET_BUCKET),
-            src="expanded",
-            pre_cte=_EXPANDED_EMB_CTE,
-        ),
         "boilerplate_frac": corpus.boilerplate_fraction_sql(),
         "rater_agreement": corpus.rater_agreement_sql(),
         "token_budget_fill": corpus.token_budget_fill_sql(),
@@ -2489,9 +2322,6 @@ def oracle_sql() -> dict[str, str]:
         "chunk_docs": packing.chunk_docs_sql(),
         "length_buckets": packing.length_buckets_sql(max_bucket=256),
         "context_budget": TRANSCRIPT_CTES + packing.context_budget_sql(),
-        "bm25_topk": retrieval.bm25_topk_sql(),
-        "hybrid_rrf": retrieval.rrf_hybrid_sql(),
-        "mmr_select": retrieval.mmr_select_sql(),
         "similarity_topk": similarity.brute_topk_sql(k=10),
         "similarity_lsh": similarity.lsh_topk_sql(k=10),
         "similarity_ivf": similarity.ivf_topk_sql(k=10),
@@ -2502,10 +2332,7 @@ def oracle_sql() -> dict[str, str]:
         "ann_recall_ivf": similarity.ann_recall_sql(method="ivf"),
         "ann_recall_lsh": similarity.ann_recall_sql(method="lsh"),
         "ann_recall_pq": similarity.ann_recall_sql(method="pq"),
-        "ann_recall_sq": similarity.ann_recall_sql(method="sq"),
         "ann_ndcg_ivf": similarity.ann_ndcg_sql(method="ivf"),
-        "sq_codes": similarity.sq_codes_sql(),
-        "sq_topk": similarity.sq_topk_sql(),
         "label_centroids": similarity.label_centroids_sql(),
         "multimodal_meta": multimodal.media_metadata_sql(),
         "multimodal_decode": multimodal.decode_features_sql(),

@@ -282,6 +282,58 @@ GROUP BY bucket
 """
 
 
+_ANCHOR_MEMO: dict[tuple, list] = {}
+
+
+def clear_anchor_memo() -> None:
+    """Drop every memoized driver-side result: the weights trained here
+    and the anchors, centroids and codebooks of operators/similarity.py.
+
+    Call after overwriting a parquet path that an earlier query in the
+    same process already read (re-ingest, fixture reuse): the memo key
+    includes a file-list + mtime fingerprint for small file-backed plans,
+    but non-file sources and >64-file tables fall back to the analyzed
+    plan hash, which cannot see a content change behind the same path."""
+    _ANCHOR_MEMO.clear()
+
+
+def _memo_key(df: DataFrame, *extras) -> tuple | None:
+    """Memo key for deterministic driver-side training/collect results:
+    (analyzed-plan semanticHash, input fingerprint, *extras).
+
+    The plan hash alone is blind to a path overwritten mid-session (r3
+    ADVICE: a stale cached result vs a DuckDB oracle reading the new
+    bytes), so file-backed plans fold in the sorted input-file list,
+    with (mtime_ns, size) per file when the listing is small enough to
+    stat cheaply.
+    Returns None (no memoization) when the plan hash is unavailable."""
+    try:
+        plan_hash = df._jdf.queryExecution().analyzed().semanticHash()
+    except Exception:
+        return None
+    try:
+        files = sorted(df.inputFiles())
+    except Exception:
+        files = []
+    stamped: tuple = tuple(files)
+    if 0 < len(files) <= 64:
+        import os
+        from urllib.parse import urlparse
+
+        def _stamp(uri: str):
+            p = urlparse(uri)
+            if p.scheme in ("", "file"):
+                try:
+                    st = os.stat(p.path)
+                    return (uri, st.st_mtime_ns, st.st_size)
+                except OSError:
+                    return (uri,)
+            return (uri,)
+
+        stamped = tuple(_stamp(f) for f in files)
+    return (plan_hash, stamped, *extras)
+
+
 def train_hashed_logreg(
     docs: DataFrame,
     n_iter: int = 8,
@@ -292,17 +344,15 @@ def train_hashed_logreg(
 ) -> list[float]:
     """Train the hashed logistic model in-engine: ``n_iter`` full-batch
     gradient steps from zero init, each one corpus scan + one 256-row
-    aggregate collected to the driver (the anchors/BPE pattern — the
+    aggregate collected to the driver (the BPE-training pattern — the
     collect is bucket-count-sized, never corpus-sized). Returns the
     ``N_BUCKETS`` weights for ``hashed_margin(docs, weights=...)``.
 
     Deterministic end-to-end: the per-step gradient is an exact integer
     sum (partitioning-independent) and the driver-side update is plain
     Python float arithmetic — pinned against a pure-Python replica in
-    tests/test_classifier_train.py. Memoized like the LSH anchors /
-    k-means centroids (training is a pure function of input + knobs)."""
-    from log_formatter_spark.operators.similarity import _ANCHOR_MEMO, _memo_key
-
+    tests/test_classifier_train.py. Memoized per ``_memo_key`` (training
+    is a pure function of input + knobs)."""
     # the label EXPRESSION must be part of the key: two trainings with
     # different label columns on the same input are different models
     # (`label is None` alone would hand the second caller the first

@@ -67,9 +67,9 @@ def with_unit(df, id_col: str, vec_col: str, extra: dict | None = None):
 
     ``extra`` ({name: Column}) rides additional expressions through the
     projection, evaluated against the RAW input rows — so a caller's
-    predicate over a column this projection would otherwise drop (e.g.
-    semantic_decontaminate's ``eval_pred`` over a split column) still
-    resolves.
+    expression over a column this projection would otherwise drop (e.g.
+    the label column that ``hard_negatives`` and
+    ``contrastive_triplets`` carry as ``lbl``) still resolves.
     """
     extra = extra or {}
     n = norm(F.col(vec_col))

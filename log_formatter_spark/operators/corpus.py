@@ -1602,156 +1602,6 @@ FROM agg
 """
 
 
-# --- semantic eval-set decontamination -------------------------------------
-
-
-def semantic_decontaminate(
-    emb: DataFrame,
-    eval_pred: Column,
-    min_cos: float,
-    n_bits: int | None = None,
-    n_bands: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Semantic eval-set decontamination: flag TRAIN vectors whose
-    embedding is within ``min_cos`` of ANY eval vector — the
-    paraphrase-robust complement of :func:`decontaminate` (exact n-gram
-    membership misses a reworded benchmark question; embedding cosine
-    does not). Output ``(vec_id, n_eval_hits, max_eval_cos)`` per
-    contaminated train vector.
-
-    100 TB plan — the same broadcast asymmetry as exact decontamination:
-    eval benchmarks are tiny next to the corpus, so the eval side's
-    banded buckets are BROADCAST and the train side never shuffles —
-    scan + map-only sign-LSH band assignment (dedup.EMBED_LSH banding,
-    same anchors/bucket codes as the near-dup oracle) + broadcast-hash
-    probe + inline cosine verify on the join output. No candidate set is
-    ever materialized (the §13 rule); the only exchange carries the
-    surviving HIT rows into the per-vector aggregate, where
-    count-distinct collapses cross-band repeats of the same pair.
-
-    Recall < 1 by design (a contaminated pair is found iff it shares a
-    full bucket code in ≥1 band — the embedding_dup_pairs_lsh coverage
-    analysis applies verbatim); every reported cosine is exact.
-
-    ``n_bits=None`` (default) auto-sizes the bucket code to the corpus
-    (the BENCH §5a scaling law): fixed bits make bucket occupancy — and
-    so the verify work — grow with n²; the 100× sweep measured the
-    pinned-3-bit config at 552 s where auto-sizing reads 2^bits from
-    log2(n) and stays linear. The CONTRACT pins n_bits so the static SQL
-    oracle renders identical anchors (the semdedup/dedup_embedding
-    precedent: static knob for the hash gate, auto for production).
-    """
-    from log_formatter_spark.functions.vectors import dot, with_unit
-    from log_formatter_spark.operators.dedup import (
-        EMBED_LSH_BANDS,
-        EMBED_LSH_TARGET_BUCKET,
-    )
-    from log_formatter_spark.operators.similarity import (
-        anchor_units,
-        auto_bits,
-        bucket_expr,
-    )
-
-    if n_bits is None:
-        n_bits = auto_bits(emb.count(), EMBED_LSH_TARGET_BUCKET)
-    if n_bands is None:
-        n_bands = EMBED_LSH_BANDS
-    # eval_pred rides with_unit's projection evaluated against the RAW
-    # input rows, so predicates over columns the unit projection drops
-    # (a split/source column) resolve — same surface as decontaminate.
-    u = with_unit(emb, id_col, vec_col, extra={"_is_eval": eval_pred})
-    anchors = anchor_units(
-        u.select(id_col, vec_col, "uv"), n_bits * n_bands, id_col=id_col
-    )
-    band_structs = []
-    for j in range(n_bands):
-        band_anchors = [(a_id, au) for a_id, au in anchors if a_id // n_bits == j]
-        bucket = bucket_expr(
-            band_anchors, {a_id: a_id % n_bits for a_id, _ in band_anchors}
-        )
-        band_structs.append(F.struct(F.lit(j).alias("band"), bucket.alias("bucket")))
-    bands = u.select(
-        F.col(id_col), F.col("uv"), F.col("_is_eval"),
-        F.explode(F.array(*band_structs)).alias("bb"),
-    ).select(
-        id_col, "uv", "_is_eval",
-        F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"),
-    )
-    ev = bands.where(F.col("_is_eval")).select(
-        "band", "bucket", F.col(id_col).alias("eval_id"), F.col("uv").alias("ue")
-    )
-    tr = bands.where(~F.col("_is_eval")).select(
-        "band", "bucket", F.col(id_col), F.col("uv").alias("ut")
-    )
-    return (
-        tr.join(F.broadcast(ev), on=["band", "bucket"])
-        .select(id_col, "eval_id", dot(F.col("ut"), F.col("ue")).alias("cos"))
-        .where(F.col("cos") >= min_cos)
-        .groupBy(id_col)
-        .agg(
-            F.countDistinct("eval_id").alias("n_eval_hits"),
-            F.max("cos").alias("max_eval_cos"),
-        )
-    )
-
-
-def semantic_decontaminate_sql(
-    eval_pred_tmpl: str,
-    min_cos: float,
-    src: str = "embeddings",
-    n_bits: int | None = None,
-    n_bands: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    pre_cte: str = "",
-) -> str:
-    """DuckDB rendering of :func:`semantic_decontaminate` — same anchors,
-    same band/bucket codes, same unit-dot cosine (the
-    embedding_dup_pairs_lsh oracle discipline). ``eval_pred_tmpl`` is a
-    format string over ``{id}``, e.g. ``"({id}) % 23 = 0"``; ``pre_cte``
-    prepends CTEs so the contract can grade an auto-sized ``n_bits``
-    on an expanded corpus."""
-    from log_formatter_spark.functions.vectors import dot_sql, unit_cte_sql
-    from log_formatter_spark.operators.dedup import EMBED_LSH_BANDS, EMBED_LSH_BITS
-
-    if n_bits is None:
-        n_bits = EMBED_LSH_BITS
-    if n_bands is None:
-        n_bands = EMBED_LSH_BANDS
-    d = dot_sql("v.uv", "a.au")
-    cos = dot_sql("ut.uv", "ue.uv")
-    na = n_bits * n_bands
-    ev_t = eval_pred_tmpl.format(id="t.id")
-    ev_e = eval_pred_tmpl.format(id="e.id")
-    pre = f"{pre_cte}, " if pre_cte else ""
-    return f"""
-WITH {pre}u AS ({unit_cte_sql(src, id_col, vec_col)}),
-anchors AS (
-  SELECT row_number() OVER (ORDER BY {id_col}) - 1 AS a_id, uv AS au
-  FROM u ORDER BY {id_col} LIMIT {na}
-),
-banded AS (
-  SELECT v.{id_col} AS id, CAST(a.a_id // {n_bits} AS INTEGER) AS band,
-         CAST(sum(CASE WHEN {d} >= 0 THEN (1::BIGINT << (a.a_id % {n_bits})) ELSE 0 END) AS BIGINT) AS bucket
-  FROM u v, anchors a GROUP BY v.{id_col}, a.a_id // {n_bits}
-),
-cand AS (
-  SELECT DISTINCT t.id AS train_id, e.id AS eval_id
-  FROM banded t JOIN banded e ON t.band = e.band AND t.bucket = e.bucket
-  WHERE NOT ({ev_t}) AND ({ev_e})
-)
-SELECT train_id AS {id_col},
-       count(DISTINCT eval_id) AS n_eval_hits,
-       max({cos}) AS max_eval_cos
-FROM cand JOIN u ut ON cand.train_id = ut.{id_col}
-          JOIN u ue ON cand.eval_id = ue.{id_col}
-WHERE {cos} >= {min_cos}
-GROUP BY train_id
-"""
-
-
 # --- PPS (token-mass-proportional) Poisson sampling -------------------------
 
 # Weight cap (tokens) and the inclusion probability AT the cap. The

@@ -384,7 +384,7 @@ def doc_lm_score(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     the corpus; boilerplate scores high, lorem-noise scores low),
     with the mean replacing the usual avg-log-prob so the score stays
     cross-engine hash-exact: ``ln`` differs by ulps between Spark's
-    JVM and DuckDB's libm (measured, see retrieval.py), while
+    JVM and DuckDB's libm (measured), while
     fixed-point ``floor(P·2^40)`` integer sums are exact and
     order-free. Monotonicity per transition is preserved; only the
     averaging geometry differs from the log formulation.
@@ -466,8 +466,8 @@ def dsir_contrast(
     signal ("re-weight the crawl toward wiki-like text").
 
     Determinism note: DSIR's log-ratio ``log p_t − log p_s`` would hang
-    the hash gate on ``ln``'s last-ulp JVM-vs-libm divergence (measured,
-    retrieval.py), so the contrast here is the probability DIFFERENCE
+    the hash gate on ``ln``'s last-ulp JVM-vs-libm divergence (measured),
+    so the contrast here is the probability DIFFERENCE
     ``p_t(w2|w1) − p_s(w2|w1)`` in fixed-point ``floor(Δ·2^40)`` integer
     sums — order-free, bit-exact both engines, same sign semantics per
     transition. The log-ratio form is a one-line swap where

@@ -25,7 +25,7 @@ oracles hash-match bit-for-bit; there is no float anywhere.
 
 Reference parity: the reference has no training-prep layer (its scope
 ends at formatter output); this is part of the §2.5 training-data
-surface, like dedup and retrieval.
+surface, like dedup.
 """
 
 from __future__ import annotations

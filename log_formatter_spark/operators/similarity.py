@@ -26,6 +26,11 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from log_formatter_spark.functions.classifier import (  # noqa: F401
+    _ANCHOR_MEMO,
+    _memo_key,
+    clear_anchor_memo,
+)
 from log_formatter_spark.functions.vectors import dot, dot_sql, unit_cte_sql, with_unit
 
 N_ANCHORS = 8
@@ -115,56 +120,6 @@ def anchor_units(
     return out
 
 
-_ANCHOR_MEMO: dict[tuple, list] = {}
-
-
-def clear_anchor_memo() -> None:
-    """Drop every memoized anchor/centroid/codebook result.
-
-    Call after overwriting a parquet path that an earlier query in the
-    same process already read (re-ingest, fixture reuse): the memo key
-    includes a file-list + mtime fingerprint for small file-backed plans,
-    but non-file sources and >64-file tables fall back to the analyzed
-    plan hash, which cannot see a content change behind the same path."""
-    _ANCHOR_MEMO.clear()
-
-
-def _memo_key(df: DataFrame, *extras) -> tuple | None:
-    """Memo key for deterministic driver-side training/collect results:
-    (analyzed-plan semanticHash, input fingerprint, *extras).
-
-    The plan hash alone is blind to a path overwritten mid-session (r3
-    ADVICE: stale anchors vs a DuckDB oracle reading the new bytes), so
-    file-backed plans fold in the sorted input-file list, with (mtime_ns,
-    size) per file when the listing is small enough to stat cheaply.
-    Returns None (no memoization) when the plan hash is unavailable."""
-    try:
-        plan_hash = df._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:
-        return None
-    try:
-        files = sorted(df.inputFiles())
-    except Exception:
-        files = []
-    stamped: tuple = tuple(files)
-    if 0 < len(files) <= 64:
-        import os
-        from urllib.parse import urlparse
-
-        def _stamp(uri: str):
-            p = urlparse(uri)
-            if p.scheme in ("", "file"):
-                try:
-                    st = os.stat(p.path)
-                    return (uri, st.st_mtime_ns, st.st_size)
-                except OSError:
-                    return (uri,)
-            return (uri,)
-
-        stamped = tuple(_stamp(f) for f in files)
-    return (plan_hash, stamped, *extras)
-
-
 def bucket_expr(anchors: list[tuple[int, list[float]]], bit_of: dict[int, int]):
     """Map-only sign-LSH bucket: bit ``bit_of[a_id]`` set iff
     dot(uv, anchor a_id) ≥ 0. Anchors are embedded as array literals, so
@@ -200,9 +155,8 @@ def auto_bits(n: int, target_bucket: int = TOPK_TARGET_BUCKET) -> int:
     clamped to [3, 16]. Candidate work per band is ~n²/2^bits, so bits
     must track log₂ n to hold mean bucket occupancy (and with it the
     verify cost per vector) constant — the scaling law measured in
-    BENCH.md §5a (fixed 3 bits: 97.5 s at 10×; auto: 10.7 s). Single
-    source of truth for both ANN operators (lsh_topk and
-    dedup.embedding_dup_pairs_lsh)."""
+    BENCH.md §5a (fixed 3 bits: 97.5 s at 10×; auto: 10.7 s). Used by
+    :func:`lsh_topk`."""
     import math
 
     return max(3, min(16, math.ceil(math.log2(max(n, 2) / target_bucket))))
@@ -1024,9 +978,7 @@ def _approx_topk(
         )
     if method == "pq":
         return pq_topk(emb, k=k, n_queries=n_queries, id_col=id_col, vec_col=vec_col)
-    if method == "sq":
-        return sq_topk(emb, k=k, n_queries=n_queries, id_col=id_col, vec_col=vec_col)
-    raise ValueError(f"unknown method {method!r} (ivf|lsh|pq|sq)")
+    raise ValueError(f"unknown method {method!r} (ivf|lsh|pq)")
 
 
 def _approx_topk_sql(src: str, method: str, k: int, n_queries: int) -> str:
@@ -1037,10 +989,8 @@ def _approx_topk_sql(src: str, method: str, k: int, n_queries: int) -> str:
         return pq_topk_sql(src, k=k, n_queries=n_queries)
     if method == "lsh":
         return lsh_topk_sql(src, k=k, n_queries=n_queries)
-    if method == "sq":
-        return sq_topk_sql(src, k=k, n_queries=n_queries)
     # mirror the DataFrame twin — a typo must not yield lsh SQL
-    raise ValueError(f"unknown method {method!r} (ivf|lsh|pq|sq)")
+    raise ValueError(f"unknown method {method!r} (ivf|lsh|pq)")
 
 
 def ann_recall(
@@ -1146,7 +1096,7 @@ def ann_ndcg(
     ``DCG = Σ_r gain(neighbor at approx rank r) / log2(r+1)``,
     ``ndcg = DCG / IDCG`` with IDCG the perfect-order constant.
 
-    Cross-engine determinism (the bm25 discipline): every discount
+    Cross-engine determinism: every discount
     ``1/log2(r+1)`` and IDCG are Python-computed floats rendered as
     identical literals into both engines; gains are exact integers; the
     per-rank contributions are isolated with one conditional sum per
@@ -1714,8 +1664,8 @@ def resolve_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> list[tuple[int, list[float]]]:
-    """Shared centroid resolution for the cell-assignment operators
-    (semdedup, embedding_outliers): explicit list passes through
+    """Shared centroid resolution for the cell-assignment operators:
+    an explicit list passes through
     untouched — in particular WITHOUT the ``emb.count()`` auto-sizing
     scan, which is only paid when a count is actually needed to pick k."""
     if isinstance(centroids, list):
@@ -1738,7 +1688,7 @@ def embedding_outliers(
     centroids: str | list = "anchors",
 ) -> DataFrame:
     """Embedding-space outlier scoring: assign every vector to its
-    argmax-dot centroid cell (the semdedup/IVF assignment), score it by
+    argmax-dot centroid cell (the IVF assignment), score it by
     cosine to that centroid, and flag the bottom ``bottom_frac`` of each
     cell by percent rank — the quality gate that catches corrupt
     embeddings, encoder failures, and off-manifold documents before
@@ -1838,217 +1788,4 @@ SELECT id AS {id_col}, cell, cos_centroid,
        percent_rank() OVER (PARTITION BY cell ORDER BY cos_centroid)
          <= CAST({bottom_frac!r} AS DOUBLE) AS is_outlier
 FROM assigned
-"""
-
-
-# --- scalar (int8) quantization ---------------------------------------------
-#
-# The compressed-index family BETWEEN brute floats and PQ: one signed
-# byte per dimension (8x over float64, no codebook training), decoded
-# per dimension by a per-dim scale — the format faiss calls SQ8 and
-# most vector stores ship as their default compression tier. Where PQ
-# buys 256x at the cost of per-block codebooks and table lookups, SQ8
-# buys 8x with a single multiply per dimension and NO index structure
-# to maintain: the codes table is a drop-in narrow replacement for the
-# float column, and any scan (brute, IVF cell, LSH bucket) can run over
-# it unchanged.
-#
-# Determinism (driver-hash requirements): scales are per-dimension
-# absmax over the UNIT vectors — max/abs are exact, so Spark and DuckDB
-# derive bit-identical scales from bit-identical uv's; the code is
-# floor((x/s)*127) clamped to [-127, 127] (floor, not round: one
-# engine-independent rounding rule), and the asymmetric query score
-# folds (q_j*s_j/127)*code_j in pinned sequential order. Dequantized
-# reconstruction error is bounded by s_j/127 per dimension; recall vs
-# the exact baseline is measured in-engine by ann_recall(method="sq").
-
-
-def sq_scales(
-    emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> list[float]:
-    """Per-dimension absmax scales over the unit vectors.
-
-    Distributed: posexplode -> groupBy(pos) -> max(abs) is one narrow
-    (int, double) exchange with map-side partial max; the collect is
-    ``dim`` rows (driver-sized by construction, same discipline as
-    anchors/centroids/codebooks), memoized on the input fingerprint."""
-    key = _memo_key(emb, "sq_scales", id_col, vec_col)
-    if key is not None and key in _ANCHOR_MEMO:
-        return _ANCHOR_MEMO[key]
-    u = with_unit(emb, id_col, vec_col)
-    rows = (
-        u.select(F.posexplode("uv"))
-        .groupBy("pos")
-        .agg(F.max(F.abs(F.col("col"))).alias("s"))
-        .orderBy("pos")
-        .collect()
-    )
-    out = [float(r["s"]) for r in rows]
-    if key is not None:
-        if len(_ANCHOR_MEMO) > 64:
-            _ANCHOR_MEMO.clear()
-        _ANCHOR_MEMO[key] = out
-    return out
-
-
-def _sq_code_expr(uv, scales: list[float]):
-    """codes_j = clamp(floor((uv_j / s_j) * 127), -127, 127), 0 where the
-    dimension is identically zero (s_j = 0)."""
-    sl = F.array(*[F.lit(float(s)) for s in scales])
-    return F.zip_with(
-        uv,
-        sl,
-        lambda x, s: F.when(s == F.lit(0.0), F.lit(0)).otherwise(
-            F.greatest(
-                F.least(F.floor((x / s) * F.lit(127.0)).cast("int"), F.lit(127)),
-                F.lit(-127),
-            )
-        ),
-    )
-
-
-_SQ_SCALES_CTES = """
-sc AS (
-  SELECT pos, max(abs(v)) AS s FROM (
-    SELECT unnest(uv) AS v, unnest(range(1, len(uv) + 1)) AS pos FROM u
-  ) GROUP BY pos
-),
-sl AS (SELECT list(s ORDER BY pos) AS scales FROM sc)"""
-
-_SQ_CODE_SQL = (
-    "list_transform(list_zip(uv, (SELECT scales FROM sl)), "
-    "p -> CASE WHEN p[2] = 0.0 THEN 0 "
-    "ELSE greatest(least(CAST(floor((p[1] / p[2]) * 127.0) AS INTEGER), 127), -127) "
-    "END)"
-)
-
-
-def sq_codes(
-    emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """(vec_id, codes): the SQ8 index — what a 100 TB deployment WRITES
-    as its compressed vector table (array<int> here for oracle parity;
-    the storage cast to TINYINT is free). Map-only after the one narrow
-    scales aggregate; scales ride as literals, so encode never joins."""
-    scales = sq_scales(emb, id_col, vec_col)
-    if not scales:
-        return emb.sparkSession.createDataFrame([], f"{id_col} long, codes array<int>")
-    u = with_unit(emb, id_col, vec_col)
-    return u.select(id_col, _sq_code_expr(F.col("uv"), scales).alias("codes"))
-
-
-def sq_codes_sql(
-    src: str = "embeddings", id_col: str = "vec_id", vec_col: str = "embedding"
-) -> str:
-    return f"""
-WITH u AS ({unit_cte_sql(src, id_col, vec_col)}),
-{_SQ_SCALES_CTES}
-SELECT {id_col}, {_SQ_CODE_SQL} AS codes FROM u
-"""
-
-
-def sq_topk(
-    emb: DataFrame,
-    k: int = 10,
-    n_queries: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    candidates: str = "all",
-    n_centroids: int | None = N_CENTROIDS,
-    n_probe: int = N_PROBE,
-    centroids: str | list = "anchors",
-) -> DataFrame:
-    """Asymmetric top-k over the SQ8 codes: (q_id, neighbor_id, rank,
-    approx_cos).
-
-    Plan shape at 100 TB: the corpus side is the CODES table only; each
-    query row pre-folds its dequantization INTO the query (qs_j =
-    q_j*s_j/127), broadcast, so scoring a candidate is one dot fold
-    over (qs, codes) — the float embeddings never rescan.
-
-    ``candidates="all"`` (the oracle path) scans every code row per
-    query: the broadcast non-equi join is the intended compressed scan
-    (tiny query side, same allow-listed shape as pq_topk's ADC).
-    ``candidates="ivf"`` is the composed production form for large
-    query batches: the same :func:`_cell_assign` machinery as ivf_topk
-    forms candidates (map-only Voronoi assignment, broadcast probe
-    table, EQUI-join on cell), and only the probed cells' codes are
-    scored — per-query work drops to n_probe/n_centroids of the corpus
-    while the scan still never touches a float vector. With
-    ``n_probe >= n_centroids`` it degenerates to the all-scan result
-    exactly (pinned by test). The ``n_centroids=None`` auto-sizing and
-    ``centroids="trained"`` knobs mirror ivf_topk. The only wide
-    exchange in either form is the final per-query top-k window."""
-    scales = sq_scales(emb, id_col, vec_col)
-    if not scales:
-        return emb.sparkSession.createDataFrame(
-            [], "q_id long, neighbor_id long, rank int, approx_cos double"
-        )
-    u = with_unit(emb, id_col, vec_col)
-    sl = F.array(*[F.lit(float(s)) for s in scales])
-    qs_of = lambda col: F.zip_with(col, sl, lambda x, s: (x * s) / F.lit(127.0))  # noqa: E731
-    if candidates == "ivf":
-        cents = resolve_centroids(
-            emb, u, n_centroids, centroids, id_col=id_col, vec_col=vec_col
-        )
-        if not cents:  # empty corpus/centroid set: schema-stable empty result
-            return emb.sparkSession.createDataFrame(
-                [], "q_id long, neighbor_id long, rank int, approx_cos double"
-            )
-        assigned, probes = _cell_assign(u, cents, n_queries, n_probe, id_col)
-        c = assigned.select(
-            F.col(id_col).alias("neighbor_id"),
-            _sq_code_expr(F.col("uv"), scales).alias("codes"),
-            "cell",
-        )
-        q = probes.select("q_id", qs_of(F.col("qu")).alias("qs"), "cell")
-        pairs = c.join(F.broadcast(q), on="cell").where(
-            F.col("q_id") != F.col("neighbor_id")
-        )
-    elif candidates == "all":
-        c = u.select(
-            F.col(id_col).alias("neighbor_id"),
-            _sq_code_expr(F.col("uv"), scales).alias("codes"),
-        )
-        q = u.where(F.col(id_col) < n_queries).select(
-            F.col(id_col).alias("q_id"), qs_of(F.col("uv")).alias("qs")
-        )
-        pairs = c.join(F.broadcast(q), F.col("q_id") != F.col("neighbor_id"))
-    else:
-        raise ValueError(f"unknown candidates {candidates!r} (all|ivf)")
-    w = Window.partitionBy("q_id").orderBy(F.col("approx_cos").desc(), "neighbor_id")
-    return (
-        pairs.select("q_id", "neighbor_id", dot(F.col("qs"), F.col("codes")).alias("approx_cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "neighbor_id", "rank", "approx_cos")
-    )
-
-
-def sq_topk_sql(
-    src: str = "embeddings",
-    k: int = 10,
-    n_queries: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
-    score = dot_sql("q.qs", "c.codes")
-    return f"""
-WITH u AS ({unit_cte_sql(src, id_col, vec_col)}),
-{_SQ_SCALES_CTES},
-codes AS (SELECT {id_col}, {_SQ_CODE_SQL} AS codes FROM u),
-q AS (
-  SELECT {id_col} AS q_id,
-         list_transform(list_zip(uv, (SELECT scales FROM sl)),
-                        p -> (p[1] * p[2]) / 127.0) AS qs
-  FROM u WHERE {id_col} < {n_queries}
-),
-pairs AS (
-  SELECT q.q_id, c.{id_col} AS neighbor_id, {score} AS approx_cos
-  FROM codes c, q WHERE q.q_id <> c.{id_col}
-)
-SELECT q_id, neighbor_id, rank, approx_cos FROM (
-  SELECT *, CAST(row_number() OVER (PARTITION BY q_id ORDER BY approx_cos DESC, neighbor_id) AS INTEGER) AS rank
-  FROM pairs
-) WHERE rank <= {k}
 """

@@ -19,14 +19,12 @@ SHOWCASE = [
     ("pipeline_counts_jvm", "flagship DAG, jvm parse engine"),
     ("pipeline_counts", "flagship DAG, arrow parse engine"),
     ("dedup_minhash", "MinHash-LSH banded candidate pairs"),
-    ("dedup_embedding_lsh", "banded sign-LSH embedding near-dup"),
     ("dedup_simhash_pairs", "pigeonhole-blocked SimHash pairs"),
     ("similarity_ivf", "IVF ANN top-k (map-only assignment, broadcast probes)"),
     ("asof_last_click", "as-of join (union+window, no join node)"),
     ("regional_revenue", "Q5-shape join graph (dims broadcast)"),
     ("corpus_filter", "single-pass composite corpus cleaner"),
     ("doc_winnow", "winnowing fingerprint selection"),
-    ("bm25_topk", "BM25 lexical retrieval (pruned postings, TakeOrdered top-k)"),
     ("source_quota_sample", "per-source quality quota (WindowGroupLimit)"),
     ("conv_dedup", "conversation dedup (two map-side-combined exchanges)"),
     ("decontaminate", "eval-set decontamination (broadcast eval shingles)"),
@@ -35,7 +33,6 @@ SHOWCASE = [
     ("pq_codes", "product-quantization encode (map-only literal-centroid argmin)"),
     ("pq_topk", "ADC search over PQ codes (broadcast query dot-tables)"),
     ("dsir_contrast", "DSIR importance contrast (two broadcast prob tables)"),
-    ("semdedup", "SemDeDup cluster-then-prune (map-only assignment, cell self-join)"),
     ("incremental_neardup", "verify-inline band probe (ONE join, signatures ride)"),
     ("neardup_indexed", "ingest probe of the persisted band index"),
     ("source_overlap", "cross-source containment over banded MinHash pairs"),
@@ -59,8 +56,6 @@ SHOWCASE = [
     ("zorder_layout", "Z-order layout audit (normalized Morton keys, map-only)"),
     ("quantile_sample_error", "sampled quantiles + rank error (one shared sort)"),
     ("conv_curation", "composed curation pass (ONE assembly exchange, reused 3 ways)"),
-    ("dedup_embedding_lsh_auto", "auto-sized bucket code on the 10x-expanded corpus"),
-    ("semdedup_auto", "auto-sized cluster count (k~sqrt(n)) on the expanded corpus"),
     ("compact_regenerations", "LWW ingest compaction (order-free max-struct, one key exchange)"),
     ("mixture_temperature", "temperature mixture draw (literal quotas, WindowGroupLimit)"),
     ("hll_distinct_users", "HyperLogLog registers (two streaming aggs, no distinct pass)"),
@@ -69,8 +64,6 @@ SHOWCASE = [
     ("hard_negatives", "hard-negative mining (shared IVF cell pass, label-filtered rank)"),
     ("contrastive_triplets", "triplet assembly (ONE scored pass, join-free struct-max positive)"),
     ("length_buckets", "bucketed-padding report (map-only count, bounded 13-group aggregate)"),
-    ("sq_codes", "SQ8 encode (map-only literal-scale quantize)"),
-    ("sq_topk", "asymmetric SQ8 scan (broadcast pre-scaled queries, codes-only corpus)"),
     ("containment_pairs", "doc-in-doc containment (inverted-index blocking, hot-shingle guard)"),
     ("containment_probe", "bipartite ingest containment gate (stateless below pair aggregate)"),
     ("rater_agreement", "Cohen's kappa label QA (one narrow bool exchange)"),

@@ -12,10 +12,7 @@ from log_formatter_spark import contract
 
 # Exact baselines that are MEANT to be quadratic/non-equi on small
 # blocks (their bucketed scale paths are separate catalog entries):
-#   dedup_embedding  — all-pairs exact near-dup (anchor for the LSH path)
 #   similarity_topk  — broadcast non-equi join, query side tiny by design
-#   hybrid_rrf       — embeds similarity_topk's exact dense list as the
-#                      oracle anchor (production depth swaps in lsh/ivf)
 #   ann_recall_*     — recall measurement harness: compares the ANN list
 #                      against the exact baseline by definition
 #   pq_topk          — ADC scan: every candidate is scored (that is the
@@ -23,12 +20,8 @@ from log_formatter_spark import contract
 #                      so the tiny broadcast query side joins non-equi;
 #                      cell-pruned variants compose with ivf/lsh buckets
 CROSS_PRODUCT_OK = {
-    "dedup_embedding", "similarity_topk", "hybrid_rrf",
+    "similarity_topk",
     "ann_recall_ivf", "ann_recall_lsh", "ann_recall_pq", "pq_topk",
-    #   sq_topk          — same shape as pq_topk: the broadcast non-equi
-    #                      join IS the compressed scan (tiny query side,
-    #                      corpus side reads int8 codes only)
-    "ann_recall_sq", "sq_topk",
     #   ann_ndcg_ivf     — same measurement-harness shape as ann_recall:
     #                      the exact baseline side is the documented
     #                      broadcast non-equi scan

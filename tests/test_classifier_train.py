@@ -60,7 +60,7 @@ def _py_train(doc_rows, n_iter: int, lr: float) -> list[float]:
 
 def test_trainer_matches_pure_python(spark, docs):
     from log_formatter_spark.functions.text import tokens
-    from log_formatter_spark.operators.similarity import clear_anchor_memo
+    from log_formatter_spark.functions.classifier import clear_anchor_memo
 
     rows = docs.select(
         tokens(F.coalesce(F.col("text"), F.lit(""))).alias("toks"),
@@ -127,3 +127,24 @@ def test_train_step_determinism_across_partitioning(spark, docs):
     a = sorted(tuple(r) for r in C.train_step(docs.repartition(13)).collect())
     b = sorted(tuple(r) for r in C.train_step(docs.coalesce(1)).collect())
     assert a == b, "fixed-point gradient sums must be partitioning-independent"
+
+
+def test_training_memo_sees_path_overwrite(spark, tmp_path):
+    """The memo must not serve stale weights after the same parquet
+    path is overwritten mid-session: the key's file fingerprint
+    (mtime_ns + size) makes the second read miss."""
+    import time
+
+    path = str(tmp_path / "train_overwrite")
+    corpus = _separable_corpus(spark)
+    corpus.write.parquet(path)
+    w1 = C.train_hashed_logreg(spark.read.parquet(path), n_iter=2)
+
+    time.sleep(0.05)  # ensure a distinct mtime_ns even on coarse clocks
+    flipped = F.when(F.col("lang") == "en", F.lit("xx")).otherwise(F.lit("en"))
+    corpus.withColumn("lang", flipped).write.mode("overwrite").parquet(path)
+    w2 = C.train_hashed_logreg(spark.read.parquet(path), n_iter=2)
+    assert w2 != w1, "overwritten path must miss the training memo"
+
+    C.clear_anchor_memo()
+    assert C.train_hashed_logreg(spark.read.parquet(path), n_iter=2) == w2

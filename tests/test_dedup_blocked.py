@@ -53,29 +53,6 @@ def test_simhash_blocked_plan_has_no_cross_product(spark, docs):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_embedding_lsh_is_subset_of_exact_with_decent_recall(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    exact = {(r["id_a"], r["id_b"]): r["cos"] for r in dedup.embedding_dup_pairs(emb, min_cos=0.4).collect()}
-    lsh = {(r["id_a"], r["id_b"]): r["cos"] for r in dedup.embedding_dup_pairs_lsh(emb, min_cos=0.4).collect()}
-    assert set(lsh) <= set(exact), "LSH found a pair the exact baseline did not"
-    for k, cos in lsh.items():
-        assert cos == exact[k], "found pairs must carry exact cosines"
-    recall = len(lsh) / len(exact)
-    assert recall >= 0.5, f"recall {recall:.2f} below floor at demo threshold"
-
-
-def test_embedding_lsh_plan_has_no_cross_product(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    plan = (
-        dedup.embedding_dup_pairs_lsh(emb, min_cos=0.4)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_minhash_pairs_reuses_signature_exchange(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     df = dedup.minhash_pairs(docs, n=3)
@@ -103,7 +80,6 @@ def test_no_leaked_caches_after_pair_queries(spark, sf_dir):
     from log_formatter_spark.operators.similarity import lsh_topk
 
     dedup.minhash_pairs(docs, n=3).write.format("noop").mode("overwrite").save()
-    dedup.embedding_dup_pairs_lsh(emb, min_cos=0.4).write.format("noop").mode("overwrite").save()
     lsh_topk(emb, k=5).write.format("noop").mode("overwrite").save()
     leaked = _cached_rdd_ids(spark) - before
     assert not leaked, f"cached blocks leaked into storage memory: {leaked}"

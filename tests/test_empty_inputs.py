@@ -83,8 +83,6 @@ def test_doc_operators_on_empty_input(spark, empty_docs, build):
 @pytest.mark.parametrize(
     "build",
     [
-        lambda e: dedup.embedding_dup_pairs(e, min_cos=0.4),
-        lambda e: dedup.embedding_dup_pairs_lsh(e, min_cos=0.4),  # auto-bits on n=0
         lambda e: similarity.brute_topk(e, k=5),
         lambda e: similarity.lsh_topk(e, k=5),  # empty anchor collect
         lambda e: similarity.ivf_topk(e, k=5),  # empty centroid collect
@@ -196,8 +194,3 @@ def test_round5e_ops_on_empty_docs(empty_docs):
     assert corpus.quality_calibration(empty_docs).count() == 0
     assert dedup.containment_pairs(empty_docs).count() == 0
     assert dedup.containment_probe(empty_docs, empty_docs).count() == 0
-
-
-def test_sq_on_empty_embeddings(empty_emb):
-    assert similarity.sq_codes(empty_emb).count() == 0
-    assert similarity.sq_topk(empty_emb).count() == 0

@@ -80,6 +80,7 @@ def test_flagship_batch_equals_streaming(spark, src, tmp_path, engine):
 def test_streaming_cli_applies_the_config_pipeline(spark, src, tmp_path, monkeypatch):
     """A non-default chain (salted worker repartition, labels) reaches
     every micro-batch of ``--streaming``."""
+    out = str(tmp_path / "out")
     cfg = tmp_path / "stream.yml"
     cfg.write_text(
         textwrap.dedent(
@@ -92,20 +93,58 @@ def test_streaming_cli_applies_the_config_pipeline(spark, src, tmp_path, monkeyp
                 - enrich
                 - route
               labels: {{env: prod}}
-            output: {{target: noop}}
+            output: {{target: parquet, path: "{out}"}}
             """
         )
     )
     # the CLI owns its session; lend it the suite's and keep it running
     monkeypatch.setattr(log_formatter_spark, "get_spark", lambda *a, **k: spark)
     monkeypatch.setattr(type(spark), "stop", lambda self: None)
-    out = str(tmp_path / "out")
-    argv = ["-c", str(cfg), "--streaming", "--out", out, "--checkpoint", str(tmp_path / "ckpt")]
+    argv = ["-c", str(cfg), "--streaming", "--checkpoint", str(tmp_path / "ckpt")]
     assert main(argv) == 0
 
     got = read_routed_stream_output(spark, out)
     assert [r["env"] for r in got.select("env").distinct().collect()] == ["prod"]
     assert got.count() == spark.read.parquet(src).count()
+
+
+@pytest.mark.parametrize(
+    "output, flags, named",
+    [
+        ("{target: noop}", [], "output.target"),
+        ('{target: parquet, path: "OUT", index: "logs-{{level}}"}', [], "index"),
+        ('{target: parquet, path: "OUT"}', ["--out", "OUT"], "--out"),
+    ],
+    ids=["noop-target", "index-key", "out-flag"],
+)
+def test_streaming_cli_refuses_output_it_cannot_honour(
+    spark, src, tmp_path, monkeypatch, capsys, output, flags, named
+):
+    """``--streaming`` writes only to ``output.path`` of a parquet
+    target; any other sink setting fails loudly instead of being
+    ignored."""
+    out = str(tmp_path / "out")
+    cfg = tmp_path / "stream.yml"
+    cfg.write_text(
+        textwrap.dedent(
+            f"""
+            input: {{target: stream_transcripts, path: "{src}"}}
+            pipeline:
+              formatters:
+                - parser: {{components_regex: '{TRANSCRIPT_PATTERN}', engine: jvm}}
+                - enrich
+                - route
+            output: {output.replace("OUT", out)}
+            """
+        )
+    )
+    monkeypatch.setattr(log_formatter_spark, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(type(spark), "stop", lambda self: None)
+    argv = ["-c", str(cfg), "--streaming", "--checkpoint", str(tmp_path / "ckpt")]
+    with pytest.raises(SystemExit) as exc:
+        main(argv + [f.replace("OUT", out) for f in flags])
+    assert exc.value.code == 2
+    assert named in capsys.readouterr().err
 
 
 def test_aggregates_need_the_parquet_target(spark, src, tmp_path):

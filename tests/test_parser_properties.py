@@ -1,18 +1,22 @@
 """Property-based parser parity: for arbitrary (well-formed and
-garbage) input strings, both parse engines must agree exactly with the
-pure-Python oracle's reference semantics (search-anywhere, all-named-
-groups extraction, `_`-discard, non-participating group → \"\", no
-match → discard flag) in the reference's regex dialect, Go RE2: ``.``
-stops only at ``\\n``, and ``\\d \\w \\s`` are ASCII classes."""
+garbage) input strings, both parse engines and the DuckDB rendering the
+oracles grade against must agree exactly with the pure-Python oracle's
+reference semantics (search-anywhere, all-named-groups extraction,
+`_`-discard, non-participating group → \"\", no match → discard flag)
+in the reference's regex dialect, Go RE2: ``.`` stops only at ``\\n``,
+and ``\\d \\w \\s`` are ASCII classes."""
 
 from __future__ import annotations
 
 from datetime import datetime, timezone
 
+import duckdb
+import pyarrow as pa
 import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
+from log_formatter_spark.contract import PARSE_SQL
 from log_formatter_spark.operators.parser import ParserConfig, apply_parser
 from log_formatter_spark.oracle import parse_doc
 from log_formatter_spark.transcripts import TRANSCRIPT_PATTERN
@@ -80,6 +84,12 @@ def test_null_text_is_parse_failure_in_every_engine(spark):
 @given(st.lists(log_lines(), min_size=1, max_size=40))
 @example([f"2024-01-02 03:04:05 INFO [bash] a{c}b turn=1" for c in _TERMINATORS])
 @example([None, "", f"2024-01-02 03:04:05 INFO [bash] {_long('a' + _TERMINATORS)} turn=1"])
+@example(
+    [
+        "2024-01-02 03:04:05 INFO [outil_é] body turn=1",  # non-ASCII \w
+        "2024-01-02 03:04:05 INFO [bash] body turn=\u0663\u0664",  # Arabic-Indic \d
+    ]
+)
 def test_engines_match_python_oracle(spark, lines):
     df = spark.createDataFrame([(i, s) for i, s in enumerate(lines)], "i long, text string")
     want = []
@@ -98,6 +108,15 @@ def test_engines_match_python_oracle(spark, lines):
             for r in out.orderBy("i").collect()
         ]
         assert got == want, f"engine={engine} diverged from oracle"
+    assert _duckdb_parse(lines) == want, "engine=duckdb diverged from oracle"
+
+
+def _duckdb_parse(lines):
+    """``contract.PARSE_SQL`` over ``lines`` in DuckDB, in input order."""
+    con = duckdb.connect()
+    con.register("lines", pa.table({"i": list(range(len(lines))), "text": pa.array(lines, pa.string())}))
+    rows = con.execute(f"SELECT i, {PARSE_SQL} FROM lines ORDER BY i").fetchall()
+    return [tuple(r[1:]) for r in rows]
 
 
 @pytest.mark.parametrize(

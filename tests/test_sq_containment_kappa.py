@@ -1,10 +1,10 @@
-"""Round-5 session-6 operators: SQ8 scalar quantization, asymmetric
-containment, and the rater-agreement kappa audit.
+"""Round-5 session-6 operators: asymmetric containment and the
+rater-agreement kappa audit.
 
-Oracle parity for all five catalog entries is covered by the
+Oracle parity for both catalog entries is covered by the
 parameterized test_contract replica; these tests pin the SEMANTIC
-properties the hash can't see (reconstruction bounds, recall floor,
-doc-in-doc detection vs Jaccard, kappa algebra / NULL rules)."""
+properties the hash can't see (doc-in-doc detection vs Jaccard, kappa
+algebra / NULL rules)."""
 
 from __future__ import annotations
 
@@ -14,72 +14,6 @@ from pyspark.sql import Row
 
 from log_formatter_spark.operators.corpus import rater_agreement
 from log_formatter_spark.operators.dedup import containment_pairs, ngram_jaccard_pairs
-from log_formatter_spark.operators.similarity import (
-    ann_recall,
-    sq_codes,
-    sq_scales,
-    sq_topk,
-)
-
-# --- scalar quantization ----------------------------------------------------
-
-
-def test_sq_codes_bounds_and_reconstruction(spark, sf_dir):
-    """Codes live in [-127, 127]; dequantized reconstruction is within
-    one quantization step (s_j/127) of the unit vector per dimension."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    scales = sq_scales(emb)
-    assert scales and all(s >= 0.0 for s in scales)
-    codes = {r["vec_id"]: r["codes"] for r in sq_codes(emb).collect()}
-    from log_formatter_spark.functions.vectors import with_unit
-
-    uvs = {
-        r["vec_id"]: r["uv"]
-        for r in with_unit(emb, "vec_id", "embedding").select("vec_id", "uv").collect()
-    }
-    assert set(codes) == set(uvs)
-    for vid, cs in codes.items():
-        assert len(cs) == len(scales)
-        for j, c in enumerate(cs):
-            assert -127 <= c <= 127
-            s = scales[j]
-            if s == 0.0:
-                assert c == 0
-            else:
-                # floor quantization: recon in (x - step, x + step)
-                assert abs(c / 127.0 * s - uvs[vid][j]) <= s / 127.0 + 1e-12
-
-
-def test_sq_topk_recall_floor(spark, sf_dir):
-    """SQ8 keeps nearly all exact neighbors — 8x compression should not
-    behave like an aggressive ANN; mean recall@10 must clear 0.9 on the
-    driver embeddings (PQ's demo config sits far lower)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    rows = ann_recall(emb, method="sq", k=10).collect()
-    assert rows
-    mean_recall = sum(r["recall"] for r in rows) / len(rows)
-    assert mean_recall >= 0.9, mean_recall
-
-
-def test_sq_empty_corpus(spark):
-    emb = spark.createDataFrame([], "vec_id long, embedding array<float>, label int")
-    assert sq_codes(emb).collect() == []
-    assert sq_topk(emb).collect() == []
-    assert sq_codes(emb).columns == ["vec_id", "codes"]
-    assert sq_topk(emb).columns == ["q_id", "neighbor_id", "rank", "approx_cos"]
-
-
-def test_sq_rank_shape(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    rows = sq_topk(emb, k=5, n_queries=4).collect()
-    by_q: dict[int, list[int]] = {}
-    for r in rows:
-        assert r["q_id"] != r["neighbor_id"]
-        by_q.setdefault(r["q_id"], []).append(r["rank"])
-    assert set(by_q) == {0, 1, 2, 3}
-    for ranks in by_q.values():
-        assert sorted(ranks) == [1, 2, 3, 4, 5]
-
 
 # --- containment ------------------------------------------------------------
 
@@ -182,30 +116,3 @@ def test_kappa_excludes_zero_token_docs(spark):
     rows = rater_agreement(df).collect()
     assert len(rows) == 1
     assert rows[0]["n_docs"] == 1
-
-
-def test_sq_topk_ivf_degenerates_to_all_scan(spark, sf_dir):
-    """With every cell probed (n_probe >= n_centroids) the IVF-composed
-    form must equal the all-scan result exactly — same candidates, same
-    scores, same ranking."""
-    from log_formatter_spark.operators.similarity import N_CENTROIDS
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    full = {tuple(r) for r in sq_topk(emb, k=5, n_queries=4).collect()}
-    ivf = {
-        tuple(r)
-        for r in sq_topk(
-            emb, k=5, n_queries=4, candidates="ivf", n_probe=N_CENTROIDS
-        ).collect()
-    }
-    assert ivf == full
-
-
-def test_sq_topk_ivf_recall_floor(spark, sf_dir):
-    """The pruned form keeps most exact neighbors on the fixture."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    full = sq_topk(emb, k=10).collect()
-    ivf = sq_topk(emb, k=10, candidates="ivf").collect()
-    fp = {(r["q_id"], r["neighbor_id"]) for r in full}
-    ip = {(r["q_id"], r["neighbor_id"]) for r in ivf}
-    assert len(ip & fp) / len(fp) >= 0.5

@@ -87,6 +87,15 @@ def test_auto_centroids_sqrt_law():
     assert similarity.auto_centroids(10**9) == 4096  # clamp
 
 
+def test_auto_bits_log_law():
+    # ⌈log₂(n/64)⌉ clamped to [3, 16]: the sf0.01 corpus (500 vectors)
+    # sits on the floor, 10× that grows the code to 7 bits
+    assert similarity.auto_bits(0) == 3
+    assert similarity.auto_bits(500) == 3
+    assert similarity.auto_bits(5000) == 7
+    assert similarity.auto_bits(10**12) == 16  # clamp
+
+
 def test_unknown_centroids_mode_rejected(spark, emb):
     with pytest.raises(ValueError):
         similarity.ivf_topk(emb, centroids="magic")

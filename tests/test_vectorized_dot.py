@@ -10,19 +10,12 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from log_formatter_spark.operators import dedup, similarity
+from log_formatter_spark.operators import similarity
 
 
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
-def _pairs(df):
-    return {
-        (r["id_a"], r["id_b"]): r["cos"]
-        for r in df.collect()
-    }
 
 
 def test_vectorized_dot_matches_fold(spark):
@@ -38,16 +31,6 @@ def test_vectorized_dot_matches_fold(spark):
         assert math.isclose(r["fold"], r["vec"], rel_tol=1e-12, abs_tol=1e-12)
 
 
-def test_lsh_dup_pairs_vectorized_equals_fold(spark, emb):
-    fold = _pairs(dedup.embedding_dup_pairs_lsh(emb, min_cos=0.4, verify="fold"))
-    vec = _pairs(dedup.embedding_dup_pairs_lsh(emb, min_cos=0.4, verify="vectorized"))
-    # same candidate generation → same pair SET (threshold decisions could
-    # flip only for cosines within 1e-12 of min_cos; the testdata has none)
-    assert set(fold) == set(vec)
-    for k in fold:
-        assert math.isclose(fold[k], vec[k], rel_tol=1e-12, abs_tol=1e-12)
-
-
 def test_lsh_topk_vectorized_same_ranking(spark, emb):
     fold = similarity.lsh_topk(emb, k=5, verify="fold").collect()
     vec = similarity.lsh_topk(emb, k=5, verify="vectorized").collect()
@@ -61,14 +44,3 @@ def test_unknown_kernel_rejected():
 
     with pytest.raises(ValueError):
         dot_kernel("simd")
-
-
-def test_lsh_dup_pairs_grouped_equals_fold(spark, emb):
-    """verify="grouped" (per-bucket gram-matrix kernel, the 100× path)
-    must find the same pair set as the oracle fold plan, cosines equal
-    within float tolerance."""
-    fold = _pairs(dedup.embedding_dup_pairs_lsh(emb, min_cos=0.4, verify="fold"))
-    grp = _pairs(dedup.embedding_dup_pairs_lsh(emb, min_cos=0.4, verify="grouped"))
-    assert set(fold) == set(grp)
-    for k in fold:
-        assert math.isclose(fold[k], grp[k], rel_tol=1e-12, abs_tol=1e-12)

@@ -76,7 +76,6 @@ def test_anchor_ops_survive_offset_id_space(spark, sf_dir):
     zero anchors and degenerated every anchor-based operator)."""
     from pyspark.sql import functions as F
 
-    from log_formatter_spark.operators import dedup
     from log_formatter_spark.operators.similarity import lsh_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -84,6 +83,3 @@ def test_anchor_ops_survive_offset_id_space(spark, sf_dir):
     )
     assert ivf_topk(emb, k=5, n_queries=10_008).count() > 0
     assert lsh_topk(emb, k=5, n_queries=10_008, n_anchors=4).count() > 0
-    # LSH near-dup must not collapse to one bucket (the all-pairs trap)
-    pairs = dedup.embedding_dup_pairs_lsh(emb, min_cos=0.4, n_bits=3)
-    assert pairs.count() > 0
