@@ -38,14 +38,10 @@ HEADLINE = [
     "doc_fingerprint",
     "text_stats",
     "corpus_filter",
-    "similarity_topk",
-    "similarity_lsh",
-    # round 2b: as-of join, winnowing, IVF ANN, relational OLAP trio
+    # round 2b: as-of join, winnowing, relational OLAP trio
     "asof_last_click",
     "attribution_window",
     "doc_winnow",
-    "similarity_ivf",
-    "similarity_ivf_trained",
     "pricing_summary",
     "segment_top_orders",
     "regional_revenue",
@@ -57,15 +53,12 @@ HEADLINE = [
     "boilerplate_frac",
     "error_burst",
     # round 3d: incremental ingest dedup, classifier inference, mixture
-    # assembly, PQ compressed-index ANN
+    # assembly
     "incremental_dedup",
     "incremental_neardup",
     "classifier_margin",
     "classifier_margin_trained",
     "mixture_epochs",
-    "pq_topk",
-    "pq_topk_trained",
-    "pq_topk_k16",
     "temporal_split",
     "dsir_contrast",
     "validate_events",
@@ -74,7 +67,6 @@ HEADLINE = [
     "exact_substring_spans",
     "span_dup_fraction",
     "source_overlap",
-    "embedding_outliers",
     "source_drift",
     "neardup_indexed",
     "conv_neardup",
@@ -115,10 +107,7 @@ HEADLINE = [
     "ngram_novelty",
     "stitch_fragments",
     "novelty_indexed",
-    # round 5 session 4: contrastive hard-negative mining
-    "hard_negatives",
-    # round 5 session 5: triplet assembly + length-bucketed padding report
-    "contrastive_triplets",
+    # round 5 session 5: length-bucketed padding report
     "length_buckets",
     # round 5 session 6: containment, kappa audit, water-filling budget
     # allocation, per-source quality calibration
@@ -139,26 +128,6 @@ HEADLINE = [
 def _materialize(df) -> int:
     df.write.format("noop").mode("overwrite").save()
     return -1
-
-
-def _ivf_trained(spark, sf_dir):
-    # production ANN configuration (non-oracled knobs): k-means-trained
-    # centroids auto-sized to ~sqrt(n), Arrow/numpy rerank kernel
-    from log_formatter_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return similarity.ivf_topk(
-        emb, k=10, n_centroids=None, centroids="trained", verify="vectorized"
-    )
-
-
-def _pq_trained(spark, sf_dir):
-    # production PQ configuration (non-oracled knob): per-sub-space
-    # k-means codebooks instead of the deterministic anchor slices
-    from log_formatter_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return similarity.pq_topk(emb, k=10, codebooks="trained")
 
 
 def _exact_spans_raw(spark, sf_dir):
@@ -191,16 +160,6 @@ def _classifier_trained(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     w = classifier.train_hashed_logreg(docs, n_iter=8)
     return classifier.hashed_margin(docs, weights=w)
-
-
-def _pq_k16_kernel(spark, sf_dir):
-    # large-codebook configuration: k=16 per block (k*m = 64 >
-    # _PQ_EXPR_MAX_KM), so encode + query dtables run the Arrow matrix
-    # kernels — the plan-size-O(1) path that k=256 byte codes need
-    from log_formatter_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return similarity.pq_topk(emb, k=10, n_centroids=16, codebooks="trained")
 
 
 _BAND_INDEX_MEMO: dict = {}
@@ -254,25 +213,10 @@ def _conv_curation_raw(spark, sf_dir):
     return conv_curation(transcripts_from_events(spark, sf_dir), min_est=0.3)
 
 
-def _outliers_auto(spark, sf_dir):
-    # auto-sized cluster count: the CONTRACT query pins n_clusters=8
-    # (static oracle), which caps the per-cell percent_rank window at 8
-    # partitions — fine for the gate, a parallelism ceiling at 100x.
-    # k ~ sqrt(n) keeps every window partition executor-sized.
-    from log_formatter_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return similarity.embedding_outliers(emb, n_clusters=None)
-
-
 BENCH_OVERRIDES = {
-    "embedding_outliers": _outliers_auto,
     "neardup_indexed": _neardup_probe_indexed,
     "conv_neardup": _conv_neardup_raw,
     "conv_curation": _conv_curation_raw,
-    "similarity_ivf_trained": _ivf_trained,
-    "pq_topk_trained": _pq_trained,
-    "pq_topk_k16": _pq_k16_kernel,
     "classifier_margin_trained": _classifier_trained,
     "exact_substring_spans": _exact_spans_raw,
     "span_dup_fraction": _span_dup_raw,

@@ -31,8 +31,6 @@ from log_formatter_spark.functions.redact import redact_text, redact_text_sql
 from log_formatter_spark.lookups import (
     ROLE_LOOKUP_SQL,
     TOOL_LOOKUP_SQL,
-    role_lookup,
-    tool_lookup,
 )
 from log_formatter_spark.operators import (
     analytics,
@@ -43,7 +41,6 @@ from log_formatter_spark.operators import (
     olap,
     packing,
     sessions,
-    similarity,
     validate,
 )
 from log_formatter_spark.sources import kafka_fixture
@@ -115,10 +112,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 # --- transcript-pipeline oracle CTE chain ---------------------------------
@@ -1491,16 +1484,12 @@ _GATE_ORDER = [
     "stitch_fragments",
     "streaming_novelty",
     "novelty_indexed",
-    # round-5 session-4 addition (window-placed per the freeze rule,
-    # displacing one more refresh): contrastive hard-negative mining
-    "hard_negatives",
     "streaming_hll_distinct",
     "streaming_countmin",
     "streaming_compact",
     # round-5 session-5 additions (window-placed per the freeze rule,
-    # displacing more block-B refreshes): triplet assembly and the
-    # length-bucketed padding report
-    "contrastive_triplets",
+    # displacing more block-B refreshes): the length-bucketed padding
+    # report
     "length_buckets",
     # round-5 session-6 additions (window-placed per the freeze rule,
     # displacing five more block-B refreshes): asymmetric containment
@@ -1516,9 +1505,6 @@ _GATE_ORDER = [
     # conversation shared-prefix analysis
     "cluster_split",
     "prefix_share",
-    # round-5 session-8 addition (window-placed per the freeze rule,
-    # displacing one more refresh): rank-aware ANN quality (NDCG@k)
-    "ann_ndcg_ivf",
     # round-5 session-9 additions (window-placed per the freeze rule,
     # displacing the parse_labels and parse_extract refreshes): CCNet
     # cross-corpus line-level dedup over the deterministic line
@@ -1538,8 +1524,6 @@ _GATE_ORDER = [
     "pipeline_counts",
     "pipeline_counts_jvm",
     "corpus_filter",
-    "similarity_topk",
-    "similarity_lsh",
     "dedup_simhash_pairs",
     "dedup_simhash",
     "dedup_minhash_signatures",
@@ -1556,7 +1540,6 @@ _GATE_ORDER = [
     "token_count",
     "labels_stamp",
     "multimodal_frames",
-    "label_centroids",
     # --- tail: r03-graded (union-covered; first entries displaced from
     # block C by the round-5 additions) ----------------------------------
     "top_users_per_type",
@@ -1601,8 +1584,6 @@ _GATE_ORDER = [
     # --- tail: r04-graded (freshest rows) ------------------------------
     "error_burst",
     "parse_grok",
-    "pq_codes",
-    "pq_topk",
     "source_quota_sample",
     "quality_deciles",
     "hash_sample",
@@ -1617,10 +1598,6 @@ _GATE_ORDER = [
     "kafka_pipeline_routed",
     "incremental_neardup",
     "split_contamination",
-    "ann_recall_ivf",
-    "ann_recall_lsh",
-    "ann_recall_pq",
-    "similarity_ivf",
     "dedup_clusters",
     "streaming_incremental_dedup",
     "streaming_attribution",
@@ -1629,7 +1606,6 @@ _GATE_ORDER = [
     "exact_substring_spans",
     "span_dup_fraction",
     "source_overlap",
-    "embedding_outliers",
     "source_drift",
     "streaming_neardup",
     "neardup_indexed",
@@ -1947,10 +1923,6 @@ def _catalog() -> dict[str, QueryFn]:
         # probe through the PERSISTED band index (same oracle: the
         # round-trip must be row-identical to the recompute form)
         "neardup_indexed": _neardup_indexed,
-        # per-cell cosine-to-centroid percent-rank outlier flags
-        "embedding_outliers": lambda s, d: similarity.embedding_outliers(
-            _emb(s, d), n_clusters=8
-        ),
         # pairs → connected components → survivors (iterative label
         # propagation; oracle = DuckDB recursive CTE, a different algorithm)
         "dedup_clusters": lambda s, d: dedup.cluster_pairs(
@@ -2026,30 +1998,6 @@ def _catalog() -> dict[str, QueryFn]:
         "context_budget": lambda s, d: packing.context_budget(
             transcripts_from_events(s, d)
         ),
-        # similarity search
-        "similarity_topk": lambda s, d: similarity.brute_topk(_emb(s, d), k=10),
-        # n_anchors pinned (not auto-sized) for the static SQL oracle
-        "similarity_lsh": lambda s, d: similarity.lsh_topk(
-            _emb(s, d), k=10, n_anchors=similarity.N_ANCHORS
-        ),
-        "similarity_ivf": lambda s, d: similarity.ivf_topk(_emb(s, d), k=10),
-        # contrastive hard-negative mining: ivf cells + label inequality
-        "hard_negatives": lambda s, d: similarity.hard_negatives(_emb(s, d), k=10),
-        # triplet assembly: one positive x top-m hard negatives per query
-        "contrastive_triplets": lambda s, d: similarity.contrastive_triplets(
-            _emb(s, d), m=4
-        ),
-        # product quantization: the compressed index + ADC search over it
-        "pq_codes": lambda s, d: similarity.pq_codes(_emb(s, d)),
-        "pq_topk": lambda s, d: similarity.pq_topk(_emb(s, d), k=10),
-        # in-engine ANN quality dashboards: recall@k vs the exact list
-        "ann_recall_ivf": lambda s, d: similarity.ann_recall(_emb(s, d), method="ivf"),
-        "ann_recall_lsh": lambda s, d: similarity.ann_recall(_emb(s, d), method="lsh"),
-        "ann_recall_pq": lambda s, d: similarity.ann_recall(_emb(s, d), method="pq"),
-        # rank-aware index quality: NDCG@k vs the exact ranking (recall
-        # is order-blind; this grades WHERE each true neighbor landed)
-        "ann_ndcg_ivf": lambda s, d: similarity.ann_ndcg(_emb(s, d), method="ivf"),
-        "label_centroids": lambda s, d: similarity.label_centroids(_emb(s, d)),
         # multimodal plumbing
         "multimodal_meta": lambda s, d: multimodal.media_metadata(_docs(s, d)),
         # Arrow-batched decode through mapInPandas, exploded to scalar
@@ -2287,7 +2235,6 @@ def oracle_sql() -> dict[str, str]:
             "SELECT * FROM documents WHERE doc_id % 5 <> 0",
             n=3,
         ),
-        "embedding_outliers": similarity.embedding_outliers_sql(n_clusters=8),
         "corpus_filter": corpus.corpus_filter_sql(),
         "split_contamination": corpus.split_contamination_sql(
             dedup.minhash_pairs_sql(n=3, min_est=0.5), _DATASET_SPLIT_SQL
@@ -2322,18 +2269,6 @@ def oracle_sql() -> dict[str, str]:
         "chunk_docs": packing.chunk_docs_sql(),
         "length_buckets": packing.length_buckets_sql(max_bucket=256),
         "context_budget": TRANSCRIPT_CTES + packing.context_budget_sql(),
-        "similarity_topk": similarity.brute_topk_sql(k=10),
-        "similarity_lsh": similarity.lsh_topk_sql(k=10),
-        "similarity_ivf": similarity.ivf_topk_sql(k=10),
-        "hard_negatives": similarity.hard_negatives_sql(k=10),
-        "contrastive_triplets": similarity.contrastive_triplets_sql(m=4),
-        "pq_codes": similarity.pq_codes_sql(),
-        "pq_topk": similarity.pq_topk_sql(k=10),
-        "ann_recall_ivf": similarity.ann_recall_sql(method="ivf"),
-        "ann_recall_lsh": similarity.ann_recall_sql(method="lsh"),
-        "ann_recall_pq": similarity.ann_recall_sql(method="pq"),
-        "ann_ndcg_ivf": similarity.ann_ndcg_sql(method="ivf"),
-        "label_centroids": similarity.label_centroids_sql(),
         "multimodal_meta": multimodal.media_metadata_sql(),
         "multimodal_decode": multimodal.decode_features_sql(),
         "multimodal_frames": multimodal.frame_sample_sql(),

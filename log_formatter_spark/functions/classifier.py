@@ -282,19 +282,18 @@ GROUP BY bucket
 """
 
 
-_ANCHOR_MEMO: dict[tuple, list] = {}
+_TRAIN_MEMO: dict[tuple, list] = {}
 
 
-def clear_anchor_memo() -> None:
-    """Drop every memoized driver-side result: the weights trained here
-    and the anchors, centroids and codebooks of operators/similarity.py.
+def clear_train_memo() -> None:
+    """Drop every memoized weight vector of ``train_hashed_logreg``.
 
     Call after overwriting a parquet path that an earlier query in the
     same process already read (re-ingest, fixture reuse): the memo key
     includes a file-list + mtime fingerprint for small file-backed plans,
     but non-file sources and >64-file tables fall back to the analyzed
     plan hash, which cannot see a content change behind the same path."""
-    _ANCHOR_MEMO.clear()
+    _TRAIN_MEMO.clear()
 
 
 def _memo_key(df: DataFrame, *extras) -> tuple | None:
@@ -360,8 +359,8 @@ def train_hashed_logreg(
     label_repr = "default" if label is None else str(_label_col(label)._jc)
     memo_key = _memo_key(docs, "logreg", n_iter, lr, id_col, text_col,
                          label_repr)
-    if memo_key is not None and memo_key in _ANCHOR_MEMO:
-        return list(_ANCHOR_MEMO[memo_key])
+    if memo_key is not None and memo_key in _TRAIN_MEMO:
+        return list(_TRAIN_MEMO[memo_key])
 
     n = docs.count()
     w = [0.0] * N_BUCKETS
@@ -373,9 +372,9 @@ def train_hashed_logreg(
         for r in rows:
             w[r["bucket"]] = r["w_next"]
     if memo_key is not None:
-        if len(_ANCHOR_MEMO) > 64:
-            _ANCHOR_MEMO.clear()
-        _ANCHOR_MEMO[memo_key] = list(w)
+        if len(_TRAIN_MEMO) > 64:
+            _TRAIN_MEMO.clear()
+        _TRAIN_MEMO[memo_key] = list(w)
     return w
 
 

@@ -152,7 +152,7 @@ def bloom_membership(
     is corpus-sized; this is constant-sized with a tunable FP rate
     (~(1-e^(-kn/m))^k). The ``is_member`` column is the measurement
     harness (exact join, batch-bounded output) that makes the FP rate an
-    observable, the ann_recall discipline; production pipelines consume
+    observable; production pipelines consume
     ``bloom_hit`` alone and route hits to the exact verifier.
     """
     pos = _bloom_pos_arr(key_col, m, k)
@@ -248,8 +248,8 @@ FROM hits h LEFT JOIN mem m USING ({key_col})
 # without being able to afford the exact tables. Same discipline as the
 # other two: built from the md5_60 hash family so construction AND probe
 # are value-hash-verifiable cross-engine, with the exact count riding
-# along as the measurement column (ann_recall / bloom is_member
-# pattern) so the overestimate is an observable, not a hope.
+# along as the measurement column (the bloom is_member pattern) so
+# the overestimate is an observable, not a hope.
 
 CM_WIDTH = 256
 CM_DEPTH = 3
@@ -269,8 +269,7 @@ def _cm_col_case(key, depth: int, width: int):
     codegen projection, with the LAST branch as the otherwise so the
     join key is provably non-nullable (a nullable computed key makes
     Catalyst push isnotnull below the projection and re-evaluate it per
-    row — the similarity_ivf lesson, guarded by the catalog plan
-    test)."""
+    row — guarded by the catalog plan test)."""
     expr = _cm_col(key, depth - 1, width)
     for r in range(depth - 2, -1, -1):
         expr = F.when(F.col("r") == r, _cm_col(key, r, width)).otherwise(expr)

@@ -2613,8 +2613,8 @@ def line_dedup(
     base = docs.select(F.col(id_col), arr.alias("_arr"))
     # coalesce makes the join/group key provably non-nullable, so
     # Catalyst does not push an isnotnull(key) filter that re-evaluates
-    # the md5 expression per row (the similarity_ivf re-inlining trap;
-    # lines are never NULL — posexplode of a filtered array)
+    # the md5 expression per row (the re-inlining trap the catalog plan
+    # sweep guards; lines are never NULL — posexplode of a filtered array)
     lines = base.select(
         id_col, F.posexplode("_arr").alias("_p0", "line")
     ).select(

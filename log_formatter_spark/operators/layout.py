@@ -80,9 +80,8 @@ def normalized_dims(ev: DataFrame, bits: int = Z_BITS) -> DataFrame:
     nothing). Every production ZORDER implementation therefore
     normalizes each column first; here it is exact integer min-max
     scaling, ``(v - min) * 2^bits div (span + 1)``, with the two
-    min/max pairs collected once (driver-sized, the anchor_units /
-    train_centroids precedent — a 1-row broadcast join would
-    constant-fold into the banned BroadcastNestedLoopJoin).
+    min/max pairs collected once (driver-sized — a 1-row broadcast
+    join would constant-fold into the banned BroadcastNestedLoopJoin).
 
     NULL user_id/ts rows are excluded (no layout home; the contract
     null rule).

@@ -1112,10 +1112,9 @@ def quantile_sample_error(
     rate: float = QS_RATE,
 ) -> DataFrame:
     """Sampled quantile estimation WITH its measured rank error — the
-    sketch-validation harness for order statistics (the ann_recall
-    pattern: run the cheap estimator and the exact baseline side by
-    side, report the error, let the pipeline decide when the sample
-    suffices). Unlike ``percentile_approx`` (t-digest, not
+    sketch-validation harness for order statistics: run the cheap
+    estimator and the exact baseline side by side, report the error,
+    let the pipeline decide when the sample suffices. Unlike ``percentile_approx`` (t-digest, not
     reproducible cross-engine), the estimator here is a DETERMINISTIC
     md5-coin Bernoulli sample + the same rank-select both engines run
     — so the whole report is hash-exact, sample included.

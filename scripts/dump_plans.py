@@ -12,15 +12,12 @@ import re
 import sys
 
 from log_formatter_spark import contract, get_spark
-from log_formatter_spark.pipeline import PipelineOptions, full_pipeline
-from log_formatter_spark.transcripts import transcripts_from_events
 
 SHOWCASE = [
     ("pipeline_counts_jvm", "flagship DAG, jvm parse engine"),
     ("pipeline_counts", "flagship DAG, arrow parse engine"),
     ("dedup_minhash", "MinHash-LSH banded candidate pairs"),
     ("dedup_simhash_pairs", "pigeonhole-blocked SimHash pairs"),
-    ("similarity_ivf", "IVF ANN top-k (map-only assignment, broadcast probes)"),
     ("asof_last_click", "as-of join (union+window, no join node)"),
     ("regional_revenue", "Q5-shape join graph (dims broadcast)"),
     ("corpus_filter", "single-pass composite corpus cleaner"),
@@ -30,14 +27,11 @@ SHOWCASE = [
     ("decontaminate", "eval-set decontamination (broadcast eval shingles)"),
     ("incremental_dedup", "new-batch-vs-corpus dedup (key-index join, batch-side window)"),
     ("classifier_margin", "hashed linear classifier (zero-exchange fold)"),
-    ("pq_codes", "product-quantization encode (map-only literal-centroid argmin)"),
-    ("pq_topk", "ADC search over PQ codes (broadcast query dot-tables)"),
     ("dsir_contrast", "DSIR importance contrast (two broadcast prob tables)"),
     ("incremental_neardup", "verify-inline band probe (ONE join, signatures ride)"),
     ("neardup_indexed", "ingest probe of the persisted band index"),
     ("source_overlap", "cross-source containment over banded MinHash pairs"),
     ("source_drift", "exact-integer TV drift (window-attached corpus total)"),
-    ("embedding_outliers", "per-cell cos-to-centroid percent-rank flags"),
     ("exact_substring_spans", "positional-shingle diagonal runs (Lee et al. regime)"),
     ("classifier_train_step", "one logreg gradient step (256-key aggregate)"),
     ("dup_families", "multi-signal families (SHARED candidate set, star exact tier)"),
@@ -61,8 +55,6 @@ SHOWCASE = [
     ("hll_distinct_users", "HyperLogLog registers (two streaming aggs, no distinct pass)"),
     ("ngram_novelty", "n-gram novelty vs reference (int64 gram join, no probe distinct)"),
     ("stitch_fragments", "fragment stitching (boundary equi-join, count-window guard)"),
-    ("hard_negatives", "hard-negative mining (shared IVF cell pass, label-filtered rank)"),
-    ("contrastive_triplets", "triplet assembly (ONE scored pass, join-free struct-max positive)"),
     ("length_buckets", "bucketed-padding report (map-only count, bounded 13-group aggregate)"),
     ("containment_pairs", "doc-in-doc containment (inverted-index blocking, hot-shingle guard)"),
     ("containment_probe", "bipartite ingest containment gate (stateless below pair aggregate)"),

@@ -12,10 +12,6 @@ original while cross-replica collisions vanish:
 - documents: per-replica Caesar rotation of letters (+ digit rotation).
   Token boundaries, lengths and duplicate groups are preserved within a
   replica; across replicas no shingle ever matches.
-- embeddings: per-replica deterministic sign-flip pattern over
-  dimensions — an orthogonal transform, so within-replica cosines are
-  bit-identical to the original corpus; across replicas vectors
-  decorrelate.
 - events: user_id shifted by a replica offset (new conversations, same
   per-conversation turn structure).
 
@@ -76,26 +72,6 @@ def main() -> None:
         )
     _union_write(doc_parts, f"{out}/documents.parquet", 32)
 
-    emb = spark.read.parquet(f"{src}/embeddings.parquet")
-    n_vec = emb.agg(F.max("vec_id")).first()[0] + 1
-    emb_parts = []
-    for r in range(k):
-        # sign of dim j in replica r: flip iff bit (j % 7) of (r * 2654435761) is set
-        mask = (r * 2654435761) & 0x7F
-        signs = [(-1.0 if (mask >> (j % 7)) & 1 else 1.0) for j in range(64)]
-        emb_parts.append(
-            emb.select(
-                (F.col("vec_id") + F.lit(r * n_vec)).alias("vec_id"),
-                F.zip_with(
-                    F.col("embedding"),
-                    F.array(*[F.lit(s) for s in signs]).cast("array<float>"),
-                    lambda x, s: x * s,
-                ).alias("embedding"),
-                "label",
-            )
-        )
-    _union_write(emb_parts, f"{out}/embeddings.parquet", 16)
-
     ev = spark.read.parquet(f"{src}/events.parquet")
     n_users = ev.agg(F.max("user_id")).first()[0] + 1
     ev_parts = [
@@ -137,7 +113,6 @@ def main() -> None:
     print(
         f"wrote {k}x scale-up of {src} to {out}: "
         f"{spark.read.parquet(f'{out}/documents.parquet').count()} docs, "
-        f"{spark.read.parquet(f'{out}/embeddings.parquet').count()} vecs, "
         f"{spark.read.parquet(f'{out}/events.parquet').count()} events"
     )
     spark.stop()

@@ -10,24 +10,6 @@ import pytest
 
 from log_formatter_spark import contract
 
-# Exact baselines that are MEANT to be quadratic/non-equi on small
-# blocks (their bucketed scale paths are separate catalog entries):
-#   similarity_topk  — broadcast non-equi join, query side tiny by design
-#   ann_recall_*     — recall measurement harness: compares the ANN list
-#                      against the exact baseline by definition
-#   pq_topk          — ADC scan: every candidate is scored (that is the
-#                      point — m table lookups each, no float vectors),
-#                      so the tiny broadcast query side joins non-equi;
-#                      cell-pruned variants compose with ivf/lsh buckets
-CROSS_PRODUCT_OK = {
-    "similarity_topk",
-    "ann_recall_ivf", "ann_recall_lsh", "ann_recall_pq", "pq_topk",
-    #   ann_ndcg_ivf     — same measurement-harness shape as ann_recall:
-    #                      the exact baseline side is the documented
-    #                      broadcast non-equi scan
-    "ann_ndcg_ivf",
-}
-
 # streaming_pipeline_counts executes a full streaming job on call, and
 # its result is a read of materialized output — no single plan to audit
 SKIP = {"streaming_pipeline_counts"}
@@ -40,14 +22,13 @@ def test_no_scale_killer_nodes(spark, sf_dir, name):
     df = contract.queries()[name](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF"
-    if name not in CROSS_PRODUCT_OK:
-        assert "CartesianProduct" not in plan, f"{name}: cross product"
-        assert "BroadcastNestedLoopJoin" not in plan, f"{name}: nested-loop join"
+    assert "CartesianProduct" not in plan, f"{name}: cross product"
+    assert "BroadcastNestedLoopJoin" not in plan, f"{name}: nested-loop join"
     # Nullable computed INNER-join keys make Catalyst push an
     # isnotnull(key) filter below the projection, re-inlining the whole
-    # (interpreted, HOF) expression per row — the similarity_ivf 3.7×
-    # regression (BENCH.md §8). Flag any filter that re-evaluates a
-    # higher-order function.
+    # (interpreted, HOF) expression per row — a 3.7× regression once
+    # measured on an IVF top-k query (BENCH.md §8). Flag any filter
+    # that re-evaluates a higher-order function.
     for line in plan.splitlines():
         s = line.strip()
         if s.startswith(("Filter", "+- Filter", ":- Filter")) and "isnotnull" in s:

@@ -60,7 +60,7 @@ def _py_train(doc_rows, n_iter: int, lr: float) -> list[float]:
 
 def test_trainer_matches_pure_python(spark, docs):
     from log_formatter_spark.functions.text import tokens
-    from log_formatter_spark.functions.classifier import clear_anchor_memo
+    from log_formatter_spark.functions.classifier import clear_train_memo
 
     rows = docs.select(
         tokens(F.coalesce(F.col("text"), F.lit(""))).alias("toks"),
@@ -68,7 +68,7 @@ def test_trainer_matches_pure_python(spark, docs):
     ).collect()
     expected = _py_train([(list(r["toks"]), r["y"]) for r in rows], n_iter=4, lr=0.5)
 
-    clear_anchor_memo()
+    clear_train_memo()
     got = C.train_hashed_logreg(docs, n_iter=4, lr=0.5)
     assert got == expected, "trainer must be bit-exact vs the Python replica"
     # memo hit returns the identical weights
@@ -146,5 +146,5 @@ def test_training_memo_sees_path_overwrite(spark, tmp_path):
     w2 = C.train_hashed_logreg(spark.read.parquet(path), n_iter=2)
     assert w2 != w1, "overwritten path must miss the training memo"
 
-    C.clear_anchor_memo()
+    C.clear_train_memo()
     assert C.train_hashed_logreg(spark.read.parquet(path), n_iter=2) == w2

@@ -1,34 +1,22 @@
-"""Cross-source overlap audit + embedding outlier scoring vs replicas.
+"""Cross-source overlap and drift audits vs pure-Python replicas.
 
 `source_overlap`'s aggregation is re-derived in pure Python on top of
-`dedup.minhash_pairs` (itself oracle-validated); `embedding_outliers`
-is re-derived with dense numpy linear algebra end-to-end (assignment,
-cosine-to-centroid, per-cell percent rank).
+`dedup.minhash_pairs` (itself oracle-validated).
 """
 
 from __future__ import annotations
 
 from collections import defaultdict
 
-import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
-from log_formatter_spark.operators import dedup, similarity
+from log_formatter_spark.operators import dedup
 from log_formatter_spark.operators.corpus import OVERLAP_MIN_EST, source_overlap
-
-K = 8
-BOTTOM = 0.1
 
 
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-@pytest.fixture(scope="module")
-def emb(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 def test_source_overlap_matches_pair_replica(docs):
@@ -63,71 +51,6 @@ def test_source_overlap_is_symmetric_in_observation(docs):
     for r in rows:
         assert 0 < r["dup_docs"] <= r["n_docs"]
         assert 0.0 < r["containment"] <= 1.0
-
-
-def test_embedding_outliers_matches_numpy_replica(emb):
-    rows = sorted(
-        ((r["vec_id"], list(r["embedding"])) for r in emb.collect()),
-        key=lambda t: t[0],
-    )
-    ids = np.array([t[0] for t in rows])
-    V = np.array([t[1] for t in rows], dtype=np.float64)
-    V = V / np.linalg.norm(V, axis=1, keepdims=True)
-    cents = V[:K]
-    dots = V @ cents.T
-    cell = (K - 1) - np.argmax(dots[:, ::-1], axis=1)  # higher cid wins ties
-    cos = dots[np.arange(len(ids)), cell]
-    expected = {}
-    for c in set(cell):
-        members = np.where(cell == c)[0]
-        vals = cos[members]
-        n = len(members)
-        for j in members:
-            rank = int((vals < cos[j]).sum())  # percent_rank: (rank-1)/(n-1)
-            pct = 0.0 if n == 1 else rank / (n - 1)
-            expected[int(ids[j])] = (int(c), float(cos[j]), pct, pct <= BOTTOM)
-    got = {
-        r["vec_id"]: (r["cell"], r["cos_centroid"], r["pct"], r["is_outlier"])
-        for r in similarity.embedding_outliers(
-            emb, n_clusters=K, bottom_frac=BOTTOM
-        ).collect()
-    }
-    assert set(got) == set(expected)
-    for vid, (c, cs, pct, flag) in expected.items():
-        g_c, g_cs, g_pct, g_flag = got[vid]
-        assert g_c == c, vid
-        assert g_cs == pytest.approx(cs, abs=1e-9), vid
-        assert g_pct == pytest.approx(pct, abs=1e-12), vid
-        assert g_flag == flag, vid
-
-
-def test_embedding_outliers_flags_worst_and_bounded(emb):
-    out = similarity.embedding_outliers(emb, n_clusters=K, bottom_frac=BOTTOM)
-    rows = out.collect()
-    assert len(rows) == emb.count()
-    flagged = [r for r in rows if r["is_outlier"]]
-    assert flagged  # exercised
-    # the farthest vector of every cell is always flagged (pct = 0)
-    per_cell_min = {}
-    for r in rows:
-        cur = per_cell_min.get(r["cell"])
-        if cur is None or r["cos_centroid"] < cur["cos_centroid"]:
-            per_cell_min[r["cell"]] = r
-    assert all(r["is_outlier"] for r in per_cell_min.values())
-    # percent_rank <= bottom_frac bounds the flagged share per cell
-    by_cell = defaultdict(list)
-    for r in rows:
-        by_cell[r["cell"]].append(r)
-    for members in by_cell.values():
-        n_flag = sum(r["is_outlier"] for r in members)
-        assert n_flag <= max(1, int(BOTTOM * (len(members) - 1)) + 1)
-
-
-def test_embedding_outliers_empty_input(spark):
-    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    out = similarity.embedding_outliers(empty, n_clusters=K)
-    assert out.count() == 0
-    assert out.columns == ["vec_id", "cell", "cos_centroid", "pct", "is_outlier"]
 
 
 def test_source_drift_matches_python_replica(docs):

@@ -72,15 +72,11 @@ def _cached_rdd_ids(spark):
 def test_no_leaked_caches_after_pair_queries(spark, sf_dir):
     # baseline-diff, not absolute-zero: earlier tests may hold live
     # result DataFrames whose backing localCheckpoint block is
-    # caller-owned by design (cluster_pairs docstring) — THESE pair
-    # queries must themselves leak nothing
+    # caller-owned by design (cluster_pairs docstring) — THIS pair
+    # query must itself leak nothing
     before = _cached_rdd_ids(spark)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    from log_formatter_spark.operators.similarity import lsh_topk
-
     dedup.minhash_pairs(docs, n=3).write.format("noop").mode("overwrite").save()
-    lsh_topk(emb, k=5).write.format("noop").mode("overwrite").save()
     leaked = _cached_rdd_ids(spark) - before
     assert not leaked, f"cached blocks leaked into storage memory: {leaked}"
 

@@ -1,6 +1,6 @@
 """Empty-input robustness: every major operator must plan and execute
 over zero-row inputs with a stable schema — no crashes from empty
-anchor collects, empty windows, or empty aggregations. (Limit(0) is the
+collects, empty windows, or empty aggregations. (Limit(0) is the
 verify probe for 'what happens on the first empty micro-batch'.)"""
 
 from __future__ import annotations
@@ -11,7 +11,7 @@ from log_formatter_spark.functions import multimodal
 from log_formatter_spark.functions import shingles as sh
 from log_formatter_spark.functions import text as T
 from log_formatter_spark.functions.redact import redact_text
-from log_formatter_spark.operators import corpus, dedup, sessions, similarity
+from log_formatter_spark.operators import corpus, dedup, sessions
 from log_formatter_spark.operators.parser import ParserConfig, apply_parser
 from log_formatter_spark.pipeline import full_pipeline
 from log_formatter_spark.transcripts import TRANSCRIPT_PATTERN, transcripts_from_events
@@ -20,11 +20,6 @@ from log_formatter_spark.transcripts import TRANSCRIPT_PATTERN, transcripts_from
 @pytest.fixture(scope="module")
 def empty_docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet").limit(0)
-
-
-@pytest.fixture(scope="module")
-def empty_emb(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(0)
 
 
 @pytest.fixture(scope="module")
@@ -78,19 +73,6 @@ def test_parser_on_empty_input(spark, empty_transcripts):
 )
 def test_doc_operators_on_empty_input(spark, empty_docs, build):
     assert build(empty_docs).count() == 0
-
-
-@pytest.mark.parametrize(
-    "build",
-    [
-        lambda e: similarity.brute_topk(e, k=5),
-        lambda e: similarity.lsh_topk(e, k=5),  # empty anchor collect
-        lambda e: similarity.ivf_topk(e, k=5),  # empty centroid collect
-        lambda e: similarity.label_centroids(e),
-    ],
-)
-def test_embedding_operators_on_empty_input(spark, empty_emb, build):
-    assert build(empty_emb).count() == 0
 
 
 def test_sessions_on_empty_input(spark, empty_transcripts):

@@ -8,11 +8,7 @@ exchange count for the flagship DAG.
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from log_formatter_spark.functions.text import text_stats
-from log_formatter_spark.operators.similarity import brute_topk
 from log_formatter_spark.pipeline import PipelineOptions, full_pipeline
 from log_formatter_spark.transcripts import transcripts_from_events
 
@@ -64,12 +60,6 @@ def test_corpus_filter_is_single_pass(spark, sf_dir):
     assert plan.count("Scan parquet") == 1, plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "Join" not in plan, plan
-
-
-def test_similarity_pushes_query_filter_to_scan(spark, sf_dir):
-    df = brute_topk(spark.read.parquet(f"{sf_dir}/embeddings.parquet"), k=5)
-    plan = _plan(df)
-    assert "PushedFilters: [IsNotNull(vec_id), LessThan(vec_id" in plan
 
 
 def test_parse_stays_whole_stage_codegen(spark, sf_dir):

@@ -1,5 +1,5 @@
 """Semantic tests for the round-3d operators: incremental batch dedup,
-hashed linear classifier, mixture assembly, product quantization.
+hashed linear classifier, mixture assembly.
 
 The contract replica (test_contract.py) already pins each against its
 DuckDB oracle; these tests pin the SEMANTICS — the properties that stay
@@ -14,17 +14,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from log_formatter_spark.functions import classifier
-from log_formatter_spark.operators import corpus, dedup, similarity
+from log_formatter_spark.operators import corpus, dedup
 
 
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-@pytest.fixture(scope="module")
-def emb(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 # --- incremental dedup ------------------------------------------------------
@@ -169,149 +164,6 @@ def test_mixture_epochs_empty(spark, docs):
     assert out.columns == ["doc_id", "source", "epoch", "mix_key"]
 
 
-# --- product quantization -----------------------------------------------------
-
-
-def test_pq_codes_shape_and_packing(spark, emb):
-    out = similarity.pq_codes(emb).collect()
-    assert len(out) == emb.count()
-    k = similarity.PQ_K
-    for r in out:
-        cs = [r[f"c{b}"] for b in range(similarity.PQ_BLOCKS)]
-        assert all(0 <= c < k for c in cs)
-        packed = 0
-        for c in cs:
-            packed = packed * k + c
-        assert r["code"] == packed
-
-
-def test_pq_adc_matches_python_reference(spark, emb):
-    """approx_cos must equal Σ_b dot(q_block, centroid[code_b]_block)
-    computed in plain Python over the same unit vectors — the ADC table
-    lookup is exact, not an approximation of the *score*."""
-    import math
-
-    vecs = {
-        r["vec_id"]: list(r["embedding"])
-        for r in emb.orderBy("vec_id").limit(80).collect()
-    }
-    units = {}
-    for i, v in vecs.items():
-        n = math.sqrt(sum((float(x)) * float(x) for x in v))
-        units[i] = [float(x) / n for x in v]
-    cents = [units[i] for i in sorted(units)[: similarity.PQ_K]]
-    bd = len(cents[0]) // similarity.PQ_BLOCKS
-
-    def code(u):
-        cs = []
-        for b in range(similarity.PQ_BLOCKS):
-            lo = b * bd
-            ds = [
-                sum((u[lo + t] - c[lo + t]) ** 2 for t in range(bd)) for c in cents
-            ]
-            cs.append(min(range(len(ds)), key=lambda j: (ds[j], j)))
-        return cs
-
-    out = similarity.pq_topk(emb, k=10).collect()
-    checked = 0
-    for r in out:
-        q, n = r["q_id"], r["neighbor_id"]
-        if q not in units or n not in units:
-            continue
-        cs = code(units[n])
-        expect = 0.0
-        for b in range(similarity.PQ_BLOCKS):
-            lo = b * bd
-            expect += sum(
-                units[q][lo + t] * cents[cs[b]][lo + t] for t in range(bd)
-            )
-        assert abs(r["approx_cos"] - expect) < 1e-9, (q, n)
-        checked += 1
-    assert checked >= 10
-
-
-def test_pq_topk_recall_floor(spark, emb):
-    """8-bit codes on a near-random corpus are coarse by design; the
-    test pins that ADC ranking still carries signal (recall@10 well
-    above the ~k/n random floor) and that every query returns k rows."""
-    k = 10
-    pq = similarity.pq_topk(emb, k=k)
-    ex = similarity.brute_topk(emb, k=k)
-    pqs = {(r["q_id"], r["neighbor_id"]) for r in pq.collect()}
-    exs = {(r["q_id"], r["neighbor_id"]) for r in ex.collect()}
-    assert len(pqs) == len(exs)
-    recall = len(pqs & exs) / len(exs)
-    n = emb.count()
-    assert recall >= 0.05 and recall > 3 * k / n, recall
-
-
-def test_pq_empty_input(spark, emb):
-    empty = emb.limit(0)
-    c = similarity.pq_codes(empty)
-    t = similarity.pq_topk(empty)
-    assert c.count() == 0 and t.count() == 0
-    assert c.columns == ["vec_id", "c0", "c1", "c2", "c3", "code"]
-    assert t.columns == ["q_id", "neighbor_id", "rank", "approx_cos"]
-
-
-def test_pq_trained_codebooks_improve_distortion(spark, emb):
-    """Trained per-sub-space codebooks must beat the anchor slices on
-    the thing k-means optimizes — total quantization distortion (sum of
-    squared L2 from each block slice to its assigned centroid). Recall
-    on the near-random contract corpus is too noisy to pin an ordering;
-    distortion is the training objective and must improve."""
-    import math
-
-    import numpy as np
-
-    rows = emb.orderBy("vec_id").collect()
-    X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    X = X / np.linalg.norm(X, axis=1, keepdims=True)
-    bd = X.shape[1] // similarity.PQ_BLOCKS
-
-    def distortion(blocks):
-        total = 0.0
-        for b, cb in enumerate(blocks):
-            Xb = X[:, b * bd : (b + 1) * bd]
-            C = np.array(cb)
-            d = ((Xb[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            total += d.min(axis=1).sum()
-        return total
-
-    from log_formatter_spark.operators.similarity import (
-        _pq_blocks,
-        anchor_units,
-        train_pq_codebooks,
-        with_unit,
-    )
-
-    u = with_unit(emb, "vec_id", "embedding")
-    _, anchor_blocks = _pq_blocks(
-        anchor_units(u, similarity.PQ_K), similarity.PQ_BLOCKS
-    )
-    bd_t, trained_blocks = train_pq_codebooks(emb)
-    assert bd_t == bd
-    d_anchor = distortion(anchor_blocks)
-    d_trained = distortion(trained_blocks)
-    assert d_trained < d_anchor, (d_trained, d_anchor)
-    assert math.isfinite(d_trained)
-
-
-def test_pq_trained_topk_runs_and_full(spark, emb):
-    out = similarity.pq_topk(emb, k=10, codebooks="trained").collect()
-    per_q = {}
-    for r in out:
-        per_q.setdefault(r["q_id"], set()).add(r["neighbor_id"])
-    assert per_q and all(len(v) == 10 for v in per_q.values())
-
-
-def test_ann_recall_pq_bounds(spark, emb):
-    rows = similarity.ann_recall(emb, method="pq").collect()
-    assert rows
-    for r in rows:
-        assert 0.0 <= r["recall"] <= 1.0
-
-
 # --- temporal split + DSIR contrast -------------------------------------------
 
 
@@ -395,32 +247,6 @@ def test_mixture_epochs_zero_drops_source(spark):
     rows = out.collect()
     assert {r["source"] for r in rows} == {"keep"}
     assert len(rows) == 4
-
-
-def test_pq_kernel_matches_expression_codes(spark, emb, monkeypatch):
-    """The Arrow encode kernel must produce the same codes as the
-    literal-expression argmin chains on the same codebooks (fp rounding
-    can only diverge at exact sq-dist ties, absent on this corpus)."""
-    expr_codes = {r["vec_id"]: r["code"] for r in similarity.pq_codes(emb).collect()}
-    monkeypatch.setattr(similarity, "_PQ_EXPR_MAX_KM", 0)
-    kern_codes = {r["vec_id"]: r["code"] for r in similarity.pq_codes(emb).collect()}
-    assert kern_codes == expr_codes
-    # and the ADC search still returns full, identically-ranked lists
-    out = similarity.pq_topk(emb, k=5).collect()
-    per_q = {}
-    for r in out:
-        per_q.setdefault(r["q_id"], []).append(r["neighbor_id"])
-    assert per_q and all(len(v) == 5 for v in per_q.values())
-
-
-def test_pq_trained_k16_kernel_config(spark, emb):
-    """Production config: k=16 trained codebooks per block (k*m = 64 >
-    _PQ_EXPR_MAX_KM, so both encode and query dtable take the Arrow
-    kernel path); results are full and deterministic across two runs."""
-    a = similarity.pq_topk(emb, k=10, n_centroids=16, codebooks="trained").collect()
-    b = similarity.pq_topk(emb, k=10, n_centroids=16, codebooks="trained").collect()
-    key = lambda rows: sorted((r["q_id"], r["rank"], r["neighbor_id"]) for r in rows)
-    assert key(a) == key(b) and len(a) > 0
 
 
 # --- validation report ---------------------------------------------------------
@@ -522,7 +348,7 @@ def test_compact_dir_rejects_remote_and_leftovers(spark, tmp_path):
     assert n >= 1 and spark.read.parquet(src).count() == 100
 
 
-def test_interval_and_neardup_empty_inputs(spark, docs, emb):
+def test_interval_and_neardup_empty_inputs(spark, docs):
     from log_formatter_spark.operators.asof import attribution_window
     from log_formatter_spark.operators.dedup import incremental_neardup
 
@@ -628,26 +454,6 @@ def test_sft_pairs_null_turns_excluded(spark):
 
     row3 = sft_pairs(t).collect()[0]
     assert row3["context_md5"] == hashlib.md5(b"user: hi").hexdigest()
-
-
-def test_pq_explicit_codebooks_override_n_blocks(spark, emb):
-    """Explicit codebooks define the block count; the n_blocks parameter
-    must not silently truncate the code (review finding)."""
-    bd, blocks8 = similarity.train_pq_codebooks(emb, n_centroids=2, n_blocks=8)
-    out = similarity.pq_codes(emb, codebooks=blocks8).columns
-    assert out == ["vec_id", *[f"c{b}" for b in range(8)], "code"]
-    topk = similarity.pq_topk(emb, k=5, codebooks=blocks8)
-    per_q = {}
-    for r in topk.collect():
-        per_q.setdefault(r["q_id"], []).append(r)
-    assert per_q and all(len(v) == 5 for v in per_q.values())
-
-
-def test_ann_recall_sql_rejects_unknown_method():
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        similarity.ann_recall_sql(method="pqq")
 
 
 def test_incremental_neardup_verify_inline_plan(spark, docs):

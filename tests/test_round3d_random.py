@@ -1,7 +1,7 @@
 """Randomized spec tests for the round-3d operators against brute-force
 pure-Python oracles (independent of the DuckDB renderings already
 checked in tests/test_contract.py): incremental_dedup, mixture_epochs,
-pq_codes (including engineered exact ties), temporal_split."""
+temporal_split."""
 
 from __future__ import annotations
 
@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from log_formatter_spark.operators.conversations import temporal_split
 from log_formatter_spark.operators.corpus import mixture_epochs
 from log_formatter_spark.operators.dedup import incremental_dedup
-from log_formatter_spark.operators.similarity import pq_codes
 
 
 def _norm(text: str) -> str:
@@ -74,30 +73,6 @@ def test_mixture_epochs_matches_bruteforce(spark):
     }
     assert {(r["doc_id"], r["epoch"]) for r in out} == expect
     assert len({r["mix_key"] for r in out}) == len(expect)
-
-
-def test_pq_codes_on_duplicate_vectors(spark):
-    """Exact duplicates of a centroid vector must encode to that
-    centroid's code in every block (zero distance beats everything and
-    ties resolve identically), and byte-identical vectors always share a
-    code — the property PQ-based dedup would rely on."""
-    rng = random.Random(99)
-    base = [[rng.uniform(-1, 1) for _ in range(16)] for _ in range(4)]
-    rows = []
-    for i in range(40):
-        if i % 4 == 0:
-            v = list(base[0])  # exact duplicates of anchor 0's vector
-        else:
-            v = [rng.uniform(-1, 1) for _ in range(16)]
-        rows.append(Row(vec_id=i, embedding=v))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = {r["vec_id"]: r for r in pq_codes(emb, n_blocks=4).collect()}
-    # anchor 0 == vec 0 (lowest id); every duplicate of it encodes to
-    # code 0 in all blocks
-    for i in range(0, 40, 4):
-        assert [out[i][f"c{b}"] for b in range(4)] == [0, 0, 0, 0], i
-    # byte-identical vectors share codes generally
-    assert len({out[i]["code"] for i in range(0, 40, 4)}) == 1
 
 
 def test_temporal_split_matches_bruteforce(spark):

@@ -1,112 +1,10 @@
-"""contrastive_triplets + length_buckets: semantics and edge cases."""
+"""length_buckets: semantics and edge cases."""
 
 from __future__ import annotations
 
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from log_formatter_spark.operators.packing import length_buckets
-from log_formatter_spark.operators.similarity import (
-    contrastive_triplets,
-    hard_negatives,
-)
-
-
-def test_triplets_shape_and_label_rules(spark, sf_dir):
-    """Positive shares the query's label, negatives differ, no self
-    pairs, neg_rank dense 1..<=m, margin = pos_cos - neg_cos."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    labels = {r["vec_id"]: r["label"] for r in emb.select("vec_id", "label").collect()}
-    rows = contrastive_triplets(emb, m=4).collect()
-    assert rows, "fixture must produce triplets"
-    by_q: dict[int, list[int]] = {}
-    for r in rows:
-        assert r["q_id"] not in (r["pos_id"], r["neg_id"])
-        assert labels[r["pos_id"]] == labels[r["q_id"]]
-        assert labels[r["neg_id"]] != labels[r["q_id"]]
-        assert r["margin"] == r["pos_cos"] - r["neg_cos"]
-        by_q.setdefault(r["q_id"], []).append(r["neg_rank"])
-    for q, ranks in by_q.items():
-        assert sorted(ranks) == list(range(1, len(ranks) + 1)), q
-        # exactly one positive per query
-        pos_ids = {r["pos_id"] for r in rows if r["q_id"] == q}
-        assert len(pos_ids) == 1, q
-
-
-def test_triplets_negatives_match_hard_negatives(spark, sf_dir):
-    """The negative side IS hard_negatives (same cells, same ranking) —
-    for every query that forms a positive."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    trip = contrastive_triplets(emb, m=4).collect()
-    assert trip
-    hn = {
-        (r["q_id"], r["rank"]): r["neg_id"]
-        for r in hard_negatives(emb, k=4).collect()
-    }
-    for r in trip:
-        assert hn[(r["q_id"], r["neg_rank"])] == r["neg_id"]
-
-
-def test_triplets_query_without_positive_drops(spark):
-    """A query whose label is unique in the corpus cannot form a
-    positive and emits nothing (inner semantics)."""
-    dim = 4
-    rows = [
-        Row(
-            vec_id=i,
-            embedding=[float((i * 7 + j * 3) % 5 - 2) for j in range(dim)],
-            label=99 if i == 1 else i % 2,
-        )
-        for i in range(40)
-    ]
-    emb = spark.createDataFrame(rows)
-    out = contrastive_triplets(emb, m=3, n_queries=4).collect()
-    assert out, "other queries still form triplets"
-    assert not [r for r in out if r["q_id"] == 1]
-
-
-def test_triplets_null_labels_never_participate(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
-        "label",
-        F.when(F.col("vec_id") % 3 == 0, F.lit(None)).otherwise(F.col("label")),
-    )
-    rows = contrastive_triplets(emb, m=4).collect()
-    assert rows
-    for r in rows:
-        assert r["q_id"] % 3 != 0
-        assert r["pos_id"] % 3 != 0
-        assert r["neg_id"] % 3 != 0
-
-
-def test_triplets_empty_corpus_schema_stable(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(0)
-    out = contrastive_triplets(emb, m=4)
-    assert out.count() == 0
-    assert [f.name for f in out.schema.fields] == [
-        "q_id",
-        "pos_id",
-        "neg_id",
-        "neg_rank",
-        "pos_cos",
-        "neg_cos",
-        "margin",
-    ]
-
-
-def test_triplets_vectorized_kernel_same_ids(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    fold = [
-        (r["q_id"], r["pos_id"], r["neg_id"], r["neg_rank"])
-        for r in contrastive_triplets(emb, m=4, verify="fold").collect()
-    ]
-    vec = [
-        (r["q_id"], r["pos_id"], r["neg_id"], r["neg_rank"])
-        for r in contrastive_triplets(emb, m=4, verify="vectorized").collect()
-    ]
-    assert sorted(fold) == sorted(vec)
-
-
-# --- length_buckets --------------------------------------------------------
 
 
 def test_length_buckets_hand_fixture(spark):
