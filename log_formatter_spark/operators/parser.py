@@ -39,6 +39,15 @@ engines, identical semantics:
   UDF ``str.extract`` fallback;
 - ``engine="jvm"`` → ``rlike``/``regexp_extract`` expressions inside
   whole-stage codegen (plan-time pruning of unused groups).
+
+A Python worker also pays a fixed cost per task, whatever its data.
+PySpark calls ``importlib.invalidate_caches()`` at the start of every
+task, and on CPython 3.11 that re-reads the directory of every zip
+archive on the worker's path (``pyspark.zip`` alone holds 1,328
+entries), about 0.2 s per task; CPython 3.12 made the re-read lazy
+(gh-103200). Both UDF bodies therefore first run
+``session.zip_reload_guard``'s installer, so that a reused worker
+re-reads only archives that changed.
 """
 
 from __future__ import annotations
@@ -53,6 +62,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import BooleanType, StringType, StructField, StructType
+
+from log_formatter_spark.session import zip_reload_guard
 
 PARSE_OK = "parse_ok"
 # Wrapper group capturing the whole match: lets one vectorized extract pass
@@ -74,7 +85,9 @@ class ParserConfig:
     target_field: str = "text"
     labels: tuple[LabelRule, ...] = field(default_factory=tuple)
     error_tolerant: bool = False
-    engine: str = "arrow"  # "arrow" (pandas UDF) | "jvm" (regexp_extract)
+    # "arrow" (arrow_udf, pandas UDF fallback for non-RE2 patterns) |
+    # "jvm" (regexp_extract)
+    engine: str = "arrow"
 
 
 def _kept_groups(pattern: str) -> list[str]:
@@ -103,8 +116,9 @@ def _re2_compatible(pattern: str) -> bool:
         return False
 
 
-def _arrow_extract_cols(pattern: str, target: str, with_flag: bool) -> dict[str, Column]:
-    """Build {name: Column} for one Arrow-vectorized extraction pass.
+def _parse_udf(pattern: str, with_flag: bool):
+    """The Arrow-vectorized extraction UDF: text in, a struct of the kept
+    groups (plus ``parse_ok`` when ``with_flag``) out.
 
     Fast path: ``pyarrow.compute.extract_regex`` — RE2 running in C++
     over the Arrow buffers, no pandas materialization, no GC pressure
@@ -112,7 +126,9 @@ def _arrow_extract_cols(pattern: str, target: str, with_flag: bool) -> dict[str,
     regex dialect). Non-match → null struct; a non-participating group
     in a match → "" — both precisely the Go semantics
     (util/regexp.go:12-21). Python-``re``-only patterns (backrefs,
-    lookaround) fall back to the pandas path.
+    lookaround) fall back to the pandas path. Neither body calls a
+    module-level function, so cloudpickle ships them by value and the
+    worker needs pyarrow and pandas, not this package, to run them.
     """
     kept = _kept_groups(pattern)
     use_re2 = _re2_compatible(pattern)
@@ -122,6 +138,7 @@ def _arrow_extract_cols(pattern: str, target: str, with_flag: bool) -> dict[str,
         [StructField(n, StringType()) for n in kept]
         + ([StructField(PARSE_OK, BooleanType())] if with_flag else [])
     )
+    install = zip_reload_guard()
 
     if use_re2:
         from pyspark.sql.functions import arrow_udf
@@ -131,20 +148,22 @@ def _arrow_extract_cols(pattern: str, target: str, with_flag: bool) -> dict[str,
         # over the pandas_udf wrapper of the same kernel).
         @arrow_udf(schema)
         def parse(arr: pa.Array) -> pa.Array:
+            install()
             res = pc.extract_regex(arr, pattern=pattern)
-            ok = pc.is_valid(res)
-            nulls = pa.nulls(len(arr), pa.string())
-            # matched rows: non-participating group -> "" (RE2 = Go
-            # parity); unmatched rows: null (label failure = null)
-            children = [pc.if_else(ok, res.field(n), nulls) for n in kept]
+            # flatten() merges the struct's validity into each child:
+            # unmatched rows are null (label failure = null), a
+            # non-participating group in a match stays "" (RE2 = Go parity)
+            groups = dict(zip([f.name for f in res.type], res.flatten()))
+            children = [groups[n] for n in kept]
             if with_flag:
-                children.append(ok)
+                children.append(pc.is_valid(res))
             return pa.StructArray.from_arrays(children, names=names)
 
     else:
 
         @pandas_udf(schema)
         def parse(s: pd.Series) -> pd.DataFrame:
+            install()
             # compiled once per executor python worker; ASCII \d \w \s as in RE2
             pat = re.compile(wrapped, re.ASCII)
             ext = s.str.extract(pat)
@@ -158,11 +177,14 @@ def _arrow_extract_cols(pattern: str, target: str, with_flag: bool) -> dict[str,
                 out[PARSE_OK] = ok
             return pd.DataFrame(out)
 
+    return parse
+
+
+def _arrow_extract_cols(pattern: str, target: str, with_flag: bool) -> dict[str, Column]:
+    """Build {name: Column} for one Arrow-vectorized extraction pass."""
+    parse = _parse_udf(pattern, with_flag)
     struct = parse(F.col(target))
-    cols = {n: struct.getField(n) for n in kept}
-    if with_flag:
-        cols[PARSE_OK] = struct.getField(PARSE_OK)
-    return cols
+    return {f.name: struct.getField(f.name) for f in parse.returnType.fields}
 
 
 _NAMED_GROUP = re.compile(r"\(\?P<[^>]+>")

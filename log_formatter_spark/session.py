@@ -23,8 +23,8 @@ def get_spark(
 
     - AQE on (coalesce + skew-join): runtime re-planning is our first line
       of skew defense; explicit salting (operators/skew.py) is the second.
-    - Arrow on: the grok parser is a vectorized pandas UDF (no per-row
-      Python, per the north rule).
+    - Arrow on: the grok parser's arrow engine is an ``arrow_udf`` (no
+      per-row Python, per the north rule).
     - UTC session timezone: keeps timestamp rendering identical between
       Spark and the DuckDB oracle over the same parquet files.
     """
@@ -74,3 +74,55 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def zip_reload_guard():
+    """Return ``install()``: called at the top of a UDF body, it makes the
+    Python worker re-read a zip archive's directory only when the archive
+    changed.
+
+    PySpark calls ``importlib.invalidate_caches()`` at the start of every
+    task, and on CPython 3.11 that re-reads the directory of every
+    ``zipimporter`` in pure Python (lazy since 3.12, gh-103200).
+    ``install()`` replaces ``zipimporter.invalidate_caches``, once per
+    worker process, with a version that re-reads an archive only when
+    its ``(st_mtime_ns, st_size)`` differs from the stamp of that
+    importer's last read, so a changed or newly added archive is still
+    re-read. It is a nested function, so cloudpickle ships it by value
+    and the worker needs only the standard library to run it.
+    """
+
+    def install() -> None:
+        import os
+        import sys
+        import zipimport
+
+        cls = zipimport.zipimporter
+        if "_lfs_unguarded" in cls.__dict__:
+            return
+        reload = cls.invalidate_caches
+
+        def stamp(archive):
+            try:
+                st = os.stat(archive)
+            except OSError:
+                return None
+            return st.st_mtime_ns, st.st_size
+
+        def invalidate_caches(self):
+            # stat before the read: an archive rewritten during the read
+            # leaves an older stamp, so the next call reads it again
+            now = stamp(self.archive)
+            if now is None or now != getattr(self, "_lfs_stamp", None):
+                reload(self)
+                self._lfs_stamp = now
+
+        # the task's set-up (setup_spark_files) has just re-read every
+        # archive known so far, and no worker file changes mid-task
+        for imp in list(sys.path_importer_cache.values()):
+            if isinstance(imp, cls):
+                imp._lfs_stamp = stamp(imp.archive)
+        cls._lfs_unguarded = reload
+        cls.invalidate_caches = invalidate_caches
+
+    return install

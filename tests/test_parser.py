@@ -8,14 +8,28 @@ two-level labels, and arrow/jvm engine agreement.
 
 from __future__ import annotations
 
+import glob
+import importlib
+import os
+import pickle
+import subprocess
+import sys
+import zipfile
+import zipimport
+
+import pandas as pd
+import pyarrow as pa
 import pytest
+from pyspark import cloudpickle
 from pyspark.sql import Row
 
 from log_formatter_spark.operators.parser import (
     LabelRule,
     ParserConfig,
+    _parse_udf,
     apply_parser,
 )
+from log_formatter_spark.session import zip_reload_guard
 
 PAT = (
     r"(?P<ts_str>\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}) "
@@ -116,3 +130,97 @@ def test_engines_agree(spark):
     a = apply_parser(_df(spark, texts), ParserConfig(PAT, engine="arrow"))
     j = apply_parser(_df(spark, texts), ParserConfig(PAT, engine="jvm"))
     assert sorted(map(str, a.collect())) == sorted(map(str, j.collect()))
+
+
+@pytest.fixture
+def restore_zipimporter():
+    """Undo what ``zip_reload_guard``'s installer does to this process."""
+    cls = zipimport.zipimporter
+    saved = cls.__dict__["invalidate_caches"]
+    yield
+    cls.invalidate_caches = saved
+    if "_lfs_unguarded" in cls.__dict__:
+        del cls._lfs_unguarded
+    for imp in list(sys.path_importer_cache.values()):
+        if isinstance(imp, cls):
+            imp.__dict__.pop("_lfs_stamp", None)
+
+
+# Loads a pickled UDF function and applies it to the flagship line, a
+# non-match and a NULL, in a process where this package is not importable.
+_APPLY_UNPICKLED = """
+import pickle, sys
+import pyarrow as pa
+with open("fn.pkl", "rb") as f:
+    fn, as_pandas = pickle.load(f)
+arr = pa.array(sys.argv[1:] + [None])
+out = fn(arr.to_pandas() if as_pandas else arr)
+leaked = sorted(m for m in sys.modules if m.startswith("log_formatter_spark"))
+with open("out.pkl", "wb") as f:
+    pickle.dump((out, leaked), f)
+"""
+
+
+# the pandas fallback: RE2 rejects the lookahead
+@pytest.mark.parametrize("pattern", [PAT, PAT + r"(?!\d)"], ids=["arrow", "pandas"])
+def test_parse_udf_ships_by_value(tmp_path, restore_zipimporter, pattern):
+    # Spark's workers unpickle the UDF body: it must carry everything it
+    # calls, so a worker without this package on its path can run it
+    fn = _parse_udf(pattern, with_flag=True).func
+    as_pandas = pattern != PAT
+    with open(tmp_path / "fn.pkl", "wb") as f:
+        f.write(cloudpickle.dumps((fn, as_pandas)))
+    zips = glob.glob(os.path.join(os.environ.get("SPARK_HOME", ""), "python", "lib", "*.zip"))
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(zips)}
+    lines = [GOOD, "nope"]
+    subprocess.run(
+        [sys.executable, "-c", _APPLY_UNPICKLED, *lines],
+        cwd=tmp_path, env=env, check=True, timeout=120,
+    )
+    with open(tmp_path / "out.pkl", "rb") as f:
+        got, leaked = pickle.load(f)
+    assert leaked == []
+    arr = pa.array(lines + [None])
+    want = fn(arr.to_pandas() if as_pandas else arr)
+    if as_pandas:
+        pd.testing.assert_frame_equal(got, want)
+    else:
+        assert got.equals(want)
+
+
+def _write_zip(path, modules: dict[str, str]) -> None:
+    with zipfile.ZipFile(path, "w") as z:
+        for name, src in modules.items():
+            z.writestr(f"{name}.py", src)
+
+
+def test_zip_reload_guard_rereads_only_changed_archives(
+    tmp_path, monkeypatch, restore_zipimporter
+):
+    archive = str(tmp_path / "mods.zip")
+    _write_zip(archive, {"lfs_zipmod_a": "X = 1\n"})
+    monkeypatch.syspath_prepend(archive)
+    assert importlib.import_module("lfs_zipmod_a").X == 1
+    zip_reload_guard()()
+
+    reads = []
+    read_directory = zipimport._read_directory
+    monkeypatch.setattr(
+        zipimport, "_read_directory", lambda a: reads.append(a) or read_directory(a)
+    )
+    importlib.invalidate_caches()
+    n_first = len(reads)
+    importlib.invalidate_caches()
+    assert len(reads) == n_first  # unchanged archives are not re-read
+    assert archive not in reads
+
+    st = os.stat(archive)
+    _write_zip(archive, {"lfs_zipmod_a": "X = 1\n", "lfs_zipmod_b": "Y = 2\n"})
+    os.utime(archive, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    importlib.invalidate_caches()
+    assert importlib.import_module("lfs_zipmod_b").Y == 2
+    # a changed archive is re-read: at once before CPython 3.12, on the
+    # next import from 3.12 on (gh-103200)
+    assert archive in reads
+    for name in ("lfs_zipmod_a", "lfs_zipmod_b"):
+        del sys.modules[name]
