@@ -8,9 +8,20 @@ agent/input/kafka/kafka.go:33) map to core count / shuffle partitions here.
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+JVM_SRC_DIR = os.path.join(os.path.dirname(__file__), "jvm")
+LOCAL_FS = "log_formatter_spark.jvm.ForklessLocalFileSystem"
 
 
 def get_spark(
@@ -27,6 +38,8 @@ def get_spark(
       per-row Python, per the north rule).
     - UTC session timezone: keeps timestamp rendering identical between
       Spark and the DuckDB oracle over the same parquet files.
+    - ``file:`` is ``jvm/ForklessLocalFileSystem.java``, when this call
+      launches the JVM (one started elsewhere cannot load the class).
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or None
@@ -71,9 +84,74 @@ def get_spark(
             "-XX:+UseG1GC -XX:MaxGCPauseMillis=500",
         )
     )
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        for k, v in local_fs_conf(jvm_jar()).items():
+            builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_fs_conf(jar: str) -> dict[str, str]:
+    """Spark conf that makes ``file:`` the forkless local file system
+    from ``jar``, for the FileSystem and the FileContext API alike.
+
+    Without ``libhadoop.so`` Hadoop's local file system forks ``chmod``
+    after every mkdir and permissioned create, and ``readlink`` for
+    every link status a FileContext reads (the streaming checkpoint);
+    the replacement does both in-process and keeps the ``.crc``
+    checksum files."""
+    return {
+        "spark.driver.extraClassPath": jar,
+        "spark.executor.extraClassPath": jar,
+        "spark.hadoop.fs.file.impl": LOCAL_FS,
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": LOCAL_FS + "$Fs",
+    }
+
+
+def jvm_jar() -> str:
+    """The jar of ``jvm/*.java``, compiled with ``javac`` against the
+    Spark jars once per sha256 of the sources and cached under
+    ``$XDG_CACHE_HOME/log_formatter_spark/`` (default ``~/.cache``). The
+    jar is built in a temporary directory and moved into place with
+    ``os.replace``, so concurrent sessions never see a partial jar."""
+    sources = sorted(glob.glob(os.path.join(JVM_SRC_DIR, "*.java")))
+    digest = hashlib.sha256()
+    for src in sources:
+        with open(src, "rb") as f:
+            digest.update(os.path.basename(src).encode() + b"\0" + f.read() + b"\0")
+    cache = os.path.join(
+        os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
+        "log_formatter_spark",
+    )
+    jar = os.path.join(cache, f"lfs-jvm-{digest.hexdigest()[:16]}.jar")
+    if os.path.exists(jar):
+        return jar
+    java_home = os.environ.get("JAVA_HOME")
+    javac = (java_home and shutil.which("javac", path=os.path.join(java_home, "bin"))) or (
+        shutil.which("javac")
+    )
+    if not javac:
+        raise RuntimeError(
+            "log_formatter_spark needs a JDK: no javac on JAVA_HOME/bin or PATH "
+            f"to compile {JVM_SRC_DIR}/*.java"
+        )
+    os.makedirs(cache, exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=cache) as tmp:
+        classes = os.path.join(tmp, "classes")
+        classpath = os.path.join(_find_spark_home(), "jars", "*")
+        cmd = [javac, "--release", "17", "-cp", classpath, "-d", classes, *sources]
+        done = subprocess.run(cmd, capture_output=True, text=True)
+        if done.returncode:
+            raise RuntimeError(f"javac failed on {JVM_SRC_DIR}:\n{done.stderr}")
+        built = os.path.join(tmp, "out.jar")
+        with zipfile.ZipFile(built, "w", zipfile.ZIP_DEFLATED) as z:
+            for root, _dirs, files in os.walk(classes):
+                for name in files:
+                    path = os.path.join(root, name)
+                    z.write(path, os.path.relpath(path, classes))
+        os.replace(built, jar)
+    return jar
 
 
 def zip_reload_guard():

@@ -21,9 +21,13 @@ A name→writer registry mirrors the reference's output factory registry
 
 from __future__ import annotations
 
+import glob
 import os
+import re
+from collections import Counter
 from collections.abc import Callable
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from log_formatter_spark.operators.aggregate import sink_aggregates
@@ -69,18 +73,32 @@ def write_routed(
 
 def write_pipeline_output(
     df: DataFrame, routed_dir: str, agg_dir: str, mode: str = "overwrite"
-) -> DataFrame:
+) -> None:
     """Write the routed rows once, then the per-sink (route, role, tool,
     hour) aggregate of the committed rows to ``agg_dir`` as flat parquet.
     The aggregate reads the routed parquet back, pruned to its key
     columns, instead of caching ``df``; the read takes ``df``'s schema,
-    as a write of zero rows leaves no file to infer one from. Returns
-    the read-back for further counts."""
+    as a write of zero rows leaves no file to infer one from."""
     write_routed(df, routed_dir, mode=mode, fmt="parquet")
     read = df.sparkSession.read.schema(df.schema).option("basePath", routed_dir)
-    committed = read.parquet(routed_dir)
-    sink_aggregates(committed).coalesce(1).write.mode("overwrite").parquet(agg_dir)
-    return committed
+    sink_aggregates(read.parquet(routed_dir)).coalesce(1).write.mode("overwrite").parquet(agg_dir)
+
+
+def routed_row_counts(routed_dir: str) -> Counter:
+    """Rows per route value of a committed ``partitionBy(route)`` parquet
+    write, from the part files' footers (no Spark job). Directory names
+    are unescaped as Spark escapes them; the null partition
+    (``__HIVE_DEFAULT_PARTITION__``, also where an empty route lands)
+    counts under ``None``, as a read-back would see it."""
+    counts: Counter = Counter()
+    for f in glob.glob(os.path.join(routed_dir, f"{ROUTE}=*", "*.parquet")):
+        value = os.path.basename(os.path.dirname(f)).split("=", 1)[1]
+        if value == "__HIVE_DEFAULT_PARTITION__":
+            value = None
+        else:
+            value = re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m[1], 16)), value)
+        counts[value] += pq.read_metadata(f).num_rows
+    return counts
 
 
 def _write_routed_iceberg(df: DataFrame, table: str) -> None:

@@ -23,9 +23,8 @@ genuinely unbounded late data is ``streaming_hourly_counts``.
 from __future__ import annotations
 
 import os
-from collections import Counter
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -39,7 +38,11 @@ from log_formatter_spark.operators.parser import PARSE_OK
 from log_formatter_spark.operators.route import DEFAULT_ROUTES, ROUTE
 from log_formatter_spark.pipeline import PipelineOptions
 from log_formatter_spark.plans.planner import apply_pipeline
-from log_formatter_spark.sinks.writer import read_sink, write_pipeline_output
+from log_formatter_spark.sinks.writer import (
+    read_sink,
+    routed_row_counts,
+    write_pipeline_output,
+)
 from log_formatter_spark.streaming.ledger import MetricsLedger
 
 # input_hint schema (BASELINE.json)
@@ -119,20 +122,33 @@ def run_streaming_pipeline(
     stream = stream_transcripts(spark, src_dir, max_files_per_trigger)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        committed = write_pipeline_output(
-            apply_pipeline(batch_df, pipe),
-            os.path.join(out_dir, "routed", f"batch_id={batch_id}"),
+        # metrics without a count job: the routed write observes its
+        # rows, and the per-route counts come from the committed footers
+        seen = Observation(f"batch_{batch_id}")
+        routed_dir = os.path.join(out_dir, "routed", f"batch_id={batch_id}")
+        write_pipeline_output(
+            apply_pipeline(batch_df, pipe).observe(
+                seen, F.count(F.lit(1)).alias("n"), F.count_if(F.col(PARSE_OK)).alias("ok")
+            ),
+            routed_dir,
             os.path.join(out_dir, "agg", f"batch_id={batch_id}"),
         )
-        # metrics: one grouped count pass over the committed rows
-        counts, ok = Counter(), 0
-        for r in committed.groupBy(ROUTE, PARSE_OK).count().collect():
-            counts[f"routed_{r[ROUTE]}"] += r["count"]
-            ok += r["count"] if r[PARSE_OK] else 0
-        total = sum(counts.values())
+        observed = seen.get
+        total, ok = observed["n"], observed["ok"]
+        routed = routed_row_counts(routed_dir)
+        if sum(routed.values()) != total:
+            raise RuntimeError(
+                f"batch {batch_id}: {routed_dir} holds {sum(routed.values())} rows, "
+                f"the write observed {total}"
+            )
         ledger.record_batch(
             batch_id,
-            {"rows_in": total, "rows_parsed": ok, "rows_discarded": total - ok, **counts},
+            {
+                "rows_in": total,
+                "rows_parsed": ok,
+                "rows_discarded": total - ok,
+                **{f"routed_{r}": n for r, n in routed.items()},
+            },
         )
 
     q = (

@@ -17,12 +17,23 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+# nullable, as a Spark write of the same rows would declare it
+LEDGER_SCHEMA = pa.schema(
+    [("metric", pa.string()), ("batch_value", pa.int64()), ("cumulative", pa.int64())]
+)
 
 
 class MetricsLedger:
+    """The partitions are small (one row per metric), so they are read
+    and written with pyarrow on the driver, without a Spark job."""
+
     CORE = ("rows_in", "rows_parsed", "rows_discarded")
 
     def __init__(self, spark: SparkSession, routes: list[str], ledger_dir: str):
@@ -47,7 +58,7 @@ class MetricsLedger:
         if not parts:
             return {}
         last = max({os.path.dirname(p) for p in parts}, key=lambda d: int(d.rsplit("=", 1)[1]))
-        return {r["metric"]: int(r["cumulative"]) for r in self.spark.read.parquet(last).collect()}
+        return _read_partition(last, "cumulative")
 
     def _read_batch_values(self, batch_id: int) -> dict[str, int]:
         """Previously recorded batch_values for one batch (empty if the
@@ -55,11 +66,10 @@ class MetricsLedger:
         path = os.path.join(self.ledger_dir, f"batch_id={batch_id}")
         if not os.path.isdir(path):
             return {}
-        df = self.spark.read.parquet(path)
-        return {r["metric"]: int(r["batch_value"]) for r in df.collect()}
+        return _read_partition(path, "batch_value")
 
     def record_batch(self, batch_id: int, counts: dict[str, int]) -> None:
-        """Fold batch counts into the accumulators and append the batch's
+        """Fold batch counts into the accumulators and replace the batch's
         ledger partition (idempotent: overwrite by batch_id).
 
         Mid-batch-crash replay: if the job died after this ledger write
@@ -70,7 +80,13 @@ class MetricsLedger:
         counts, so cumulative counters stay exact (never double) for
         this batch and every later one. Data sinks are overwrite-by-
         batch_id and thus already idempotent; this closes the same gap
-        for the metrics."""
+        for the metrics.
+
+        The partition is written to a hidden directory beside it, then
+        the old partition is removed and the new one renamed into place.
+        A crash between the two leaves no partition for the batch:
+        _recover() then seeds from the previous batch, and the replay
+        adds the batch once."""
         for name, v in self._read_batch_values(batch_id).items():
             if name in self.acc:
                 self.acc[name].add(-int(v))
@@ -78,20 +94,28 @@ class MetricsLedger:
             if name not in self.acc:
                 self.acc[name] = self.spark.sparkContext.accumulator(0)
             self.acc[name].add(int(v))
-        # column literals, not a SQL string (route names can hold quotes);
-        # the cast names the columns and keeps them nullable (optional in
-        # the parquet schema)
-        rows = [
-            F.struct(F.lit(name), F.lit(int(counts.get(name, 0))), F.lit(int(self.acc[name].value)))
-            for name in sorted(self.acc)
-        ]
-        schema = "array<struct<metric string, batch_value bigint, cumulative bigint>>"
-        df = self.spark.range(1, numPartitions=1).select(F.inline(F.array(*rows).cast(schema)))
+        names = sorted(self.acc)
+        table = pa.table(
+            [names, [int(counts.get(n, 0)) for n in names], [int(self.acc[n].value) for n in names]],
+            schema=LEDGER_SCHEMA,
+        )
         path = os.path.join(self.ledger_dir, f"batch_id={batch_id}")
-        df.write.mode("overwrite").parquet(path)
+        # a leading "." keeps Spark's and pyarrow's readers out of it
+        tmp = os.path.join(self.ledger_dir, f".batch_id={batch_id}.{uuid.uuid4().hex}")
+        os.makedirs(tmp)
+        pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
+        if os.path.isdir(path):
+            shutil.rmtree(path)
+        os.rename(tmp, path)
 
     def snapshot(self) -> dict[str, int]:
         return {n: a.value for n, a in self.acc.items()}
+
+
+def _read_partition(path: str, column: str) -> dict[str, int]:
+    """``metric -> column`` of one ledger partition."""
+    t = pq.read_table(path, columns=["metric", column])
+    return dict(zip(t["metric"].to_pylist(), map(int, t[column].to_pylist())))
 
 
 def read_ledger(spark: SparkSession, ledger_dir: str) -> DataFrame:

@@ -148,6 +148,49 @@ def test_ledger_recovers_a_metric_first_seen_in_a_later_batch(spark, tmp_path):
     assert MetricsLedger(spark, ["a"], led).snapshot() == want
 
 
+def test_ledger_counts_escaped_template_routes(spark, tmp_path):
+    """The ledger's routed_* counts come from the committed footers.
+    Route values that Spark escapes in directory names, and the empty
+    value (stored as the null partition), count under the same keys and
+    totals as a grouped count of the rows read back."""
+    import datetime
+
+    from log_formatter_spark.streaming.job import TRANSCRIPT_SCHEMA
+    from log_formatter_spark.transcripts import TRANSCRIPT_PATTERN
+
+    ts = datetime.datetime(2024, 1, 1, 10)
+    tools = ["a/b:c", "x%y=z", "é ü{1}", None, "plain"]
+    rows = [
+        (f"c{i % 7}", i, "tool", f"2024-01-01 10:00:00 INFO turn {i}", tools[i % 5], ts)
+        for i in range(40)
+    ]
+    src = str(tmp_path / "in")
+    frame = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
+    frame.limit(15).coalesce(1).write.parquet(src)
+    frame.subtract(frame.limit(15)).coalesce(1).write.mode("append").parquet(src)
+    pipe = {
+        "formatters": [
+            {"parser": {"components_regex": TRANSCRIPT_PATTERN, "engine": "jvm"}},
+            {"route": {"template": "{{tool}}"}},
+        ]
+    }
+    out = str(tmp_path / "out")
+    ledger = run_streaming_pipeline(
+        spark, src, out, str(tmp_path / "ckpt"), pipe, max_files_per_trigger=1
+    )
+    got = {k: v for k, v in ledger.snapshot().items() if k.startswith("routed_") and v}
+    want = {
+        f"routed_{r['route']}": r["count"]
+        for r in read_routed_stream_output(spark, out).groupBy("route").count().collect()
+    }
+    assert got == want
+    assert got == {
+        "routed_a/b:c": 8, "routed_x%y=z": 8, "routed_é ü{1}": 8, "routed_None": 8,
+        "routed_plain": 8,
+    }
+    assert ledger.snapshot()["rows_in"] == 40
+
+
 def test_watermarked_hourly_counts(spark, sf_dir, tmp_path):
     src = str(tmp_path / "in")
     t = transcripts_from_events(spark, sf_dir)
