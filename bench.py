@@ -38,13 +38,10 @@ HEADLINE = [
     "doc_fingerprint",
     "text_stats",
     "corpus_filter",
-    # round 2b: as-of join, winnowing, relational OLAP trio
+    # round 2b: as-of join, winnowing
     "asof_last_click",
     "attribution_window",
     "doc_winnow",
-    "pricing_summary",
-    "segment_top_orders",
-    "regional_revenue",
     # round 3c: conversation-level curation + corpus hygiene
     "conv_dedup",
     "conv_qa",
@@ -84,13 +81,11 @@ HEADLINE = [
     "event_funnel",
     "cohort_retention",
     "tool_transitions",
-    "context_budget",
     "sink_agg_merge",
     "rate_anomaly",
     "key_skew_report",
     "term_pmi",
     "error_streaks",
-    "zorder_layout",
     "tool_pagerank",
     "quantile_sample_error",
     "conv_protocol",
@@ -107,8 +102,6 @@ HEADLINE = [
     "ngram_novelty",
     "stitch_fragments",
     "novelty_indexed",
-    # round 5 session 5: length-bucketed padding report
-    "length_buckets",
     # round 5 session 6: containment, kappa audit, water-filling budget
     # allocation, per-source quality calibration
     "containment_pairs",

@@ -23,7 +23,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from log_formatter_spark.functions import classifier, multimodal, sketch
+from log_formatter_spark.functions import classifier, sketch
 from log_formatter_spark.functions import shingles as sh
 from log_formatter_spark.functions import text as T
 from log_formatter_spark.functions.grok import grok_parser, grok_to_regex
@@ -33,13 +33,10 @@ from log_formatter_spark.lookups import (
     TOOL_LOOKUP_SQL,
 )
 from log_formatter_spark.operators import (
-    analytics,
     conversations,
     corpus,
     dedup,
-    layout,
     olap,
-    packing,
     sessions,
     validate,
 )
@@ -1450,12 +1447,10 @@ _GATE_ORDER = [
     # --- block A: the 15 round-4d queries, never driver-graded ------
     "cohort_retention",
     "rate_anomaly",
-    "zorder_layout",
     "term_pmi",
     "event_funnel",
     "quantile_sample_error",
     "tool_transitions",
-    "context_budget",
     "key_skew_report",
     "error_streaks",
     "conv_protocol",
@@ -1487,10 +1482,6 @@ _GATE_ORDER = [
     "streaming_hll_distinct",
     "streaming_countmin",
     "streaming_compact",
-    # round-5 session-5 additions (window-placed per the freeze rule,
-    # displacing more block-B refreshes): the length-bucketed padding
-    # report
-    "length_buckets",
     # round-5 session-6 additions (window-placed per the freeze rule,
     # displacing five more block-B refreshes): asymmetric containment
     # and the label-QA kappa audit
@@ -1517,7 +1508,6 @@ _GATE_ORDER = [
     "kafka_decode_json",
     "enrich_join",
     "route_split",
-    "regional_revenue",
     "asof_last_click",
     "vocab_topk",
     "lang_id_ngram",
@@ -1536,10 +1526,8 @@ _GATE_ORDER = [
     "validate_events",
     "text_stats",
     "dataset_split",
-    "multimodal_meta",
     "token_count",
     "labels_stamp",
-    "multimodal_frames",
     # --- tail: r03-graded (union-covered; first entries displaced from
     # block C by the round-5 additions) ----------------------------------
     "top_users_per_type",
@@ -1557,8 +1545,6 @@ _GATE_ORDER = [
     "doc_fingerprint",
     "lang_id",
     "kmv_distinct_users",
-    "segment_top_orders",
-    "pricing_summary",
     "repetition_score",
     "skew_salted_agg",
     "window_ordering",
@@ -1569,8 +1555,6 @@ _GATE_ORDER = [
     "turn_latency",
     "kafka_decode_raw",
     "source_profile",
-    "multimodal_decode",
-    "multimodal_resize",
     "doc_winnow",
     "conversation_assembly",
     "sft_pairs",
@@ -1592,8 +1576,6 @@ _GATE_ORDER = [
     "bigram_lm",
     "doc_lm_score",
     "dsir_contrast",
-    "pack_sequences",
-    "chunk_docs",
     "attribution_window",
     "kafka_pipeline_routed",
     "incremental_neardup",
@@ -1704,28 +1686,7 @@ def _catalog() -> dict[str, QueryFn]:
         "vocab_topk": lambda s, d: olap.vocab_topk(_docs(s, d)),
         # PMI-lift collocation mining (bigram marginals, no joins)
         "term_pmi": lambda s, d: olap.term_pmi(_docs(s, d)),
-        # Z-order layout audit: per-bucket rectangle extents
-        "zorder_layout": lambda s, d: layout.zorder_layout(
-            s.read.parquet(f"{d}/events.parquet")
-        ),
         "distinctive_terms": lambda s, d: olap.distinctive_terms(_docs(s, d)),
-        # relational OLAP over the warehouse tables
-        "pricing_summary": lambda s, d: analytics.pricing_summary(
-            s.read.parquet(f"{d}/lineitem.parquet")
-        ),
-        "segment_top_orders": lambda s, d: analytics.segment_top_orders(
-            s.read.parquet(f"{d}/customer.parquet"),
-            s.read.parquet(f"{d}/orders.parquet"),
-            s.read.parquet(f"{d}/lineitem.parquet"),
-        ),
-        "regional_revenue": lambda s, d: analytics.regional_revenue(
-            s.read.parquet(f"{d}/customer.parquet"),
-            s.read.parquet(f"{d}/orders.parquet"),
-            s.read.parquet(f"{d}/lineitem.parquet"),
-            s.read.parquet(f"{d}/supplier.parquet"),
-            s.read.parquet(f"{d}/nation.parquet"),
-            s.read.parquet(f"{d}/region.parquet"),
-        ),
         "conversation_sessions": lambda s, d: sessions.conversation_sessions(
             transcripts_from_events(s, d)
         ),
@@ -1986,31 +1947,6 @@ def _catalog() -> dict[str, QueryFn]:
         "dsir_contrast": lambda s, d: olap.dsir_contrast(
             _docs(s, d), target_pred=F.col("source") == "src0"
         ),
-        # training-sequence preparation
-        "pack_sequences": lambda s, d: packing.pack_sequences(_docs(s, d)),
-        "chunk_docs": lambda s, d: packing.chunk_docs(_docs(s, d)),
-        # bucketed-batching padding report (max_bucket pinned small so the
-        # sf0.01 fixture populates several buckets)
-        "length_buckets": lambda s, d: packing.length_buckets(
-            _docs(s, d), max_bucket=256
-        ),
-        # bounded-context truncation: maximal turn suffix per budget
-        "context_budget": lambda s, d: packing.context_budget(
-            transcripts_from_events(s, d)
-        ),
-        # multimodal plumbing
-        "multimodal_meta": lambda s, d: multimodal.media_metadata(_docs(s, d)),
-        # Arrow-batched decode through mapInPandas, exploded to scalar
-        # rows so the driver's canonicalizer can hash it (round-1 fix)
-        "multimodal_decode": lambda s, d: multimodal.decode_features_exploded(
-            multimodal.attach_payload(_docs(s, d))
-        ),
-        "multimodal_frames": lambda s, d: multimodal.frame_sample(
-            multimodal.attach_payload(_docs(s, d))
-        ),
-        "multimodal_resize": lambda s, d: multimodal.resize_pooled(
-            multimodal.attach_payload(_docs(s, d))
-        ),
     }
 
 
@@ -2096,9 +2032,6 @@ def oracle_sql() -> dict[str, str]:
         "value_quantiles": olap.value_quantiles_sql(),
         "vocab_topk": olap.vocab_topk_sql(),
         "distinctive_terms": olap.distinctive_terms_sql(),
-        "pricing_summary": analytics.pricing_summary_sql(),
-        "segment_top_orders": analytics.segment_top_orders_sql(),
-        "regional_revenue": analytics.regional_revenue_sql(),
         "text_stats": T.text_stats_sql(),
         "pii_redact": redact_text_sql(src=f"({_PII_INJECT_SQL})"),
         "token_count": T.token_count_sql(),
@@ -2141,7 +2074,6 @@ def oracle_sql() -> dict[str, str]:
         "key_skew_report": TRANSCRIPT_CTES + key_skew_report_sql("transcripts"),
         "term_pmi": olap.term_pmi_sql(),
         "error_streaks": TRANSCRIPT_CTES + olap.error_streaks_sql(),
-        "zorder_layout": layout.zorder_layout_sql(),
         "quantile_sample_error": olap.quantile_sample_error_sql(),
         "conv_dedup": TRANSCRIPT_CTES
         + conversations.conv_dedup_sql(
@@ -2265,12 +2197,4 @@ def oracle_sql() -> dict[str, str]:
         "bigram_lm": olap.bigram_lm_sql(),
         "doc_lm_score": olap.doc_lm_score_sql(),
         "dsir_contrast": olap.dsir_contrast_sql("source = 'src0'"),
-        "pack_sequences": packing.pack_sequences_sql(),
-        "chunk_docs": packing.chunk_docs_sql(),
-        "length_buckets": packing.length_buckets_sql(max_bucket=256),
-        "context_budget": TRANSCRIPT_CTES + packing.context_budget_sql(),
-        "multimodal_meta": multimodal.media_metadata_sql(),
-        "multimodal_decode": multimodal.decode_features_sql(),
-        "multimodal_frames": multimodal.frame_sample_sql(),
-        "multimodal_resize": multimodal.resize_pooled_sql(),
     }

@@ -12,10 +12,8 @@ from log_formatter_spark.streaming.job import (
     write_ordered_slices,
 )
 from log_formatter_spark.streaming.ledger import MetricsLedger, read_ledger
-from log_formatter_spark.streaming.state import track_conversations
 
 __all__ = [
-    "track_conversations",
     "TRANSCRIPT_SCHEMA",
     "stream_transcripts",
     "run_streaming_pipeline",

@@ -19,7 +19,6 @@ SHOWCASE = [
     ("dedup_minhash", "MinHash-LSH banded candidate pairs"),
     ("dedup_simhash_pairs", "pigeonhole-blocked SimHash pairs"),
     ("asof_last_click", "as-of join (union+window, no join node)"),
-    ("regional_revenue", "Q5-shape join graph (dims broadcast)"),
     ("corpus_filter", "single-pass composite corpus cleaner"),
     ("doc_winnow", "winnowing fingerprint selection"),
     ("source_quota_sample", "per-source quality quota (WindowGroupLimit)"),
@@ -47,7 +46,6 @@ SHOWCASE = [
     ("key_skew_report", "hot-key diagnosis (salted counts, TakeOrdered, union+window totals)"),
     ("term_pmi", "PMI collocations (join-free marginals, N-free top-k)"),
     ("error_streaks", "gaps-and-islands error runs (filter below the conv exchange)"),
-    ("zorder_layout", "Z-order layout audit (normalized Morton keys, map-only)"),
     ("quantile_sample_error", "sampled quantiles + rank error (one shared sort)"),
     ("conv_curation", "composed curation pass (ONE assembly exchange, reused 3 ways)"),
     ("compact_regenerations", "LWW ingest compaction (order-free max-struct, one key exchange)"),
@@ -55,7 +53,6 @@ SHOWCASE = [
     ("hll_distinct_users", "HyperLogLog registers (two streaming aggs, no distinct pass)"),
     ("ngram_novelty", "n-gram novelty vs reference (int64 gram join, no probe distinct)"),
     ("stitch_fragments", "fragment stitching (boundary equi-join, count-window guard)"),
-    ("length_buckets", "bucketed-padding report (map-only count, bounded 13-group aggregate)"),
     ("containment_pairs", "doc-in-doc containment (inverted-index blocking, hot-shingle guard)"),
     ("containment_probe", "bipartite ingest containment gate (stateless below pair aggregate)"),
     ("rater_agreement", "Cohen's kappa label QA (one narrow bool exchange)"),

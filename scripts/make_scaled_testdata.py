@@ -79,37 +79,6 @@ def main() -> None:
     ]
     _union_write(ev_parts, f"{out}/events.parquet", 32)
 
-    # warehouse tables (round 2b: the OLAP trio + rollup/pivot/asof run
-    # at 10× too). Facts replicate with key offsets — new orders for the
-    # same replicated customer population; dims (part/supplier/nation/
-    # region) stay fixed, as dims do at real scale.
-    orders = spark.read.parquet(f"{src}/orders.parquet")
-    cust = spark.read.parquet(f"{src}/customer.parquet")
-    li = spark.read.parquet(f"{src}/lineitem.parquet")
-    n_ord = orders.agg(F.max("o_orderkey")).first()[0] + 1
-    n_cust = cust.agg(F.max("c_custkey")).first()[0] + 1
-    ord_parts = [
-        orders.withColumn("o_orderkey", F.col("o_orderkey") + F.lit(r * n_ord))
-        .withColumn("o_custkey", F.col("o_custkey") + F.lit((r % 2) * n_cust))
-        for r in range(k)
-    ]
-    cust_parts = [
-        cust.withColumn("c_custkey", F.col("c_custkey") + F.lit(r * n_cust))
-        for r in range(2)  # customer pop grows slower than the fact tables
-    ]
-    li_parts = [
-        li.withColumn("l_orderkey", F.col("l_orderkey") + F.lit(r * n_ord))
-        for r in range(k)
-    ]
-
-    _union_write(ord_parts, f"{out}/orders.parquet", 16)
-    _union_write(cust_parts, f"{out}/customer.parquet", 4)
-    _union_write(li_parts, f"{out}/lineitem.parquet", 32)
-    for dim in ("supplier", "nation", "region", "part"):
-        spark.read.parquet(f"{src}/{dim}.parquet").write.mode("overwrite").parquet(
-            f"{out}/{dim}.parquet"
-        )
-
     print(
         f"wrote {k}x scale-up of {src} to {out}: "
         f"{spark.read.parquet(f'{out}/documents.parquet').count()} docs, "

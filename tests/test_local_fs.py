@@ -5,17 +5,24 @@ starting a process, and the file system must answer as Hadoop's does."""
 
 from __future__ import annotations
 
+import json
 import os
 import stat
+import subprocess
+import sys
+from functools import partial
+from pathlib import Path
 
 import pytest
 from py4j.protocol import Py4JJavaError
 
 from log_formatter_spark.pipeline import PipelineOptions
 from log_formatter_spark.plans import run_batch
-from log_formatter_spark.session import LOCAL_FS
+from log_formatter_spark.session import LOCAL_FS, get_spark
 from log_formatter_spark.streaming import run_streaming_pipeline
 from log_formatter_spark.transcripts import transcripts_from_events
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -46,26 +53,46 @@ def _process_starts(spark, tmp_path, run) -> list[str]:
     return [events.get(i).getString("command") for i in range(events.size())]
 
 
-def test_pipeline_starts_no_process(spark, src, tmp_path):
-    """A batch run with its aggregate table and a two-batch checkpointed
-    stream fork nothing (Hadoop's local file system forked over 100
-    ``chmod``/``readlink`` processes here)."""
-    out = tmp_path / "out"
+def _run_pipeline(spark, src: str, out: Path) -> None:
+    """A jvm-engine batch run with its aggregate table, then a two-batch
+    checkpointed stream, both over ``src``."""
     pipe = PipelineOptions(engine="jvm").section()
     cfg = {
         "input": {"target": "parquet", "path": src},
         "pipeline": pipe,
         "output": {"target": "parquet", "path": f"{out}/routed", "aggregates": f"{out}/agg"},
     }
+    run_batch(spark, cfg)
+    ledger = run_streaming_pipeline(
+        spark, src, str(out / "stream"), str(out / "ckpt"), pipe, max_files_per_trigger=1
+    )
+    assert ledger.snapshot()["rows_in"] == spark.read.parquet(src).count()
 
-    def run():
-        run_batch(spark, cfg)
-        ledger = run_streaming_pipeline(
-            spark, src, str(out / "stream"), str(out / "ckpt"), pipe, max_files_per_trigger=1
-        )
-        assert ledger.snapshot()["rows_in"] == spark.read.parquet(src).count()
 
-    assert _process_starts(spark, tmp_path, run) == []
+def test_pipeline_starts_no_process(src, tmp_path):
+    """A batch run with its aggregate table and a two-batch checkpointed
+    stream fork nothing (Hadoop's local file system forked over 100
+    ``chmod``/``readlink`` processes here).
+
+    The run gets a JVM of its own. Spark forks ``rm -rf`` for the artifact
+    directory of every SparkSession it garbage-collects, every streaming
+    query clones the session, and a clone stays reachable from PySpark's
+    ``RDD.toDF`` until the next clone replaces it and from the cached
+    exchange threads the stream started until they idle out (60 s). In
+    the suite's shared JVM a clone left by an earlier test could be freed,
+    and forked for, inside the recording."""
+    env = {k: v for k, v in os.environ.items() if not k.startswith("PYSPARK_GATEWAY_")}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "2g"
+    proc = subprocess.run(
+        [sys.executable, "-m", "tests.test_local_fs", src, str(tmp_path)],
+        cwd=REPO,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, f"stdout:\n{proc.stdout}\nstderr:\n{proc.stderr}"
+    assert json.loads(proc.stdout.splitlines()[-1]) == []
 
 
 def _modes(root: str) -> set[tuple[str, int]]:
@@ -139,3 +166,19 @@ def test_local_fs_link_status_matches_hadoop(spark, tmp_path):
             assert got == _link_status(hadoops.getFileLinkStatus, path), (api, name)
             if name == "missing":
                 assert got == "java.io.FileNotFoundException"
+
+
+def _main(src: str, out: str) -> None:
+    spark = get_spark("lfs-process-starts", cores=2)
+    try:
+        run = partial(_run_pipeline, spark, src, Path(out) / "out")
+        print(json.dumps(_process_starts(spark, Path(out), run)))
+    finally:
+        spark.stop()
+
+
+if __name__ == "__main__":
+    # python -m tests.test_local_fs SRC OUT: run the pipeline over SRC in
+    # a new JVM and print the commands of the processes it started, as
+    # one JSON list
+    _main(*sys.argv[1:])

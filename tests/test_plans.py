@@ -88,26 +88,3 @@ def test_arrow_parse_is_single_python_eval(spark, sf_dir):
     plan = _plan(df)
     assert plan.count("ArrowEvalPython") == 1
 
-
-def test_analytics_plan_shapes(spark, sf_dir):
-    """The OLAP trio's physical plans: dims broadcast, top-N via
-    TakeOrderedAndProject (never a full sort), one grouped-agg exchange
-    for the summary report."""
-    from log_formatter_spark import contract
-
-    qs = contract.queries()
-    top = qs["segment_top_orders"](spark, sf_dir)
-    plan = _plan(top)
-    assert "TakeOrderedAndProject" in plan  # top-N, not a global sort
-    assert "BroadcastHashJoin" in plan      # customer dim broadcast
-    assert "CartesianProduct" not in plan
-
-    reg = _plan(qs["regional_revenue"](spark, sf_dir))
-    # nation/region/supplier/customer all join broadcast-side
-    assert reg.count("BroadcastHashJoin") >= 3
-    assert "CartesianProduct" not in reg
-
-    summary = _plan(qs["pricing_summary"](spark, sf_dir))
-    # partial agg map-side: exactly one exchange, carrying group partials
-    assert summary.count("Exchange hashpartitioning") == 1
-    assert "PushedFilters" in summary  # shipdate predicate reaches the scan
