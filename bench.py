@@ -49,18 +49,14 @@ HEADLINE = [
     "decontaminate",
     "boilerplate_frac",
     "error_burst",
-    # round 3d: incremental ingest dedup, classifier inference, mixture
-    # assembly
+    # round 3d: incremental ingest dedup, mixture assembly
     "incremental_dedup",
     "incremental_neardup",
-    "classifier_margin",
-    "classifier_margin_trained",
     "mixture_epochs",
     "temporal_split",
-    "dsir_contrast",
     "validate_events",
     "quality_deciles",
-    # round 4: exact-substring spans, trained classifier
+    # round 4: exact-substring spans
     "exact_substring_spans",
     "span_dup_fraction",
     "source_overlap",
@@ -75,19 +71,14 @@ HEADLINE = [
     "dup_families",
     "strip_boilerplate",
     "curation_funnel",
-    "classifier_eval",
     "countmin_hitters",
     "strip_repetition",
-    "event_funnel",
-    "cohort_retention",
     "tool_transitions",
     "sink_agg_merge",
     "rate_anomaly",
     "key_skew_report",
-    "term_pmi",
     "error_streaks",
     "tool_pagerank",
-    "quantile_sample_error",
     "conv_protocol",
     # round 5: the composed curation pass (one assembly exchange)
     "conv_curation",
@@ -142,17 +133,6 @@ def _span_dup_raw(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return shingles.span_dup_stats(docs, min_tokens=12, seed=8)
-
-
-def _classifier_trained(spark, sf_dir):
-    # production classifier configuration (r3 VERDICT #5): in-engine
-    # trained weights (memoized — train-once/score-many) feeding the
-    # same zero-exchange margin fold
-    from log_formatter_spark.functions import classifier
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    w = classifier.train_hashed_logreg(docs, n_iter=8)
-    return classifier.hashed_margin(docs, weights=w)
 
 
 _BAND_INDEX_MEMO: dict = {}
@@ -210,7 +190,6 @@ BENCH_OVERRIDES = {
     "neardup_indexed": _neardup_probe_indexed,
     "conv_neardup": _conv_neardup_raw,
     "conv_curation": _conv_curation_raw,
-    "classifier_margin_trained": _classifier_trained,
     "exact_substring_spans": _exact_spans_raw,
     "span_dup_fraction": _span_dup_raw,
 }

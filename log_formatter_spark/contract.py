@@ -23,7 +23,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from log_formatter_spark.functions import classifier, sketch
+from log_formatter_spark.functions import sketch
 from log_formatter_spark.functions import shingles as sh
 from log_formatter_spark.functions import text as T
 from log_formatter_spark.functions.grok import grok_parser, grok_to_regex
@@ -1444,12 +1444,8 @@ _STREAMING_INC_DEDUP_SQL = _streaming_inc_dedup_sql()
 # with queries() -- pinned by test_gate_order_covers_catalog.
 _GATE_ORDER = [
     "transcripts_view",
-    # --- block A: the 15 round-4d queries, never driver-graded ------
-    "cohort_retention",
+    # --- block A: the round-4d queries, never driver-graded ---------
     "rate_anomaly",
-    "term_pmi",
-    "event_funnel",
-    "quantile_sample_error",
     "tool_transitions",
     "key_skew_report",
     "error_streaks",
@@ -1530,14 +1526,8 @@ _GATE_ORDER = [
     "labels_stamp",
     # --- tail: r03-graded (union-covered; first entries displaced from
     # block C by the round-5 additions) ----------------------------------
-    "top_users_per_type",
     "filter_exclude",
-    "purchasers_without_clicks",
-    "user_rolling_count",
-    "events_pivot",
-    "value_quantiles",
     "busiest_convs",
-    "events_rollup",
     "filter_project",
     "events_props_json",
     "events_hourly",
@@ -1548,7 +1538,6 @@ _GATE_ORDER = [
     "repetition_score",
     "skew_salted_agg",
     "window_ordering",
-    "classifier_margin",
     "incremental_dedup",
     "pii_redact",
     "parse_error_tolerant",
@@ -1558,7 +1547,6 @@ _GATE_ORDER = [
     "doc_winnow",
     "conversation_assembly",
     "sft_pairs",
-    "distinctive_terms",
     "sink_template_route",
     "winnow_pairs",
     "conversation_sessions",
@@ -1573,9 +1561,6 @@ _GATE_ORDER = [
     "hash_sample",
     "decontaminate",
     "boilerplate_frac",
-    "bigram_lm",
-    "doc_lm_score",
-    "dsir_contrast",
     "attribution_window",
     "kafka_pipeline_routed",
     "incremental_neardup",
@@ -1584,7 +1569,6 @@ _GATE_ORDER = [
     "streaming_incremental_dedup",
     "streaming_attribution",
     "streaming_conv_keys",
-    "classifier_train_step",
     "exact_substring_spans",
     "span_dup_fraction",
     "source_overlap",
@@ -1599,7 +1583,6 @@ _GATE_ORDER = [
     "strip_boilerplate",
     "curation_funnel",
     "streaming_bloom",
-    "classifier_eval",
     "countmin_hitters",
     "streaming_pipeline_counts",
 ]
@@ -1657,36 +1640,11 @@ def _catalog() -> dict[str, QueryFn]:
         "streaming_hll_distinct": _streaming_hll_distinct,
         "streaming_countmin": _streaming_countmin,
         "streaming_compact": _streaming_compact,
-        "events_rollup": lambda s, d: olap.events_rollup(
-            s.read.parquet(f"{d}/events.parquet")
-        ),
         # ingest-quality gate: per-rule violation counts in one scan
         "validate_events": lambda s, d: validate.validate_events(
             s.read.parquet(f"{d}/events.parquet")
         ),
-        "top_users_per_type": lambda s, d: olap.top_users_per_type(
-            s.read.parquet(f"{d}/events.parquet")
-        ),
-        "purchasers_without_clicks": lambda s, d: olap.purchasers_without_clicks(
-            s.read.parquet(f"{d}/events.parquet")
-        ),
-        "user_rolling_count": lambda s, d: olap.user_rolling_count(
-            s.read.parquet(f"{d}/events.parquet")
-        ),
-        "events_pivot": lambda s, d: olap.events_pivot(
-            s.read.parquet(f"{d}/events.parquet")
-        ),
-        "value_quantiles": lambda s, d: olap.value_quantiles(
-            s.read.parquet(f"{d}/events.parquet")
-        ),
-        # deterministic sampled quantiles + measured rank error
-        "quantile_sample_error": lambda s, d: olap.quantile_sample_error(
-            s.read.parquet(f"{d}/events.parquet")
-        ),
         "vocab_topk": lambda s, d: olap.vocab_topk(_docs(s, d)),
-        # PMI-lift collocation mining (bigram marginals, no joins)
-        "term_pmi": lambda s, d: olap.term_pmi(_docs(s, d)),
-        "distinctive_terms": lambda s, d: olap.distinctive_terms(_docs(s, d)),
         "conversation_sessions": lambda s, d: sessions.conversation_sessions(
             transcripts_from_events(s, d)
         ),
@@ -1759,14 +1717,6 @@ def _catalog() -> dict[str, QueryFn]:
         "conv_curation": lambda s, d: conversations.conv_curation(
             _nd_transcripts(s, d), min_est=0.6
         ),
-        # ordered conversion funnel over raw events (one user-key shuffle)
-        "event_funnel": lambda s, d: olap.event_funnel(
-            s.read.parquet(f"{d}/events.parquet")
-        ),
-        # weekly cohort retention triangle (one user-key shuffle)
-        "cohort_retention": lambda s, d: olap.cohort_retention(
-            s.read.parquet(f"{d}/events.parquet")
-        ),
         "error_burst": lambda s, d: olap.error_burst(
             transcripts_from_events(s, d), TRANSCRIPT_PATTERN
         ),
@@ -1796,14 +1746,6 @@ def _catalog() -> dict[str, QueryFn]:
             _span_docs(s, d), min_tokens=12, seed=8
         ),
         "repetition_score": lambda s, d: sh.repetition_score(_docs(s, d), n=3),
-        # hashed linear quality classifier (fastText-shaped inference)
-        "classifier_margin": lambda s, d: classifier.hashed_margin(_docs(s, d)),
-        # one in-engine training step (full-batch hashed logistic
-        # regression, rational link + fixed-point gradient — r3 VERDICT
-        # #5); the multi-step trainer is test-gated vs pure Python
-        "classifier_train_step": lambda s, d: classifier.train_step(_docs(s, d)),
-        # operating-point report (threshold sweep) on the held-out split
-        "classifier_eval": lambda s, d: classifier.classifier_eval(_docs(s, d)),
         # training-mixture assembly (integer per-source epochs)
         "mixture_epochs": lambda s, d: corpus.mixture_epochs(_docs(s, d)),
         # temperature-weighted mixture (quota ∝ n^0.5, Hamilton-apportioned)
@@ -1939,14 +1881,6 @@ def _catalog() -> dict[str, QueryFn]:
         "strip_repetition": lambda s, d: corpus.strip_repetition(_docs(s, d)),
         # stage-by-stage retention report over cumulative curation stages
         "curation_funnel": lambda s, d: corpus.curation_funnel(_docs(s, d)),
-        # n-gram LM statistics + LM-score quality filter
-        "bigram_lm": lambda s, d: olap.bigram_lm(_docs(s, d)),
-        "doc_lm_score": lambda s, d: olap.doc_lm_score(_docs(s, d)),
-        # DSIR-shaped importance weighting: re-weight the corpus toward
-        # the src0 "target domain" slice
-        "dsir_contrast": lambda s, d: olap.dsir_contrast(
-            _docs(s, d), target_pred=F.col("source") == "src0"
-        ),
     }
 
 
@@ -2023,15 +1957,8 @@ def oracle_sql() -> dict[str, str]:
         # the streaming twin hashes against the SAME batch oracle — that
         # equality is the correctness content
         "streaming_hll_distinct": sketch.hll_distinct_sql(p=5),
-        "events_rollup": olap.events_rollup_sql(),
         "validate_events": validate.validate_events_sql(),
-        "top_users_per_type": olap.top_users_per_type_sql(),
-        "purchasers_without_clicks": olap.purchasers_without_clicks_sql(),
-        "user_rolling_count": olap.user_rolling_count_sql(),
-        "events_pivot": olap.events_pivot_sql(),
-        "value_quantiles": olap.value_quantiles_sql(),
         "vocab_topk": olap.vocab_topk_sql(),
-        "distinctive_terms": olap.distinctive_terms_sql(),
         "text_stats": T.text_stats_sql(),
         "pii_redact": redact_text_sql(src=f"({_PII_INJECT_SQL})"),
         "token_count": T.token_count_sql(),
@@ -2072,9 +1999,7 @@ def oracle_sql() -> dict[str, str]:
         "rate_anomaly": TRANSCRIPT_CTES + olap.rate_anomaly_sql(),
         "tool_pagerank": TRANSCRIPT_CTES + ",\n" + tool_pagerank_sql(),
         "key_skew_report": TRANSCRIPT_CTES + key_skew_report_sql("transcripts"),
-        "term_pmi": olap.term_pmi_sql(),
         "error_streaks": TRANSCRIPT_CTES + olap.error_streaks_sql(),
-        "quantile_sample_error": olap.quantile_sample_error_sql(),
         "conv_dedup": TRANSCRIPT_CTES
         + conversations.conv_dedup_sql(
             "transcripts", canon_sql="substr(text, 21)", prefix_turns=CONV_DEDUP_PREFIX
@@ -2086,11 +2011,6 @@ def oracle_sql() -> dict[str, str]:
         "conv_curation": TRANSCRIPT_CTES
         + conversations.conv_curation_sql(_CONV_ND_FIXTURE_SQL, min_est=0.6),
         "error_burst": TRANSCRIPT_CTES + olap.error_burst_sql(TRANSCRIPT_PATTERN),
-        "event_funnel": olap.event_funnel_sql(),
-        "cohort_retention": olap.cohort_retention_sql(),
-        "classifier_margin": classifier.hashed_margin_sql(),
-        "classifier_train_step": classifier.train_step_sql(),
-        "classifier_eval": classifier.classifier_eval_sql(),
         "mixture_epochs": corpus.mixture_epochs_sql(),
         "mixture_temperature": corpus.mixture_temperature_sql(),
         "weighted_sample": corpus.weighted_sample_sql(),
@@ -2194,7 +2114,4 @@ def oracle_sql() -> dict[str, str]:
         "strip_boilerplate": corpus.strip_boilerplate_sql(),
         "strip_repetition": corpus.strip_repetition_sql(),
         "curation_funnel": corpus.curation_funnel_sql(),
-        "bigram_lm": olap.bigram_lm_sql(),
-        "doc_lm_score": olap.doc_lm_score_sql(),
-        "dsir_contrast": olap.dsir_contrast_sql("source = 'src0'"),
     }

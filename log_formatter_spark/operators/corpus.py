@@ -851,8 +851,8 @@ def decontaminate_sql(
     # eval shingles come straight from the filtered source (not via an
     # id IN-list), and the train-side exclusion is NOT EXISTS, not
     # NOT IN: one NULL id in the eval set would turn NOT IN into zero
-    # rows (the olap.py:purchasers_without_clicks rule), silently
-    # diverging from Spark's null-safe left_anti join.
+    # rows (SQL's three-valued logic makes `x NOT IN (.., NULL)` never
+    # true), silently diverging from Spark's null-safe left_anti join.
     ev_src = f"(SELECT * FROM {src} WHERE {eval_pred_sql}) _ev"
     ev_sh = shingles_sql(src=ev_src, n=n, id_col=id_col)
     return f"""
@@ -1504,8 +1504,8 @@ def source_drift(
     absent from s contribute n_t/N each, so with A_s = Σ_{t∈s}
     |n_ts·N − n_t·N_s| and B_s = Σ_{t∈s} n_t the closed form is
     TV(s) = (A_s + (N − B_s)·N_s) / (2·N_s·N) — every sum an EXACT
-    integer (order-free, no transcendentals: the same reason
-    `distinctive_terms` ranks on tf/df instead of log-idf), widened to
+    integer (order-free, and no transcendental such as log, whose
+    last bit can differ between Spark and DuckDB), widened to
     decimal(38,0) because n_ts·N exceeds int64 beyond ~10× scale
     (Spark wraps, DuckDB silently promotes to HUGEINT — a divergence
     this type pin removes). Only the final division is IEEE, on exact
@@ -2165,9 +2165,9 @@ def rater_agreement(
     MIN_QUALITY`` — the same expression family as ``corpus_filter``, so
     this audits the shipping rule, not a copy); labeler B is an
     independent crude rule (stopword floor + token-length ceiling +
-    minimum size). Swapping either for classifier output
-    (``classifier_margin``) or an imported human-label column is a
-    drop-in: the kappa algebra only sees two boolean columns.
+    minimum size). Swapping either for a model's keep/drop verdict or
+    an imported human-label column is a drop-in: the kappa algebra only
+    sees two boolean columns.
 
     Exactness: the four contingency cells are integer counts; po/pe are
     divisions of exact integers cast to double, pe composes the four

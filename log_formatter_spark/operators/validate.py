@@ -64,10 +64,7 @@ def validation_report(df: DataFrame, rules: dict[str, Column]) -> DataFrame:
 
 # --- contract instantiation over the events table ---------------------------
 
-# single source of truth for the enum (olap.events_pivot uses the same
-# list; a fixture change must not leave two copies disagreeing)
-from log_formatter_spark.operators.olap import EVENT_TYPES  # noqa: E402
-
+EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 TS_LO, TS_HI = "2024-01-01 00:00:00", "2025-01-01 00:00:00"
 
 

@@ -686,7 +686,7 @@ def tool_pagerank(t: DataFrame, iters: int = PR_ITERS) -> DataFrame:
     off to by other central tools (the graph-analytics companion to
     :func:`tool_transitions`).
 
-    Split by size, the BPE discipline: the ROW-SCALE
+    Split by size: the ROW-SCALE
     work (10¹² turns → weighted edge list) is one distributed
     lag-window + aggregate; the SOLVE runs on the tools²-bounded edge
     list (a small closed vocabulary, like the role/tool lookup dims)

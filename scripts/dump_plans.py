@@ -25,28 +25,20 @@ SHOWCASE = [
     ("conv_dedup", "conversation dedup (two map-side-combined exchanges)"),
     ("decontaminate", "eval-set decontamination (broadcast eval shingles)"),
     ("incremental_dedup", "new-batch-vs-corpus dedup (key-index join, batch-side window)"),
-    ("classifier_margin", "hashed linear classifier (zero-exchange fold)"),
-    ("dsir_contrast", "DSIR importance contrast (two broadcast prob tables)"),
     ("incremental_neardup", "verify-inline band probe (ONE join, signatures ride)"),
     ("neardup_indexed", "ingest probe of the persisted band index"),
     ("source_overlap", "cross-source containment over banded MinHash pairs"),
     ("source_drift", "exact-integer TV drift (window-attached corpus total)"),
     ("exact_substring_spans", "positional-shingle diagonal runs (Lee et al. regime)"),
-    ("classifier_train_step", "one logreg gradient step (256-key aggregate)"),
     ("dup_families", "multi-signal families (SHARED candidate set, star exact tier)"),
     ("strip_boilerplate", "cross-doc span stripping (hot-start-only coverage explode)"),
     ("strip_repetition", "within-doc repetition stripping (doc-local window)"),
     ("curation_funnel", "six cumulative stages, exchange-reused prefixes"),
-    ("classifier_eval", "threshold sweep (eval-slice explode, 9-key aggregate)"),
     ("countmin_hitters", "Count-Min counters broadcast into the probe"),
-    ("event_funnel", "ordered conversion funnel (ONE user-key exchange)"),
-    ("cohort_retention", "retention triangle (collect_set weeks, map-only explode)"),
     ("tool_transitions", "tool-handoff Markov chain (one conv exchange, windowed shares)"),
     ("sink_agg_merge", "maintained sink aggregates (state + delta merge, no raw-row exchange)"),
     ("key_skew_report", "hot-key diagnosis (salted counts, TakeOrdered, union+window totals)"),
-    ("term_pmi", "PMI collocations (join-free marginals, N-free top-k)"),
     ("error_streaks", "gaps-and-islands error runs (filter below the conv exchange)"),
-    ("quantile_sample_error", "sampled quantiles + rank error (one shared sort)"),
     ("conv_curation", "composed curation pass (ONE assembly exchange, reused 3 ways)"),
     ("compact_regenerations", "LWW ingest compaction (order-free max-struct, one key exchange)"),
     ("mixture_temperature", "temperature mixture draw (literal quotas, WindowGroupLimit)"),

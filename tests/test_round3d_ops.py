@@ -1,5 +1,6 @@
-"""Semantic tests for the round-3d operators: incremental batch dedup,
-hashed linear classifier, mixture assembly.
+"""Semantic tests for the round-3d operators: incremental batch dedup
+and near-dup, mixture assembly, temporal split, validation report, file
+compaction, SFT example mining and quality deciles.
 
 The contract replica (test_contract.py) already pins each against its
 DuckDB oracle; these tests pin the SEMANTICS — the properties that stay
@@ -8,12 +9,9 @@ true when the oracle is re-rendered or the fixture changes.
 
 from __future__ import annotations
 
-import hashlib
-
 import pytest
 from pyspark.sql import functions as F
 
-from log_formatter_spark.functions import classifier
 from log_formatter_spark.operators import corpus, dedup
 
 
@@ -90,49 +88,6 @@ def test_incremental_dedup_empty_sides(spark, docs):
     assert out2.count() == docs.count()
 
 
-# --- hashed linear classifier -----------------------------------------------
-
-
-def _py_md5_60(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-
-def _py_margin(text: str) -> tuple[int, int]:
-    toks = [t for t in text.lower().split(" ") if t]
-    m = 0
-    for t in toks:
-        bucket = _py_md5_60(t) % classifier.N_BUCKETS
-        m += _py_md5_60(f"w:{bucket}") % 17 - 8
-    return len(toks), m
-
-
-def test_hashed_margin_matches_python_reference(spark, docs):
-    sample = docs.orderBy("doc_id").limit(20)
-    out = {
-        r["doc_id"]: r
-        for r in classifier.hashed_margin(sample).collect()
-    }
-    for row in sample.collect():
-        n, m = _py_margin(row["text"])
-        got = out[row["doc_id"]]
-        assert got["n_tokens"] == n
-        assert got["margin"] == m
-        assert got["pred"] == (m > 0)
-        if n:
-            assert got["mean_margin"] == m / n
-
-
-def test_hashed_margin_empty_and_blank(spark):
-    d = spark.createDataFrame(
-        [(1, ""), (2, "   "), (3, "ok")], "doc_id long, text string"
-    )
-    rows = {r["doc_id"]: r for r in classifier.hashed_margin(d).collect()}
-    assert rows[1]["n_tokens"] == 0 and rows[1]["margin"] == 0
-    assert rows[1]["mean_margin"] is None
-    assert rows[2]["n_tokens"] == 0
-    assert rows[3]["n_tokens"] == 1
-
-
 # --- mixture assembly --------------------------------------------------------
 
 
@@ -164,7 +119,7 @@ def test_mixture_epochs_empty(spark, docs):
     assert out.columns == ["doc_id", "source", "epoch", "mix_key"]
 
 
-# --- temporal split + DSIR contrast -------------------------------------------
+# --- temporal split ---------------------------------------------------------------
 
 
 def test_temporal_split_three_way(spark):
@@ -208,34 +163,6 @@ def test_temporal_split_no_leakage(spark, sf_dir):
     assert j.where((F.col("split") == "eval") & (F.col("ts") < cut)).count() == 0
     # units partition the turns: every non-null-ts turn is covered once
     assert j.count() == turns.where(F.col("ts").isNotNull()).count()
-
-
-def test_dsir_contrast_separates_target_domain(spark, docs):
-    """The resampling signal: target-domain docs must average a higher
-    contrast score than the rest of the corpus (that is the property
-    DSIR selects on)."""
-    from log_formatter_spark.operators import olap
-
-    sc = olap.dsir_contrast(docs, target_pred=F.col("source") == "src0")
-    j = sc.join(docs.select("doc_id", "source"), "doc_id")
-    rows = {
-        r["is_t"]: r["avg"]
-        for r in j.groupBy((F.col("source") == "src0").alias("is_t"))
-        .agg(F.avg("dsir_score").alias("avg"))
-        .collect()
-    }
-    assert rows[True] > rows[False]
-
-
-def test_dsir_contrast_zero_when_target_is_corpus(spark, docs):
-    """Target == full corpus -> p_t == p_s for every transition, so all
-    scores collapse to (exactly) 0 modulo the fixed-point floor — i.e.
-    in (-2^-40, 0]."""
-    from log_formatter_spark.operators import olap
-
-    sc = olap.dsir_contrast(docs, target_pred=F.lit(True))
-    mx, mn = sc.agg(F.max("dsir_score"), F.min("dsir_score")).first()
-    assert mx <= 0.0 and mn > -1e-9
 
 
 def test_mixture_epochs_zero_drops_source(spark):
@@ -422,13 +349,6 @@ def test_quality_deciles_partition_properties(spark, docs):
 
 
 # --- review-fix regressions (round-3d code review) -----------------------------
-
-
-def test_hashed_margin_null_text(spark):
-    d = spark.createDataFrame([(1, None), (2, "ok")], "doc_id long, text string")
-    rows = {r["doc_id"]: r for r in classifier.hashed_margin(d).collect()}
-    # NULL text scores as empty, not as size(NULL) = -1
-    assert rows[1]["n_tokens"] == 0 and rows[1]["margin"] == 0
 
 
 def test_quality_deciles_excludes_zero_token_docs(spark, docs):

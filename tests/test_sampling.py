@@ -1,10 +1,7 @@
-"""Corpus sampling + n-gram LM operators: brute-force spec checks and
-the plan shapes their 100 TB claims rest on."""
+"""Corpus sampling operators: spec checks and the plan shapes their
+100 TB claims rest on."""
 
 from __future__ import annotations
-
-from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from log_formatter_spark.functions.text import text_stats
 from log_formatter_spark.operators.corpus import (
@@ -12,7 +9,6 @@ from log_formatter_spark.operators.corpus import (
     hash_sample,
     source_quota_sample,
 )
-from log_formatter_spark.operators.olap import bigram_lm
 
 
 def test_quota_keeps_top_quality_per_source(spark, sf_dir):
@@ -72,46 +68,7 @@ def test_hash_sample_map_only(spark, sf_dir):
     assert "Exchange" not in plan
 
 
-def test_bigram_lm_bruteforce(spark):
-    rows = [
-        Row(doc_id=0, text="a b a b c"),
-        Row(doc_id=1, text="a b  x"),  # double space -> empty token dropped
-        Row(doc_id=2, text="solo"),  # no bigrams
-        Row(doc_id=3, text=""),  # empty
-    ]
-    out = bigram_lm(spark.createDataFrame(rows), min_count=2).collect()
-    # bigrams: d0: (a,b)(b,a)(a,b)(b,c); d1: (a,b)(b,x)  => (a,b):3 ctx a=3
-    assert {(r["w1"], r["w2"], r["n"], r["ctx_n"], r["prob"]) for r in out} == {
-        ("a", "b", 3, 3, 1.0)
-    }
-
-
-def test_doc_lm_score_bruteforce(spark):
-    from log_formatter_spark.operators.olap import doc_lm_score
-
-    rows = [
-        Row(doc_id=0, text="a b a b c"),
-        Row(doc_id=1, text="a b x"),
-        Row(doc_id=2, text="solo"),  # no bigrams -> excluded
-    ]
-    # corpus bigrams: (a,b)x3 (b,a) (b,c) (b,x) -> P(b|a)=1,
-    # P(a|b)=P(c|b)=P(x|b)=1/3
-    out = {r["doc_id"]: (r["n_bigrams"], r["lm_score"])
-           for r in doc_lm_score(spark.createDataFrame(rows)).collect()}
-    import math
-    fp = lambda p: math.floor(p * 2**40) / 2**40
-    exp0 = (fp(1.0) + fp(1 / 3) + fp(1.0) + fp(1 / 3)) / 4
-    exp1 = (fp(1.0) + fp(1 / 3)) / 2
-    assert set(out) == {0, 1}
-    assert out[0] == (4, exp0)  # bit-exact by construction
-    assert out[1] == (2, exp1)
-
-
 def test_sampling_empty_inputs(spark, sf_dir):
-    from log_formatter_spark.operators.olap import doc_lm_score
-
     empty = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(0)
     assert source_quota_sample(empty).count() == 0
     assert hash_sample(empty).count() == 0
-    assert bigram_lm(empty).count() == 0
-    assert doc_lm_score(empty).count() == 0
