@@ -76,14 +76,6 @@ from log_formatter_spark.transcripts import (
     transcripts_from_events,
 )
 
-# Tuned on the driver testdata so each pair query returns a non-trivial,
-# non-explosive result set (see tests/test_contract.py).
-SIMHASH_MAX_HAMMING = 4
-NGRAM_MIN_JACCARD = 0.05
-# skew guard: shingles in more docs than this are excluded before the
-# inverted-index self-join (at sf0.01's 500 docs nothing trips it; it is
-# exercised by the adversarial corpus in tests/test_dedup_blocked.py)
-NGRAM_MAX_DF = 200
 # conversation template-prefix dedup: key on the first k turns
 # (150 convs -> 57 prefix groups at sf0.01; 15 -> 14 at sf0.001)
 CONV_DEDUP_PREFIX = 2
@@ -93,10 +85,6 @@ TEMPORAL_CUTOFF = "2024-01-16 00:00:00"
 # decontamination: every 23rd doc plays the "benchmark" corpus (31
 # flagged train docs at sf0.01 with 4-gram shingles; 36 at sf0.001)
 DECONTAM_EVAL_MOD = 23
-# edit-distance verify bound: the driver corpus' MinHash candidates sit
-# at distance 4-12, so 6 exercises both the keep and reject branches
-# (24 kept / 4 rejected at sf0.001; 24 / 1 at sf0.01)
-EDIT_MAX_DIST = 6
 # bloom filter sized so the fixture exercises ALL THREE outcome classes
 # at the driver's sf0.01 (m=2048/k=3 over ~400 corpus keys: 50 true
 # hits, 3 false positives, 47 true negatives); production m scales with
@@ -765,112 +753,6 @@ _CONV_ND_FIXTURE_SQL = f"""(
 )"""
 
 
-def _neardup_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """incremental_neardup through the MATERIALIZED band index: write
-    the corpus index to parquet, read it back, probe — same rows as the
-    recompute form, so the oracle is the same batch SQL. The round-trip
-    is the point: the driver hash proves the persisted artifact carries
-    everything a probe needs (verify-inline signature columns)."""
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="lfs_contract_bandidx_")
-    docs = _docs(spark, sf_dir)
-    dedup.write_band_index(docs.where(F.col("doc_id") % 5 != 0), f"{work}/idx")
-    return dedup.probe_band_index(
-        docs.where(F.col("doc_id") % 5 == 0),
-        spark.read.parquet(f"{work}/idx"),
-        n=3,
-    )
-
-
-def _streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming NEAR-dup ingest against the static corpus band index,
-    hash-checked against the batch incremental_neardup oracle — the
-    FIFTH streaming ≡ batch equivalence shipped as a driver row. Same
-    harness discipline as the other streaming rows: maxFilesPerTrigger=1
-    over 2 input files (exactly one trigger boundary — pair state from
-    trigger 1 must survive into trigger 2's complete-mode table),
-    results round-trip through parquet so the returned plan is a plain
-    scan."""
-    import tempfile
-
-    from log_formatter_spark.streaming.dedup import streaming_neardup
-
-    work = tempfile.mkdtemp(prefix="lfs_contract_neardup_")
-    docs = _docs(spark, sf_dir)
-    src = f"{work}/in"
-    docs.where(F.col("doc_id") % 5 == 0).repartition(2).write.mode(
-        "overwrite"
-    ).parquet(src)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        streaming_neardup(stream, docs.where(F.col("doc_id") % 5 != 0), n=3)
-        .writeStream.format("memory")
-        .queryName("lfs_neardup_gate")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    spark.table("lfs_neardup_gate").write.mode("overwrite").parquet(f"{work}/out")
-    return spark.read.parquet(f"{work}/out")
-
-
-def _containment_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bipartite ingest-containment gate: new docs (doc_id % 5 == 0)
-    probed against the standing corpus for n-gram containment."""
-    docs = _docs(spark, sf_dir)
-    return dedup.containment_probe(
-        docs.where(F.col("doc_id") % 5 == 0),
-        docs.where(F.col("doc_id") % 5 != 0),
-        n=3,
-        min_containment=0.5,
-    )
-
-
-def _streaming_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming containment ingest gate against the static corpus
-    shingle index, hash-checked against the batch containment_probe
-    oracle — the ELEVENTH streaming ≡ batch equivalence shipped as a
-    driver row, and (like streaming_novelty) one where the streaming
-    form is the batch definition verbatim: everything below the final
-    (batch_doc, corpus_doc) pair aggregate is stateless. Same harness
-    discipline as the other streaming rows: maxFilesPerTrigger=1 over 2
-    input files (one trigger boundary — pair state from trigger 1 must
-    survive into trigger 2's complete-mode table), results round-trip
-    through parquet so the returned plan is a plain scan."""
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="lfs_contract_containment_")
-    docs = _docs(spark, sf_dir)
-    src = f"{work}/in"
-    docs.where(F.col("doc_id") % 5 == 0).repartition(2).write.mode(
-        "overwrite"
-    ).parquet(src)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        dedup.containment_probe(
-            stream, docs.where(F.col("doc_id") % 5 != 0), n=3, min_containment=0.5
-        )
-        .writeStream.format("memory")
-        .queryName("lfs_containment_gate")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    spark.table("lfs_containment_gate").write.mode("overwrite").parquet(f"{work}/out")
-    return spark.read.parquet(f"{work}/out")
-
-
 def _attribution_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from log_formatter_spark.operators.asof import attribution_window
 
@@ -1350,10 +1232,10 @@ def _novelty_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ngram_novelty through the MATERIALIZED gram index: write the
     reference corpus's distinct gram-hash table to parquet, read it
     back, probe — same rows as the recompute form, so the oracle is the
-    same batch SQL. The round-trip is the point (the neardup_indexed
-    discipline): the driver hash proves the persisted artifact carries
-    everything a steady-state novelty probe needs, i.e. the reference
-    explode never has to re-run over history."""
+    same batch SQL. The round-trip is the point: the driver hash proves
+    the persisted artifact carries everything a steady-state novelty
+    probe needs, i.e. the reference explode never has to re-run over
+    history."""
     import tempfile
 
     work = tempfile.mkdtemp(prefix="lfs_contract_gramidx_")
@@ -1423,181 +1305,7 @@ _STREAMING_INC_DEDUP_SQL = _streaming_inc_dedup_sql()
 # --- catalog --------------------------------------------------------------
 
 
-# Driver-gate execution order. The driver grades EXACTLY the first 50
-# queries per round (observed r01: 34/34; r02-r04: precisely the first
-# 50 of this list), so with a 135-query catalog ordering IS coverage.
-# Round-5 rotation (VERDICT r4 #1-2): slot 1 stays the flagship
-# (absorbs JVM/session warm-up); slots 2-16 are the 15 round-4d queries
-# that have never had a driver row (union coverage r01..r04 = 120/135)
-# -- banking these makes union driver coverage 135/135; slots 17-36
-# refresh the 20 entries whose latest grade is r01/r02 (stalest
-# non-streaming grades in the union); slots 37-50 refresh the cheapest
-# r03-graded entries. The catalog is FROZEN for the round-5 gate: any
-# new operator must displace a block-C refresh slot (never a block-A/B
-# entry) -- pinned mechanically by
-# tests/test_contract.py::test_ungraded_queries_inside_driver_window,
-# which derives "needs a driver row" from the shipped CORRECTNESS
-# files instead of a hand-maintained list. Within each block, order is
-# ASCENDING measured gate cost (spark+oracle) so a budget truncation
-# cuts the most expensive entries first; streaming rows sit last in
-# their block (one-time streaming machinery warm-up). Keep in sync
-# with queries() -- pinned by test_gate_order_covers_catalog.
-_GATE_ORDER = [
-    "transcripts_view",
-    # --- block A: the round-4d queries, never driver-graded ---------
-    "rate_anomaly",
-    "tool_transitions",
-    "key_skew_report",
-    "error_streaks",
-    "conv_protocol",
-    "tool_pagerank",
-    "sink_agg_merge",
-    "strip_repetition",
-    # round-5 additions (window-placed per the freeze rule, displacing
-    # block-C refreshes)
-    "conv_curation",
-    "streaming_tool_transitions",
-    # round-5 late additions (window-placed per the freeze rule,
-    # displacing two more block-C refreshes): LWW ingest compaction +
-    # temperature mixture
-    "compact_regenerations",
-    "mixture_temperature",
-    "hll_distinct_users",
-    # round-5 session-2 additions (window-placed per the freeze rule,
-    # displacing two more block-B refreshes): PPS Poisson sampling +
-    # snapshot diff
-    "weighted_sample",
-    "dataset_diff",
-    # round-5 session-3 additions (window-placed per the freeze rule,
-    # displacing three more block-B refreshes): n-gram novelty (batch +
-    # streaming twin) and crawl-fragment stitching
-    "ngram_novelty",
-    "stitch_fragments",
-    "streaming_novelty",
-    "novelty_indexed",
-    "streaming_hll_distinct",
-    "streaming_countmin",
-    "streaming_compact",
-    # round-5 session-6 additions (window-placed per the freeze rule,
-    # displacing five more block-B refreshes): asymmetric containment
-    # and the label-QA kappa audit
-    "rater_agreement",
-    "containment_pairs",
-    "token_budget_fill",
-    "quality_calibration",
-    "containment_probe",
-    "streaming_containment",
-    # round-5 session-7 additions (window-placed per the freeze rule,
-    # displacing two more refreshes): leakage-safe cluster split and
-    # conversation shared-prefix analysis
-    "cluster_split",
-    "prefix_share",
-    # round-5 session-9 additions (window-placed per the freeze rule,
-    # displacing the parse_labels and parse_extract refreshes): CCNet
-    # cross-corpus line-level dedup over the deterministic line
-    # fixture, and the named Gopher quality-rule audit
-    "gopher_rules",
-    "line_dedup",
-    # --- block B: stalest grades (latest row r01/r02), refreshed ------
-    "parse_extract",
-    "parse_labels",
-    "kafka_decode_json",
-    "enrich_join",
-    "route_split",
-    "asof_last_click",
-    "vocab_topk",
-    "lang_id_ngram",
-    "pipeline_counts",
-    "pipeline_counts_jvm",
-    "corpus_filter",
-    "dedup_simhash_pairs",
-    "dedup_simhash",
-    "dedup_minhash_signatures",
-    "dedup_ngram_jaccard",
-    "dedup_minhash",
-    # --- block C: cheapest r03-graded refreshes (displaceable by any
-    # round-5 addition; see the freeze note above) ---------------------
-    "mixture_epochs",
-    "dedup_exact",
-    "validate_events",
-    "text_stats",
-    "dataset_split",
-    "token_count",
-    "labels_stamp",
-    # --- tail: r03-graded (union-covered; first entries displaced from
-    # block C by the round-5 additions) ----------------------------------
-    "filter_exclude",
-    "busiest_convs",
-    "filter_project",
-    "events_props_json",
-    "events_hourly",
-    "distinct_convs_hourly",
-    "doc_fingerprint",
-    "lang_id",
-    "kmv_distinct_users",
-    "repetition_score",
-    "skew_salted_agg",
-    "window_ordering",
-    "incremental_dedup",
-    "pii_redact",
-    "parse_error_tolerant",
-    "turn_latency",
-    "kafka_decode_raw",
-    "source_profile",
-    "doc_winnow",
-    "conversation_assembly",
-    "sft_pairs",
-    "sink_template_route",
-    "winnow_pairs",
-    "conversation_sessions",
-    "temporal_split",
-    "conv_dedup",
-    "conv_qa",
-    # --- tail: r04-graded (freshest rows) ------------------------------
-    "error_burst",
-    "parse_grok",
-    "source_quota_sample",
-    "quality_deciles",
-    "hash_sample",
-    "decontaminate",
-    "boilerplate_frac",
-    "attribution_window",
-    "kafka_pipeline_routed",
-    "incremental_neardup",
-    "split_contamination",
-    "dedup_clusters",
-    "streaming_incremental_dedup",
-    "streaming_attribution",
-    "streaming_conv_keys",
-    "exact_substring_spans",
-    "span_dup_fraction",
-    "source_overlap",
-    "source_drift",
-    "streaming_neardup",
-    "neardup_indexed",
-    "conv_neardup",
-    "preference_pairs",
-    "neardup_edit",
-    "bloom_membership",
-    "dup_families",
-    "strip_boilerplate",
-    "curation_funnel",
-    "streaming_bloom",
-    "countmin_hitters",
-    "streaming_pipeline_counts",
-]
-
-
 def queries() -> dict[str, QueryFn]:
-    q = _catalog()
-    ordered = [k for k in _GATE_ORDER if k in q]
-    # anything not yet placed runs EARLY (a new operator must never sit
-    # behind the expensive tail before it has earned a driver row)
-    unplaced = [k for k in q if k not in _GATE_ORDER]
-    return {k: q[k] for k in [ordered[0], *unplaced, *ordered[1:]]}
-
-
-def _catalog() -> dict[str, QueryFn]:
     return {
         # the input view itself: per-turn text equality is the north-rule
         # row invariant, checked here as a driver-hashed query
@@ -1644,7 +1352,6 @@ def _catalog() -> dict[str, QueryFn]:
         "validate_events": lambda s, d: validate.validate_events(
             s.read.parquet(f"{d}/events.parquet")
         ),
-        "vocab_topk": lambda s, d: olap.vocab_topk(_docs(s, d)),
         "conversation_sessions": lambda s, d: sessions.conversation_sessions(
             transcripts_from_events(s, d)
         ),
@@ -1787,52 +1494,14 @@ def _catalog() -> dict[str, QueryFn]:
             _docs(s, d), n=3
         ),
         "dedup_minhash": lambda s, d: dedup.minhash_pairs(_docs(s, d), n=3),
-        "neardup_edit": lambda s, d: dedup.edit_verified_pairs(
-            _docs(s, d), max_edit=EDIT_MAX_DIST, min_est=NGRAM_MIN_JACCARD
-        ),
-        # near-dup tier of incremental ingest: batch bands probe the
-        # corpus band index (natural near-dups cross the %5 split)
-        "incremental_neardup": lambda s, d: dedup.incremental_neardup(
-            _docs(s, d).where(F.col("doc_id") % 5 == 0),
-            _docs(s, d).where(F.col("doc_id") % 5 != 0),
-            n=3,
-        ),
-        "dedup_simhash": lambda s, d: dedup.simhash(_docs(s, d)),
-        # blocked (pigeonhole-segment) plan; the oracle below is the
-        # all-pairs SQL, so the driver's hash check doubles as the proof
-        # that blocked == all-pairs
-        "dedup_simhash_pairs": lambda s, d: dedup.simhash_pairs_blocked(
-            _docs(s, d), max_hamming=SIMHASH_MAX_HAMMING
-        ),
-        "dedup_ngram_jaccard": lambda s, d: dedup.ngram_jaccard_pairs(
-            _docs(s, d), n=3, min_jaccard=NGRAM_MIN_JACCARD, max_doc_freq=NGRAM_MAX_DF
-        ),
-        # asymmetric containment (doc-in-doc / quote detection) over the
-        # same inverted-index blocking as the Jaccard tier
-        "containment_pairs": lambda s, d: dedup.containment_pairs(
-            _docs(s, d), n=3, min_containment=0.5, max_doc_freq=NGRAM_MAX_DF
-        ),
         # cross-source containment audit over the banded MinHash pairs
         "source_overlap": lambda s, d: corpus.source_overlap(_docs(s, d)),
         # per-source unigram total-variation drift (exact-integer form)
         "source_drift": lambda s, d: corpus.source_drift(_docs(s, d)),
-        # streaming near-dup ingest vs the static corpus band index
-        # (fifth streaming ≡ batch equivalence; oracle = the batch
-        # incremental_neardup SQL — max over band collisions renders
-        # the batch twin's distinct() order-free)
-        "streaming_neardup": _streaming_neardup,
-        "containment_probe": _containment_probe,
-        "streaming_containment": _streaming_containment,
-        # probe through the PERSISTED band index (same oracle: the
-        # round-trip must be row-identical to the recompute form)
-        "neardup_indexed": _neardup_indexed,
         # pairs → connected components → survivors (iterative label
         # propagation; oracle = DuckDB recursive CTE, a different algorithm)
         "dedup_clusters": lambda s, d: dedup.cluster_pairs(
             _docs(s, d), dedup.minhash_pairs(_docs(s, d), n=3, min_est=0.5)
-        ),
-        "dup_families": lambda s, d: dedup.dup_families(
-            _docs(s, d), max_edit=EDIT_MAX_DIST, edit_min_est=NGRAM_MIN_JACCARD
         ),
         # composite corpus cleaning (quality + dedup + lang + token bounds)
         "corpus_filter": lambda s, d: corpus.corpus_filter(_docs(s, d)),
@@ -1958,7 +1627,6 @@ def oracle_sql() -> dict[str, str]:
         # equality is the correctness content
         "streaming_hll_distinct": sketch.hll_distinct_sql(p=5),
         "validate_events": validate.validate_events_sql(),
-        "vocab_topk": olap.vocab_topk_sql(),
         "text_stats": T.text_stats_sql(),
         "pii_redact": redact_text_sql(src=f"({_PII_INJECT_SQL})"),
         "token_count": T.token_count_sql(),
@@ -2041,52 +1709,11 @@ def oracle_sql() -> dict[str, str]:
         "streaming_incremental_dedup": _STREAMING_INC_DEDUP_SQL,
         "dedup_minhash_signatures": dedup.minhash_signatures_sql(n=3),
         "dedup_minhash": dedup.minhash_pairs_sql(n=3),
-        "neardup_edit": dedup.edit_verified_pairs_sql(
-            max_edit=EDIT_MAX_DIST, min_est=NGRAM_MIN_JACCARD
-        ),
-        "incremental_neardup": dedup.incremental_neardup_sql(
-            "SELECT * FROM documents WHERE doc_id % 5 = 0",
-            "SELECT * FROM documents WHERE doc_id % 5 <> 0",
-            n=3,
-        ),
-        "dedup_simhash": dedup.simhash_sql(),
-        "dedup_simhash_pairs": dedup.simhash_pairs_sql(max_hamming=SIMHASH_MAX_HAMMING),
-        "dedup_ngram_jaccard": dedup.ngram_jaccard_pairs_sql(
-            n=3, min_jaccard=NGRAM_MIN_JACCARD, max_doc_freq=NGRAM_MAX_DF
-        ),
-        "containment_pairs": dedup.containment_pairs_sql(
-            n=3, min_containment=0.5, max_doc_freq=NGRAM_MAX_DF
-        ),
-        "dup_families": dedup.dup_families_sql(
-            max_edit=EDIT_MAX_DIST, edit_min_est=NGRAM_MIN_JACCARD
-        ),
         "dedup_clusters": dedup.cluster_pairs_sql(
             dedup.minhash_pairs_sql(n=3, min_est=0.5)
         ),
         "source_overlap": corpus.source_overlap_sql(),
         "source_drift": corpus.source_drift_sql(),
-        "streaming_neardup": dedup.incremental_neardup_sql(
-            "SELECT * FROM documents WHERE doc_id % 5 = 0",
-            "SELECT * FROM documents WHERE doc_id % 5 <> 0",
-            n=3,
-        ),
-        "containment_probe": dedup.containment_probe_sql(
-            "SELECT * FROM documents WHERE doc_id % 5 = 0",
-            "SELECT * FROM documents WHERE doc_id % 5 <> 0",
-            n=3,
-            min_containment=0.5,
-        ),
-        "streaming_containment": dedup.containment_probe_sql(
-            "SELECT * FROM documents WHERE doc_id % 5 = 0",
-            "SELECT * FROM documents WHERE doc_id % 5 <> 0",
-            n=3,
-            min_containment=0.5,
-        ),
-        "neardup_indexed": dedup.incremental_neardup_sql(
-            "SELECT * FROM documents WHERE doc_id % 5 = 0",
-            "SELECT * FROM documents WHERE doc_id % 5 <> 0",
-            n=3,
-        ),
         "corpus_filter": corpus.corpus_filter_sql(),
         "split_contamination": corpus.split_contamination_sql(
             dedup.minhash_pairs_sql(n=3, min_est=0.5), _DATASET_SPLIT_SQL

@@ -1,6 +1,6 @@
 """Cross-engine deterministic hashing.
 
-The sketch operators (minhash, simhash, fingerprints) need a hash
+The sketch operators (fingerprints, winnowing, sampling coins) need a hash
 function that produces the *same integer* in Spark and in the DuckDB
 oracle, so the driver's value-hash comparison can verify them exactly.
 Neither engine's native hash qualifies (Spark ``xxhash64`` vs DuckDB

@@ -1,5 +1,5 @@
-"""Word n-gram shingling — the shared substrate for minhash / Jaccard
-dedup and document fingerprinting.
+"""Word n-gram shingling — the shared substrate for minhash dedup and
+document fingerprinting.
 
 Both engines build the same (doc_id, shingle) set:
   Spark : explode(sequence(1, size(toks)-n+1)) + element_at slices
@@ -7,8 +7,9 @@ Both engines build the same (doc_id, shingle) set:
 
 The shingle table is the scale-critical intermediate: at 10^12 docs it
 is ~#tokens rows wide but only two columns, feeds straight into hash
-aggregations (min-hash) or a shingle-keyed self-join (Jaccard), and
-never materializes the original text past the first projection.
+aggregations (min-hash) or a shingle-keyed self-join (shared-span and
+winnow pairs), and never materializes the original text past the first
+projection.
 """
 
 from __future__ import annotations
@@ -61,33 +62,6 @@ SELECT DISTINCT {id_col}, shingle FROM (
   FROM (SELECT {id_col}, {toks} AS toks FROM {src}) _t
 )
 """
-
-
-def rowwise_shingles(toks_col, n: int = 3):
-    """Per-ROW shingle ARRAY over an already-tokenized column — the
-    stateless form streaming-safe operators build on (no explode, no
-    groupBy): ``dedup.rowwise_minhash`` folds it per row,
-    ``dedup.containment_probe`` set-ifies it with ``array_distinct``.
-    One definition of the n-window concat so the per-row and exploded
-    (:func:`shingle_df`) renderings can never drift. Caller must
-    pre-filter ``size(toks) >= n`` (an undersized array yields a
-    DESCENDING sequence, not an empty one)."""
-    return F.transform(
-        F.sequence(F.lit(1), F.size(toks_col) - (n - 1)),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks_col, i + F.lit(k)) for k in range(n)]
-        ),
-    )
-
-
-def rowwise_shingles_sql(toks_expr: str, n: int = 3) -> str:
-    """DuckDB rendering of :func:`rowwise_shingles` over a list
-    expression named/aliased ``toks_expr``."""
-    parts = " || ' ' || ".join(f"{toks_expr}[i + {k}]" for k in range(n))
-    return (
-        f"list_transform(generate_series(1, len({toks_expr}) - {n - 1}),"
-        f" i -> {parts})"
-    )
 
 
 def positional_shingles(
@@ -206,7 +180,7 @@ def winnow_pairs(
     passage reuse (the "substring duplication" regime of training-data
     dedup, cf. exact-substring dedup over suffix arrays) with an
     inverted-index join on the ~2/(w+1)-density fingerprint table, not
-    on raw shingles. Same plan family as ngram_jaccard_pairs but over a
+    on raw shingles: an inverted-index self-join, but over a
     sequence-aware, pre-thinned key set."""
     fp = winnow(df, n=n, w=w, text_col=text_col, id_col=id_col)
     a, b = fp.alias("a"), fp.alias("b")
@@ -332,8 +306,8 @@ def exact_spans(
     integer-only rows. ``max_df`` (optional) drops shingles hotter than
     the cap before the self-join — the skew escape hatch for degenerate
     boilerplate; it TRUNCATES spans that pass through dropped shingles,
-    so leaving it None keeps the operator exact (the stop-shingle
-    trade-off documented on ngram_jaccard_pairs).
+    so leaving it None keeps the operator exact (a stop-shingle cap
+    trades recall on boilerplate-heavy spans for a bounded join).
 
     Keys are md5-derived 60-bit hashes (house style): a cross-doc
     collision would need ~2^30 distinct shingles sharing a bucket; the
@@ -351,8 +325,7 @@ def exact_spans(
     pos = positional_shingles(df, n=seed, text_col=text_col, id_col=id_col)
     ph = pos.select(F.col(id_col), "i", md5_60(F.col("shingle")).alias("h"))
     if max_df is not None:
-        # DOCUMENT frequency (distinct docs per shingle), matching the
-        # max_doc_freq precedent on ngram_jaccard_pairs — a raw
+        # DOCUMENT frequency (distinct docs per shingle) — a raw
         # occurrence count would let within-doc repetition alone trip
         # the cap and truncate real cross-doc spans
         hot = ph.groupBy("h").agg(

@@ -434,10 +434,10 @@ def conv_curation(
     subplans stop canonicalizing equal (measured: the filter asymmetry
     alone doubles the assembly shuffle); (b) no per-tier extra columns
     ride the aggregate (see the n_turns note above). The near tier is
-    the verify-inline probe (signatures RIDE the band explode, est
-    filter before the pair distinct — the r4 incremental_neardup
-    shape); everything above the assembly exchange is
-    |conversations|-sized."""
+    the verify-inline probe (signatures RIDE the band explode, so the
+    est filter runs on the raw collisions before the pair distinct and
+    no join back to the signature table is needed); everything above
+    the assembly exchange is |conversations|-sized."""
     from log_formatter_spark.operators.dedup import (
         _bands_with_sig,
         _probe_bands,

@@ -1605,13 +1605,12 @@ FROM agg
 # --- PPS (token-mass-proportional) Poisson sampling -------------------------
 
 # Weight cap (tokens) and the inclusion probability AT the cap. The
-# per-token threshold step is an exact int64 plan literal:
-# thr(w) = min(w, CAP) * UNIT  <=  RATE * 2^60  <  2^63, so the
-# comparison against the 60-bit md5 coin never overflows and both
-# engines compare identical integers.
+# per-token threshold step unit = int(rate * 2^60) // cap is an exact
+# int64 plan literal: thr(w) = min(w, cap) * unit  <=  rate * 2^60  <
+# 2^63, so the comparison against the 60-bit md5 coin never overflows
+# and both engines compare identical integers.
 WS_CAP = 512
 WS_RATE = 0.5
-WS_UNIT = int(WS_RATE * (1 << 60)) // WS_CAP
 
 
 def weighted_sample(
@@ -1899,9 +1898,10 @@ def gram_index(
     artifact :func:`ngram_novelty` probes. Persist it once per corpus
     version (`write_gram_index`) instead of recomputing it per scoring
     run: at production scale this is the maintained, bucket-partitioned
-    gram table the docstring above promises (the `write_band_index`
-    discipline), and ingest appends merge into it with one distinct
-    over the delta's grams — history is never re-exploded."""
+    gram table the docstring above promises: an index written once and
+    appended to per ingest, never rebuilt. Ingest appends merge into it
+    with one distinct over the delta's grams — history is never
+    re-exploded."""
     from log_formatter_spark.functions.hashing import md5_60
     from log_formatter_spark.functions.shingles import shingle_df
 
@@ -2041,8 +2041,8 @@ def stitch_candidates(
     tail→head. The guard drops boundary values shared by more than
     ``max_boundary_docs`` fragments on either side — a boilerplate
     header ("terms of service apply ...") is a hot join key that would
-    otherwise produce a quadratic blowup, the exact failure mode
-    ``ngram_jaccard``'s ``max_doc_freq`` guards against. Join equality
+    otherwise produce a quadratic blowup: one hot key pairs every
+    fragment that carries it with every other. Join equality
     is on the literal k-token boundary string (not a hash), so pairs
     are exact — no verification pass needed.
     """

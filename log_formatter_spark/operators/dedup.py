@@ -1,23 +1,21 @@
 """Deduplication operators for the training-data pipeline layer.
 
-Four strategies, all expressed as declarative DataFrame plans so
+Two strategies, both expressed as declarative DataFrame plans so
 Catalyst/AQE pick physical details (partial aggs, skew splitting):
 
 - ``exact_dedup``       : hash-groupBy on normalized text (one shuffle on
                           a 128-bit key; at 10^12 docs this is the
                           classic map-side-combine + hash-agg shape).
+                          ``incremental_dedup`` is its batch-vs-corpus
+                          form.
 - ``minhash_signatures``/``minhash_pairs`` : MinHash + LSH banding.
                           shingle → 16 min-hash aggs → 4 bands → bucket
                           self-join. The only joins are on band buckets
                           (tiny keys); no all-pairs product ever forms.
-- ``simhash``/``simhash_pairs`` : 60-bit SimHash over token frequencies.
-- ``ngram_jaccard_pairs``: exact word-n-gram Jaccard with shared-shingle
-                          blocking (self-join on shingle, then per-pair
-                          intersection counts — the standard "inverted
-                          index" join, linear in total postings).
 
-Hashes come from functions.hashing.md5_60 so every operator has an
-exact DuckDB oracle rendering (the *_sql builders).
+``cluster_pairs`` resolves a pair stream into components and survivors.
+Hashes are salted MD5 slices, so every operator has an exact DuckDB
+oracle rendering (the *_sql builders).
 """
 
 from __future__ import annotations
@@ -25,13 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from log_formatter_spark.functions.hashing import md5_60, MD5_60_SQL
-from log_formatter_spark.functions.shingles import (
-    rowwise_shingles,
-    shingle_df,
-    shingles_sql,
-)
-from log_formatter_spark.functions.text import tokens, TOKENS_SQL
+from log_formatter_spark.functions.shingles import shingle_df, shingles_sql
 
 # --- exact ----------------------------------------------------------------
 
@@ -234,54 +226,10 @@ def _bands_df(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
     ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
 
 
-def incremental_neardup(
-    batch: DataFrame,
-    corpus: DataFrame,
-    n: int = 3,
-    min_est: float = 0.0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Near-dup tier of incremental ingest (the MinHash sibling of
-    :func:`incremental_dedup`): (batch_doc, corpus_doc, est_jaccard)
-    for every new-batch doc whose LSH bands collide with the EXISTING
-    corpus's band index — without ever re-pairing the corpus against
-    itself.
-
-    The 10^12-doc shape: the corpus band index (id, band, bh) and
-    signature table are *maintained* artifacts — written once per ingest
-    (this module's signatures are deterministic, so appending a batch's
-    bands never invalidates history), bucketed on the join keys — so an
-    ingest pays bands(batch) ⋈ band_index (batch-sized probe of a
-    bucketed table) + signature lookups for the candidates only.
-    Candidate work is Σ bucket_a×bucket_b per (band, bh) — never
-    |batch|×|corpus|.
-
-    VERIFY-INLINE (r3 VERDICT #4 — the BENCH.md §13 lesson applied):
-    the signatures RIDE the band probe, so ``est_jaccard`` is computed
-    on the raw band-collision stream and the estimate filter runs
-    BEFORE the pair dedup. The earlier shape distinct()-materialized
-    the raw candidate set and joined the two signature tables back —
-    two extra exchanges, and a hot boilerplate bucket in the corpus
-    index inflated the distinct's input with pairs the filter was about
-    to drop. Riding the 16 ``mh`` longs through the band explode widens
-    that shuffle by ~128 B/row, the same trade once measured on the
-    embedding-LSH dedup (100×: 253 s → 74 s); the dedup is now
-    over FILTERED (batch_doc, corpus_doc, est) rows only.
-    """
-    sig_b = minhash_signatures(batch, n=n, text_col=text_col, id_col=id_col)
-    sig_c = minhash_signatures(corpus, n=n, text_col=text_col, id_col=id_col)
-    return _probe_bands(
-        _bands_with_sig(sig_b, "batch_doc", "a", id_col),
-        _bands_with_sig(sig_c, "corpus_doc", "b", id_col),
-        min_est,
-    ).distinct()
-
-
 def _est_jaccard_expr(pfx_a: str = "a", pfx_b: str = "b") -> Column:
     """Matching-signature fraction over the riding mh columns — the one
-    estimate formula every near-dup probe shares (incremental,
-    index-probe, streaming): change it here and all stay hash-equal."""
+    estimate formula both the self-join pairs and the band probe use, so
+    their estimates for the same pair stay hash-equal."""
     eq = sum(
         F.when(F.col(f"{pfx_a}{i}") == F.col(f"{pfx_b}{i}"), 1).otherwise(0)
         for i in range(N_PERM)
@@ -296,8 +244,8 @@ def _probe_bands(
     the estimate computed INLINE on the raw collision stream and the
     threshold applied BEFORE any pair dedup (the §13 verify-inline
     shape). Returns filtered, NOT yet deduplicated,
-    (batch_doc, corpus_doc, est_jaccard) rows — batch callers
-    ``.distinct()`` them, the streaming caller max-aggregates them."""
+    (batch_doc, corpus_doc, est_jaccard) rows for the caller to
+    ``.distinct()``."""
     return (
         bands_a.join(bands_b, on=["band", "bh"])
         .select("batch_doc", "corpus_doc", _est_jaccard_expr().alias("est_jaccard"))
@@ -309,9 +257,9 @@ def _bands_with_sig(
     sig: DataFrame, out_id: str, pfx: str, id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, mh0..mh15 renamed to pfx0..pfx15, band, bh) — the band
-    explode with the signatures RIDING it (the verify-inline shape both
-    incremental and streaming near-dup build on). Band hashes are
-    computed from the mh columns BEFORE the rename."""
+    explode with the signatures RIDING it, so the estimate needs no
+    join back to the signature table. Band hashes are computed from the
+    mh columns BEFORE the rename."""
     return sig.select(
         F.col(id_col).alias(out_id),
         *[F.col(f"mh{i}").alias(f"{pfx}{i}") for i in range(N_PERM)],
@@ -329,96 +277,6 @@ def _bands_with_sig(
         F.col("bb.band").alias("band"),
         F.col("bb.bh").alias("bh"),
     )
-
-
-def rowwise_minhash(
-    df: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-ROW minhash signatures — no explode, no groupBy: the shingle
-    set is built as an ARRAY column and each mh is an ``array_min`` over
-    per-shingle salted-digest slices. Bit-identical to
-    :func:`minhash_signatures` (min over the same multiset of the same
-    40-bit values), but STATELESS — the form an unbounded STREAM can
-    compute per micro-batch row with zero aggregation state, which is
-    what `streaming.dedup.streaming_neardup` builds on. Batch callers
-    should prefer `minhash_signatures`: the grouped form's map-side
-    combine beats per-row array churn once docs are long."""
-    n_digests = (N_PERM + 2) // 3
-    base = df.select(
-        F.col(id_col), tokens(F.col(text_col)).alias("_toks")
-    ).where(F.size("_toks") >= n)
-    sh = base.select(id_col, rowwise_shingles(F.col("_toks"), n).alias("_sh"))
-    # single-arg lambda factories: pyspark's `transform` interprets a
-    # TWO-parameter lambda as (element, index) — a `k=k` default arg
-    # would be silently rebound to the array-index column
-    def _salted(k: int):
-        salt = f"{k}|"
-        return lambda s: F.md5(F.concat(F.lit(salt), s))
-
-    def _sliced(third: int):
-        pos = 1 + 10 * third
-        return lambda m: F.conv(F.substring(m, pos, 10), 16, 10).cast("long")
-
-    dig = sh.select(
-        id_col,
-        *[
-            F.transform(F.col("_sh"), _salted(k)).alias(f"_m{k}")
-            for k in range(n_digests)
-        ],
-    )
-    return dig.select(
-        F.col(id_col),
-        *[
-            F.array_min(F.transform(F.col(f"_m{i // 3}"), _sliced(i % 3))).alias(
-                f"mh{i}"
-            )
-            for i in range(N_PERM)
-        ],
-    )
-
-
-def incremental_neardup_sql(
-    batch_cte: str,
-    corpus_cte: str,
-    n: int = 3,
-    min_est: float = 0.0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> str:
-    mins = _salted_min_sql()
-
-    def _bands(sig: str) -> str:
-        return "\nUNION ALL\n".join(
-            f"SELECT {id_col}, {b} AS band, md5("
-            + " || ',' || ".join(
-                f"CAST(mh{b * ROWS_PER_BAND + k} AS VARCHAR)"
-                for k in range(ROWS_PER_BAND)
-            )
-            + f") AS bh FROM {sig}"
-            for b in range(N_BANDS)
-        )
-
-    eq = " + ".join(
-        f"CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END" for i in range(N_PERM)
-    )
-    return f"""
-WITH batch AS ({batch_cte}),
-corpus AS ({corpus_cte}),
-sh_b AS ({shingles_sql('batch', n=n, text_col=text_col, id_col=id_col)}),
-sh_c AS ({shingles_sql('corpus', n=n, text_col=text_col, id_col=id_col)}),
-sig_b AS (SELECT {id_col}, {mins} FROM sh_b GROUP BY {id_col}),
-sig_c AS (SELECT {id_col}, {mins} FROM sh_c GROUP BY {id_col}),
-bands_b AS ({_bands('sig_b')}),
-bands_c AS ({_bands('sig_c')}),
-cand AS (
-  SELECT DISTINCT a.{id_col} AS batch_doc, b.{id_col} AS corpus_doc
-  FROM bands_b a JOIN bands_c b ON a.band = b.band AND a.bh = b.bh
-)
-SELECT batch_doc, corpus_doc, ({eq}) / {float(N_PERM)} AS est_jaccard
-FROM cand JOIN sig_b sa ON cand.batch_doc = sa.{id_col}
-          JOIN sig_c sb ON cand.corpus_doc = sb.{id_col}
-WHERE ({eq}) / {float(N_PERM)} >= {min_est}
-"""
 
 
 def minhash_pairs(
@@ -517,590 +375,6 @@ SELECT doc_a, doc_b, ({eq}) / {float(N_PERM)} AS est_jaccard
 FROM cand JOIN sig sa ON cand.doc_a = sa.{id_col}
           JOIN sig sb ON cand.doc_b = sb.{id_col}
 WHERE ({eq}) / {float(N_PERM)} >= {min_est}
-"""
-
-
-def edit_verified_pairs(
-    df: DataFrame,
-    max_edit: int,
-    n: int = 3,
-    min_est: float = 0.0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    pairs: DataFrame | None = None,
-) -> DataFrame:
-    """Edit-distance-verified near-dup pairs: MinHash banding for recall,
-    bounded Levenshtein for precision — the verify step templated-spam
-    dedup needs (Jaccard over shingle SETS is blind to token order and
-    repetition; edit distance is not). Output
-    ``(doc_a, doc_b, est_jaccard, edit_dist)`` with ``edit_dist <=
-    max_edit`` over the house-normalized text.
-
-    Plan shape: candidates form only through the band equality joins of
-    :func:`minhash_pairs` (est-filtered by ``min_est`` BEFORE anything
-    touches full text), then ONE join-back per side fetches the
-    normalized text for the surviving candidates. The join-back is
-    deliberate, not the §13 anti-pattern: full documents are orders of
-    magnitude too wide to ride a 4-band explode the way 16-column
-    signatures do, so est-filter-then-fetch moves strictly fewer bytes
-    than text-rides-the-bands — the opposite tradeoff from
-    incremental_neardup's inline verify, chosen for the opposite reason.
-
-    The verify itself is JVM codegen: ``levenshtein(a, b, max_edit)``
-    runs the banded O(max_edit · len) algorithm and returns -1 past the
-    bound (never the full O(len²) table), so per-pair cost is capped by
-    the caller's edit budget, not document length.
-
-    ``pairs`` lets a caller running several candidate tiers over the
-    same corpus (``dup_families``) pass one precomputed
-    ``minhash_pairs`` result instead of rebuilding signatures + band
-    joins per tier; it is re-filtered to ``min_est`` here, so a shared
-    set computed at a looser threshold stays semantically identical."""
-    if pairs is None:
-        pairs = minhash_pairs(
-            df, n=n, text_col=text_col, id_col=id_col, min_est=min_est
-        )
-    else:
-        pairs = pairs.where(F.col("est_jaccard") >= min_est)
-    t = df.select(F.col(id_col), norm_text_expr(text_col).alias("_nt"))
-    ta = t.select(F.col(id_col).alias("doc_a"), F.col("_nt").alias("_ta"))
-    tb = t.select(F.col(id_col).alias("doc_b"), F.col("_nt").alias("_tb"))
-    return (
-        pairs.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "est_jaccard",
-            F.levenshtein("_ta", "_tb", max_edit).alias("edit_dist"),
-        )
-        .where(F.col("edit_dist") >= 0)
-    )
-
-
-def edit_verified_pairs_sql(
-    src: str = "documents",
-    max_edit: int = 64,
-    n: int = 3,
-    min_est: float = 0.0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    pairs_sql: str | None = None,
-) -> str:
-    """DuckDB rendering of :func:`edit_verified_pairs` (same candidates,
-    full ``levenshtein`` filtered to the bound — identical distances on
-    every surviving row). ``pairs_sql`` mirrors the Spark ``pairs``
-    override: any SQL producing (doc_a, doc_b, est_jaccard) already
-    filtered to ``min_est``."""
-    inner = pairs_sql if pairs_sql is not None else minhash_pairs_sql(
-        src=src, n=n, text_col=text_col, id_col=id_col, min_est=min_est
-    )
-    lev = "levenshtein(na.nt, nb.nt)"
-    # CTE is NOT named "pairs": this SQL nests inside cluster_pairs_sql's
-    # WITH RECURSIVE pairs(...), where a same-named inner CTE binds to the
-    # recursive self-reference instead of shadowing (DuckDB binder)
-    return f"""
-WITH evp AS ({inner}),
-nt AS (SELECT {id_col}, {norm_text_sql(text_col)} AS nt FROM {src})
-SELECT p.doc_a, p.doc_b, p.est_jaccard, {lev} AS edit_dist
-FROM evp p
-JOIN nt na ON p.doc_a = na.{id_col}
-JOIN nt nb ON p.doc_b = nb.{id_col}
-WHERE {lev} <= {max_edit}
-"""
-
-
-# --- simhash --------------------------------------------------------------
-
-SIMHASH_BITS = 60
-
-
-def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """60-bit SimHash over token frequencies.
-
-    Plan: explode tokens → ONE grouped aggregation with 60 conditional
-    bit-sums. The ±1-per-bit definition folds into pure counting: with
-    T tokens and S_j = Σ bit_j(h), the signed sum is 2·S_j − T, so
-    bit j of the sketch is set iff 2·S_j > T. No per-bit row explode —
-    the round-1 formulation expanded every token row ×60 (4.5 B rows at
-    100× scale, 45 s of the 47 s pairs query) where this shuffles one
-    map-side-combined (id, 60 ints) partial per doc (measured
-    ~7× faster end-to-end at 100×, identical sketches).
-    """
-    tok = df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok"))
-    tok = tok.withColumn("h", md5_60(F.col("tok")))
-    aggs = [
-        F.sum(F.expr(f"(h >> {j}) & 1")).alias(f"s{j}") for j in range(SIMHASH_BITS)
-    ] + [F.count(F.lit(1)).alias("t")]
-    sums = tok.groupBy(id_col).agg(*aggs)
-    sketch = sum(
-        (
-            F.when(F.col(f"s{j}") * 2 > F.col("t"), F.lit(1 << j)).otherwise(0)
-        ).cast("long")
-        for j in range(SIMHASH_BITS)
-    )
-    return sums.select(F.col(id_col), sketch.alias("simhash"))
-
-
-def simhash_sql(src: str = "documents", text_col: str = "text", id_col: str = "doc_id") -> str:
-    toks = TOKENS_SQL.format(x=text_col)
-    h = MD5_60_SQL.format(x="tok")
-    sums = ",\n         ".join(
-        f"sum((h >> {j}) & 1) AS s{j}" for j in range(SIMHASH_BITS)
-    )
-    bits = " + ".join(
-        f"CASE WHEN s{j} * 2 > t THEN ({1 << j}::BIGINT) ELSE 0 END"
-        for j in range(SIMHASH_BITS)
-    )
-    return f"""
-WITH tok AS (
-  SELECT {id_col}, {h} AS h
-  FROM (SELECT {id_col}, unnest({toks}) AS tok FROM {src})
-),
-sums AS (
-  SELECT {id_col}, {sums}, count(*) AS t
-  FROM tok GROUP BY {id_col}
-)
-SELECT {id_col}, CAST({bits} AS BIGINT) AS simhash FROM sums
-"""
-
-
-def simhash_pairs(
-    df: DataFrame,
-    max_hamming: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance — all-pairs baseline.
-
-    All-pairs on the compact (id, simhash) sketch — fine up to ~10^5
-    docs per block, O(n²) beyond. The scale path is
-    :func:`simhash_pairs_blocked`, which returns EXACTLY the same pairs
-    via segment blocking; this form exists as its correctness anchor
-    (tests/test_dedup_blocked.py proves equality).
-    """
-    s = simhash(df, text_col=text_col, id_col=id_col)
-    a = s.select(F.col(id_col).alias("doc_a"), F.col("simhash").alias("ha"))
-    b = s.select(F.col(id_col).alias("doc_b"), F.col("simhash").alias("hb"))
-    return (
-        a.crossJoin(b)
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", F.bit_count(F.expr("ha ^ hb")).alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
-    )
-
-
-def _segment_bounds(total_bits: int, n_blocks: int) -> list[tuple[int, int]]:
-    """(start, width) per block, covering total_bits with near-equal widths."""
-    base, rem = divmod(total_bits, n_blocks)
-    bounds, start = [], 0
-    for b in range(n_blocks):
-        width = base + (1 if b < rem else 0)
-        bounds.append((start, width))
-        start += width
-    return bounds
-
-
-def simhash_pairs_blocked(
-    df: DataFrame,
-    max_hamming: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_blocks: int | None = None,
-    match_segments: int = 1,
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance — the 100 TB plan.
-
-    Charikar/pigeonhole blocking, generalized to ``match_segments``-way
-    combinational keys. Split the 60-bit sketch into ``n_blocks`` bit
-    segments with ``n_blocks ≥ max_hamming + match_segments``: sketches
-    within Hamming ``max_hamming`` differ in at most ``max_hamming``
-    segments, so they agree EXACTLY on at least ``match_segments``
-    segments — and therefore share at least one of the
-    C(n_blocks, match_segments) segment-combination keys. Equality
-    self-join on (combo_id, seg values…) provably covers every
-    qualifying pair, so the result is identical to
-    :func:`simhash_pairs` (the driver oracles this query against the
-    all-pairs SQL).
-
-    Why the knob exists (BENCH.md §11): single-segment keys at
-    max_hamming=4 are 12 bits wide, so verify work grows as
-    n²·5/2^12 — quadratic with a small constant, ~47 s at 500k docs.
-    ``match_segments=2`` widens the key to two 10-bit segments
-    (n_blocks=6): verify work n²·15/2^20, a 256× candidate reduction
-    for a 3× key fan-out (measured 46.9 s → a few s at 500k). The
-    general trade: coverage needs n_blocks - match_segments ≥
-    max_hamming; each +1 on match_segments multiplies keys by
-    ~n_blocks/match_segments and divides candidates by ~2^(60/n_blocks).
-    """
-    from itertools import combinations
-
-    nb = n_blocks or (max_hamming + match_segments)
-    if nb - match_segments < max_hamming:
-        # an explicit raise, not assert: asserts vanish under `python -O`,
-        # silently voiding the pigeonhole coverage guarantee this
-        # operator's exactness proof rests on
-        raise ValueError(
-            f"coverage requires n_blocks - match_segments >= max_hamming "
-            f"(got {nb} - {match_segments} < {max_hamming})"
-        )
-    s = simhash(df, text_col=text_col, id_col=id_col)
-    segs = [
-        F.expr(f"(simhash >> {start}) & {(1 << width) - 1}")
-        for start, width in _segment_bounds(SIMHASH_BITS, nb)
-    ]
-    # one struct per segment combination; the join key is (combo id,
-    # the combo's segment values rendered as one string)
-    key_structs = list(enumerate(combinations(range(nb), match_segments)))
-    blocks = s.select(
-        F.col(id_col),
-        F.col("simhash"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(ci).alias("block"),
-                        F.concat_ws(
-                            ",", *[segs[b].cast("string") for b in combo]
-                        ).alias("seg"),
-                    )
-                    for ci, combo in key_structs
-                ]
-            )
-        ).alias("bs"),
-    ).select(id_col, "simhash", F.col("bs.block").alias("block"), F.col("bs.seg").alias("seg"))
-    a, b = blocks.alias("a"), blocks.alias("b")
-    return (
-        a.join(b, on=["block", "seg"])
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-            F.bit_count(F.expr("a.simhash ^ b.simhash")).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-
-
-def simhash_pairs_sql(
-    src: str = "documents",
-    max_hamming: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> str:
-    return f"""
-WITH s AS ({simhash_sql(src, text_col=text_col, id_col=id_col)})
-SELECT a.{id_col} AS doc_a, b.{id_col} AS doc_b,
-       CAST(bit_count(xor(a.simhash::UBIGINT, b.simhash::UBIGINT)) AS INTEGER) AS hamming
-FROM s a, s b
-WHERE a.{id_col} < b.{id_col}
-  AND bit_count(xor(a.simhash::UBIGINT, b.simhash::UBIGINT)) <= {max_hamming}
-"""
-
-
-# --- exact n-gram jaccard -------------------------------------------------
-
-
-def _blocked_overlap(
-    df: DataFrame,
-    n: int,
-    text_col: str,
-    id_col: str,
-    max_doc_freq: int | None,
-) -> DataFrame:
-    """THE inverted-index blocking scaffold — shared by
-    :func:`ngram_jaccard_pairs` (symmetric Jaccard) and
-    :func:`containment_pairs` (asymmetric containment) so the
-    hot-shingle guard, size accounting, and a<b self-join exist once.
-    Returns ``(doc_a, doc_b, inter, na, nb)``: shared-shingle pair
-    intersections with both retained set sizes attached."""
-    sh = shingle_df(df, n=n, text_col=text_col, id_col=id_col)
-    if max_doc_freq is not None:
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .where(F.col("df") > max_doc_freq)
-            .select("shingle")
-        )
-        sh = sh.join(F.broadcast(hot), on="shingle", how="left_anti")
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, on="shingle")
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("nb"))
-    return inter.join(sa, "doc_a").join(sb, "doc_b")
-
-
-def _blocked_overlap_ctes(
-    src: str,
-    n: int,
-    text_col: str,
-    id_col: str,
-    max_doc_freq: int | None,
-) -> str:
-    """SQL twin of :func:`_blocked_overlap`: a CTE chain ending in
-    ``overlap(doc_a, doc_b, inter, na, nb)`` for the caller's WITH."""
-    guard = (
-        f"""sh AS (SELECT * FROM sh0 WHERE shingle NOT IN (
-  SELECT shingle FROM sh0 GROUP BY shingle HAVING count(*) > {max_doc_freq})),"""
-        if max_doc_freq is not None
-        else "sh AS (SELECT * FROM sh0),"
-    )
-    return f"""sh0 AS ({shingles_sql(src, n=n, text_col=text_col, id_col=id_col)}),
-{guard}
-sizes AS (SELECT {id_col}, count(*) AS n_sh FROM sh GROUP BY {id_col}),
-inter AS (
-  SELECT a.{id_col} AS doc_a, b.{id_col} AS doc_b, count(*) AS inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle
-  WHERE a.{id_col} < b.{id_col}
-  GROUP BY a.{id_col}, b.{id_col}
-),
-overlap AS (
-  SELECT doc_a, doc_b, inter, sa.n_sh AS na, sb.n_sh AS nb
-  FROM inter JOIN sizes sa ON inter.doc_a = sa.{id_col}
-             JOIN sizes sb ON inter.doc_b = sb.{id_col}
-)"""
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    n: int = 3,
-    min_jaccard: float = 0.1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_doc_freq: int | None = None,
-) -> DataFrame:
-    """Exact Jaccard over word n-gram sets, shared-shingle blocking.
-
-    The self-join key is the shingle (inverted-index join): a pair is
-    only ever formed if it shares ≥1 shingle, so cost is linear in
-    postings-list sizes. Intersection counts come from the join;
-    union = |A| + |B| - inter.
-
-    ``max_doc_freq`` is the skew guard: one boilerplate shingle present
-    in k documents produces k² join rows, turning "linear in postings"
-    quadratic. With a cutoff, shingles whose document frequency exceeds
-    it are dropped BEFORE the self-join (the hot set is tiny by
-    construction, so the exclusion is a broadcast anti-join), and
-    Jaccard is computed over the retained shingle sets — both |A∩B| and
-    |A∪B| shrink consistently. Each dropped ubiquitous shingle shifts a
-    pair's Jaccard by at most 1/|A∪B|, negligible for real documents at
-    any cutoff ≫ typical postings size; what it buys is a hard k×cutoff
-    bound on join rows per shingle. Sized for 100 TB: cutoff ~10⁴ keeps
-    the worst shingle's contribution at 10⁸ candidate rows (one
-    executor-minute) instead of 10²⁴.
-    """
-    jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-    return (
-        _blocked_overlap(df, n, text_col, id_col, max_doc_freq)
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= min_jaccard)
-    )
-
-
-def ngram_jaccard_pairs_sql(
-    src: str = "documents",
-    n: int = 3,
-    min_jaccard: float = 0.1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_doc_freq: int | None = None,
-) -> str:
-    return f"""
-WITH {_blocked_overlap_ctes(src, n, text_col, id_col, max_doc_freq)}
-SELECT doc_a, doc_b, inter / (na + nb - inter) AS jaccard
-FROM overlap
-WHERE inter / (na + nb - inter) >= {min_jaccard}
-"""
-
-
-def containment_pairs(
-    df: DataFrame,
-    n: int = 3,
-    min_containment: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_doc_freq: int | None = None,
-) -> DataFrame:
-    """Asymmetric n-gram CONTAINMENT: |A∩B| / min(|A|, |B|) — the
-    doc-in-doc detector Jaccard structurally misses. A 50-shingle quote
-    embedded verbatim in a 5000-shingle page has Jaccard ≈ 0.01 (below
-    any dedup threshold) but containment 1.0; this is the signal for
-    quote/aggregator/boilerplate-wrapper relationships, the dominant
-    near-dup family in web crawl corpora that symmetric similarity
-    leaves behind (cf. Broder's resemblance vs containment split in the
-    original shingling paper).
-
-    Candidate formation, skew guard and cost model are EXACTLY
-    :func:`ngram_jaccard_pairs`'s inverted-index blocking (shared-
-    shingle equi-join, ``max_doc_freq`` hot-shingle cutoff) — a pair
-    needs ≥1 shared shingle to score, and containment ≥ any threshold
-    implies shared shingles, so blocking loses nothing. Output adds the
-    direction: ``a_in_b`` when A is the smaller (contained) side.
-    """
-    cont = F.col("inter").cast("double") / F.least("na", "nb").cast("double")
-    return (
-        _blocked_overlap(df, n, text_col, id_col, max_doc_freq)
-        .select(
-            "doc_a",
-            "doc_b",
-            "na",
-            "nb",
-            cont.alias("containment"),
-            F.when(F.col("na") <= F.col("nb"), F.lit("a_in_b"))
-            .otherwise(F.lit("b_in_a"))
-            .alias("direction"),
-        )
-        .where(F.col("containment") >= min_containment)
-    )
-
-
-def containment_pairs_sql(
-    src: str = "documents",
-    n: int = 3,
-    min_containment: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_doc_freq: int | None = None,
-) -> str:
-    return f"""
-WITH {_blocked_overlap_ctes(src, n, text_col, id_col, max_doc_freq)}
-SELECT doc_a, doc_b, na, nb, containment, direction FROM (
-  SELECT doc_a, doc_b, na, nb,
-         CAST(inter AS DOUBLE) / CAST(least(na, nb) AS DOUBLE) AS containment,
-         CASE WHEN na <= nb THEN 'a_in_b' ELSE 'b_in_a' END AS direction
-  FROM overlap
-) WHERE containment >= {min_containment!r}
-"""
-
-
-def containment_probe(
-    batch: DataFrame,
-    corpus: DataFrame,
-    n: int = 3,
-    min_containment: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_doc_freq: int | None = None,
-) -> DataFrame:
-    """Ingest-time containment gate: for each incoming BATCH doc, every
-    CORPUS doc that already contains ≥ ``min_containment`` of its
-    n-gram set — ``(batch_doc, corpus_doc, n_sh, inter, containment)``
-    with containment = |batch ∩ corpus doc| / |batch| ("how much of
-    this new doc do we already have?"). The bipartite twin of
-    :func:`containment_pairs` and the quote/inclusion analogue of
-    :func:`incremental_neardup`: Jaccard-style probes pass a short doc
-    fully embedded in a long corpus page; this is the gate that
-    rejects it.
-
-    Streaming-ready by construction (the ``streaming_novelty``
-    discipline — the streaming form IS this definition): the batch
-    side's shingle set builds as a per-ROW array (no groupBy-over-
-    shingles, which would be unbounded keyed state on a stream), its
-    size rides the explode, the corpus index is the join's build side
-    (at production scale the maintained bucketed shingle table, the
-    gram-index discipline), and the ONLY aggregate is the final
-    (batch_doc, corpus_doc) pair count — on a stream, exactly the
-    emitted-pairs state, deterministic at any micro-batch slicing.
-    ``max(n_sh)`` is the order-free rendering of "n_sh is constant per
-    batch doc".
-
-    ``max_doc_freq`` is the hot-shingle skew guard the batch twin
-    (:func:`containment_pairs`) carries: shingles present in more than
-    that many CORPUS docs (boilerplate — 'click here to subscribe') are
-    removed from BOTH join sides before pairing, else one hot key makes
-    the bipartite join ~|batch|×|corpus| on a single executor. Unlike
-    the pair twin, the DENOMINATOR ``n_sh`` stays the full batch
-    shingle count — the batch side must remain a per-ROW computation to
-    stay streaming-safe (no driver-collected hot set folded into the
-    array), so the guarded containment is strictly ≤ the unguarded one:
-    boilerplate overlap never counts toward "we already have this", and
-    a guarded gate can only under-reject, never over-reject."""
-    base = batch.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks")).where(
-        F.size("_toks") >= n
-    )
-    sh_arr = F.array_distinct(rowwise_shingles(F.col("_toks"), n))
-    b = base.select(F.col(id_col).alias("batch_doc"), sh_arr.alias("_sh")).select(
-        "batch_doc", F.size("_sh").alias("_n_sh"), F.explode("_sh").alias("shingle")
-    )
-    c = shingle_df(corpus, n=n, text_col=text_col, id_col=id_col).select(
-        F.col(id_col).alias("corpus_doc"), "shingle"
-    )
-    if max_doc_freq is not None:
-        hot = (
-            c.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .where(F.col("df") > max_doc_freq)
-            .select("shingle")
-        )
-        c = c.join(F.broadcast(hot), on="shingle", how="left_anti")
-        b = b.join(F.broadcast(hot), on="shingle", how="left_anti")
-    agg = (
-        b.join(c, "shingle")
-        .groupBy("batch_doc", "corpus_doc")
-        .agg(F.count(F.lit(1)).alias("inter"), F.max("_n_sh").alias("n_sh"))
-    )
-    cont = F.col("inter").cast("double") / F.col("n_sh").cast("double")
-    return agg.select(
-        "batch_doc", "corpus_doc", "n_sh", "inter", cont.alias("containment")
-    ).where(F.col("containment") >= min_containment)
-
-
-def containment_probe_sql(
-    batch_cte: str,
-    corpus_cte: str,
-    n: int = 3,
-    min_containment: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_doc_freq: int | None = None,
-) -> str:
-    """DuckDB rendering; ``batch_cte``/``corpus_cte`` are SELECT bodies.
-    Same corpus-side ``max_doc_freq`` hot-shingle guard (both join
-    sides filtered, denominator untouched) as the DataFrame twin."""
-    from log_formatter_spark.functions.shingles import rowwise_shingles_sql
-    from log_formatter_spark.functions.text import TOKENS_SQL
-
-    toks = TOKENS_SQL.format(x=text_col)
-    if max_doc_freq is not None:
-        hot = (
-            "hot AS (SELECT shingle FROM c0 GROUP BY shingle"
-            f" HAVING count(*) > {max_doc_freq}),\n"
-            "c AS (SELECT * FROM c0 WHERE shingle NOT IN (SELECT shingle FROM hot)),\n"
-            "b AS (SELECT * FROM b0 WHERE shingle NOT IN (SELECT shingle FROM hot)),"
-        )
-    else:
-        hot = "c AS (SELECT * FROM c0),\nb AS (SELECT * FROM b0),"
-    return f"""
-WITH bt AS (
-  SELECT {id_col} AS batch_doc,
-         list_distinct({rowwise_shingles_sql("_toks", n)}) AS _sh
-  FROM (SELECT {id_col}, {toks} AS _toks FROM ({batch_cte}) _bsrc) _bt
-  WHERE len(_toks) >= {n}
-),
-b0 AS (SELECT batch_doc, CAST(len(_sh) AS INTEGER) AS _n_sh, unnest(_sh) AS shingle FROM bt),
-c0 AS (
-  SELECT {id_col} AS corpus_doc, shingle
-  FROM ({shingles_sql(f"({corpus_cte}) _csrc", n=n, text_col=text_col, id_col=id_col)})
-),
-{hot}
-agg AS (
-  SELECT batch_doc, corpus_doc, count(*) AS inter, max(_n_sh) AS n_sh
-  FROM b JOIN c USING (shingle)
-  GROUP BY batch_doc, corpus_doc
-)
-SELECT batch_doc, corpus_doc, n_sh, inter,
-       CAST(inter AS DOUBLE) / CAST(n_sh AS DOUBLE) AS containment
-FROM agg
-WHERE CAST(inter AS DOUBLE) / CAST(n_sh AS DOUBLE) >= {min_containment!r}
 """
 
 
@@ -1403,250 +677,4 @@ reach(id, r) AS (
 )
 SELECT id AS {id_col}, min(r) AS cluster_id, min(r) = id AS is_survivor
 FROM reach GROUP BY id
-"""
-
-
-# --- maintained band index (the per-ingest artifact) -------------------------
-
-
-def band_index(
-    corpus: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """The corpus near-dup band index as a DataFrame:
-    ``(corpus_doc, b0..b15, band, bh)`` — band buckets with the 16
-    signature longs RIDING each row (verify-inline: a probe computes
-    est_jaccard on the raw collision stream, no signature join-back).
-    This is the artifact the incremental docstrings call "maintained":
-    persist it once per ingest cycle with :func:`write_band_index`,
-    append each accepted batch's rows, and every subsequent ingest pays
-    a batch-sized probe instead of a corpus-sized signature recompute."""
-    sig = minhash_signatures(corpus, n=n, text_col=text_col, id_col=id_col)
-    return _bands_with_sig(sig, "corpus_doc", "b", id_col)
-
-
-def write_band_index(
-    corpus: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
-    """Materialize (or ``mode="append"``: extend) the corpus band index
-    at ``path``. Signatures are a pure deterministic function of the
-    text, so appending a batch's rows never invalidates history — the
-    property that makes the index maintainable rather than rebuilt.
-    Plain parquet here; the production layout buckets on (band, bh)
-    (``bucketBy`` + sortBy on a real catalog) so every ingest probe is
-    a shuffle-free bucket-local join."""
-    band_index(corpus, n=n, text_col=text_col, id_col=id_col).write.mode(mode).parquet(
-        path
-    )
-
-
-def probe_band_index(
-    batch: DataFrame,
-    index: DataFrame,
-    n: int = 3,
-    min_est: float = 0.0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """:func:`incremental_neardup` against a MATERIALIZED corpus band
-    index instead of recomputing corpus signatures — the actual
-    per-ingest cost at 10^12 docs: bands(batch) ⋈ stored index
-    (batch-sized probe), est filter BEFORE the pair dedup, row-for-row
-    equal to the recompute form (pinned in tests/test_band_index.py)."""
-    sig_b = minhash_signatures(batch, n=n, text_col=text_col, id_col=id_col)
-    return _probe_bands(
-        _bands_with_sig(sig_b, "batch_doc", "a", id_col), index, min_est
-    ).distinct()
-
-
-def write_band_index_bucketed(
-    corpus: DataFrame,
-    table: str,
-    n: int = 3,
-    buckets: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
-    """The PRODUCTION layout of the maintained band index: a catalog
-    table bucketed (and sorted) on the join keys ``(band, bh)``, so an
-    ingest probe shuffles ONLY the batch side — the index reads
-    bucket-aligned with zero exchange (pinned by
-    tests/test_band_index.py::test_bucketed_probe_plan_is_one_sided).
-    At 10^12 docs the index side is the 16×-corpus-rows artifact, so
-    its shuffle is the one worth designing away; appends go through
-    :func:`append_band_index_bucketed` (``insertInto``, which writes
-    through the table's bucket spec — pinned by
-    tests/test_band_index.py::test_bucketed_append_stays_bucket_aligned)."""
-    band_index(corpus, n=n, text_col=text_col, id_col=id_col).write.bucketBy(
-        buckets, "band", "bh"
-    ).sortBy("band", "bh").mode("overwrite").format("parquet").saveAsTable(table)
-
-
-def append_band_index_bucketed(
-    batch: DataFrame,
-    table: str,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> None:
-    """The per-ingest append for the PRODUCTION bucketed layout: extend
-    the catalog table with the accepted batch's band rows via
-    ``insertInto``, which resolves the table's bucket spec and writes
-    the new files bucket-aligned — so the one-sided probe plan keeps
-    holding after every ingest cycle (signatures are deterministic,
-    appending never invalidates history — same invariant as the flat
-    ``write_band_index(mode="append")`` path). ``insertInto`` is
-    POSITION-based, so columns are projected into the table's order
-    explicitly rather than trusting band_index's layout to never
-    change."""
-    cols = batch.sparkSession.table(table).columns
-    band_index(batch, n=n, text_col=text_col, id_col=id_col).select(
-        *cols
-    ).write.format("parquet").insertInto(table)
-
-
-# --- multi-signal duplicate families ---------------------------------------
-
-
-def dup_families(
-    docs: DataFrame,
-    min_est: float = 0.5,
-    edit_min_est: float = 0.05,
-    max_edit: int = 6,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Multi-signal duplicate FAMILIES with quality-canonical survivors —
-    the fusion step a production curation pipeline runs after its dedup
-    tiers: exact, MinHash-banded, and edit-verified evidence all vote
-    edges into ONE graph, connected components resolve transitive
-    identity across signals (doc A exact-dups B, B near-dups C → one
-    family), and the survivor per family is the HIGHEST-QUALITY member,
-    not the lowest id (`cluster_pairs`' min-id rule is the right
-    deterministic default for dedup bookkeeping; curation wants to keep
-    the best copy). Output per doc:
-    ``(doc_id, cluster_id, family_size, quality, is_canonical)``.
-
-    Plan shape: the exact tier contributes STAR edges to its group root
-    (a T-member exact group is T-1 edges, never T² pairs — the same
-    reason cluster_id is min-id, linearity under mass duplication); the
-    pair tiers are the banded plans unchanged. Components via
-    :func:`cluster_pairs` (auto minlabel→star). Canonical selection is
-    the preference_pairs discipline: order-free ``max(struct(quality,
-    -id))`` per family — map-side combine, deterministic tie-break to
-    the smallest id on equal quality, no per-family window."""
-    from log_formatter_spark.functions.text import text_stats
-
-    ex = exact_dedup(docs, text_col=text_col, id_col=id_col)
-    roots = ex.where(F.col("dup_rank") == 1).select(
-        "group_key", F.col(id_col).alias("doc_a")
-    )
-    ex_edges = (
-        ex.where(F.col("dup_rank") > 1)
-        .select("group_key", F.col(id_col).alias("doc_b"))
-        .join(roots, "group_key")
-        .select("doc_a", "doc_b")
-    )
-    # ONE candidate computation serves both pair tiers: signatures +
-    # band self-join at the looser threshold, then the est>=min_est tier
-    # is a pure filter of it (the exchanges below the filters are
-    # identical, so Spark's reuse rule shares the shuffle files — the
-    # signature agg and band join run once, not once per tier).
-    shared = minhash_pairs(
-        docs, n=3, text_col=text_col, id_col=id_col,
-        min_est=min(min_est, edit_min_est),
-    )
-    mh_edges = shared.where(F.col("est_jaccard") >= min_est).select(
-        "doc_a", "doc_b"
-    )
-    ed_edges = edit_verified_pairs(
-        docs, max_edit=max_edit, n=3, min_est=edit_min_est,
-        text_col=text_col, id_col=id_col, pairs=shared,
-    ).select("doc_a", "doc_b")
-    edges = ex_edges.unionByName(mh_edges).unionByName(ed_edges).distinct()
-    cc = cluster_pairs(docs, edges, id_col=id_col)
-    q = text_stats(docs, text_col=text_col, id_col=id_col).select(
-        id_col, F.coalesce(F.col("quality_score"), F.lit(-1.0)).alias("quality")
-    )
-    base = cc.join(q, id_col)
-    fam = base.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("family_size"),
-        F.max(F.struct(F.col("quality"), (-F.col(id_col)).alias("nid"))).alias(
-            "_best"
-        ),
-    )
-    return base.join(fam, "cluster_id").select(
-        id_col,
-        "cluster_id",
-        "family_size",
-        "quality",
-        (F.col(id_col) == -F.col("_best.nid")).alias("is_canonical"),
-    )
-
-
-def dup_families_sql(
-    src: str = "documents",
-    min_est: float = 0.5,
-    edit_min_est: float = 0.05,
-    max_edit: int = 6,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
-    """DuckDB rendering of :func:`dup_families`: same three edge tiers
-    (set-UNIONed), components via the recursive-CTE reachability oracle,
-    same struct-lexicographic canonical pick."""
-    from log_formatter_spark.functions.text import text_stats_sql
-
-    ex = exact_dedup_sql(src=src, text_col=text_col, id_col=id_col)
-    # Mirror the Spark side's shared candidate set: one minhash_pairs
-    # CTE at the looser threshold feeds both tiers (the signature CTE
-    # text is instantiated once, not once per tier).
-    shared = minhash_pairs_sql(
-        src=src, n=3, text_col=text_col, id_col=id_col,
-        min_est=min(min_est, edit_min_est),
-    )
-    ed = edit_verified_pairs_sql(
-        src=src, max_edit=max_edit, n=3, min_est=edit_min_est,
-        text_col=text_col, id_col=id_col,
-        pairs_sql=f"SELECT * FROM _shared WHERE est_jaccard >= {edit_min_est}",
-    )
-    # The _shared CTE sits inside a derived-table subquery: DuckDB's
-    # RECURSIVE binder (cluster_pairs_sql wraps these edges in WITH
-    # RECURSIVE pairs AS (...)) drops a WITH prefixed directly onto the
-    # recursive body, but scopes one inside a parenthesized subquery.
-    edges = f"""
-SELECT r.{id_col} AS doc_a, d.{id_col} AS doc_b
-FROM ({ex}) d JOIN ({ex}) r ON d.group_key = r.group_key AND r.dup_rank = 1
-WHERE d.dup_rank > 1
-UNION
-SELECT doc_a, doc_b FROM (
-  WITH _shared AS ({shared})
-  SELECT doc_a, doc_b FROM _shared WHERE est_jaccard >= {min_est}
-  UNION
-  SELECT doc_a, doc_b FROM ({ed}) _ed
-) _both
-"""
-    cc = cluster_pairs_sql(edges, src=src, id_col=id_col)
-    return f"""
-WITH cc AS ({cc}),
-q AS (
-  SELECT {id_col}, coalesce(quality_score, -1.0) AS quality
-  FROM ({text_stats_sql(src=src, text_col=text_col, id_col=id_col)}) _ts
-),
-base AS (
-  SELECT cc.{id_col}, cc.cluster_id, q.quality
-  FROM cc JOIN q USING ({id_col})
-),
-fam AS (
-  SELECT cluster_id, count(*) AS family_size,
-         max(struct_pack(q := quality, nid := -{id_col})) AS best
-  FROM base GROUP BY cluster_id
-)
-SELECT b.{id_col}, b.cluster_id, f.family_size, b.quality,
-       (b.{id_col} = -((f.best).nid)) AS is_canonical
-FROM base b JOIN fam f USING (cluster_id)
 """

@@ -2,12 +2,11 @@
 trailing baseline (``error_burst``), per-key hourly traffic-rate
 anomalies with exact integer statistics (``rate_anomaly``), and
 contiguous runs of ERROR turns per conversation (``error_streaks``),
-plus the corpus vocabulary by document frequency (``vocab_topk``), each
-with an exact DuckDB oracle.
+each with an exact DuckDB oracle.
 
 In each, the row-scale work is one map-side-combined aggregate (for
 ``error_streaks``, one exchange of the ERROR rows on ``conv_id``), and
-the windows or top-k run over that small aggregated output.
+the windows run over that small aggregated output.
 """
 
 from __future__ import annotations
@@ -280,34 +279,4 @@ SELECT conv_id, start_turn, end_turn, streak_len FROM (
   )
   GROUP BY conv_id, _isl
 ) WHERE streak_len >= {min_len}
-"""
-
-
-# --- corpus vocabulary --------------------------------------------------------
-
-
-def vocab_topk(docs: DataFrame, k: int = 100) -> DataFrame:
-    """Corpus vocabulary: global top-k tokens by document frequency.
-    Token explode → (token, df) aggregation (map-side combinable) →
-    global top-k via TakeOrderedAndProject (no full sort materializes)."""
-    from log_formatter_spark.functions.text import tokens
-
-    tok = docs.select(
-        "doc_id", F.explode(tokens(F.col("text"))).alias("token")
-    ).distinct()
-    counts = tok.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    return counts.orderBy(F.col("df").desc(), "token").limit(k)
-
-
-def vocab_topk_sql(src: str = "documents", k: int = 100) -> str:
-    from log_formatter_spark.functions.text import TOKENS_SQL
-
-    toks = TOKENS_SQL.format(x="text")
-    return f"""
-SELECT token, count(*) AS df FROM (
-  SELECT DISTINCT doc_id, token FROM (
-    SELECT doc_id, unnest({toks}) AS token FROM {src}
-  )
-)
-GROUP BY token ORDER BY df DESC, token LIMIT {k}
 """

@@ -108,59 +108,6 @@ GROUP BY b.group_key, (c.group_key IS NOT NULL)
 """
 
 
-def streaming_neardup(
-    batch_stream: DataFrame,
-    corpus: DataFrame,
-    n: int = 3,
-    min_est: float = 0.0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Continuous-ingest twin of ``operators.dedup.incremental_neardup``:
-    NEAR-dup an unbounded stream of new documents against the static
-    corpus band index — ``(batch_doc, corpus_doc, est_jaccard)`` for
-    every streamed doc whose LSH bands collide with the corpus index and
-    whose estimated Jaccard clears the threshold.
-
-    The stream side computes signatures PER ROW (`dedup.rowwise_minhash`
-    — array_min over per-shingle digest slices, bit-identical to the
-    grouped batch form but STATELESS: a groupBy-over-shingles signature
-    would be an unbounded stateful aggregate keyed on doc id). Bands
-    explode statelessly with the 16 mh columns riding (the verify-inline
-    shape), the corpus index is the stream-static join's build side (at
-    production scale the maintained bucketed band table, re-read per
-    micro-batch, never shuffled by the stream), and the ONLY stateful
-    node is the final (batch_doc, corpus_doc) max-aggregate — whose
-    state is exactly the emitted-pairs table, the same rows the batch
-    twin distinct()s, so the final table is DETERMINISTIC at any
-    parallelism and any micro-batch slicing and hashes against the batch
-    oracle (the FIFTH streaming ≡ batch equivalence). est_jaccard is
-    identical across a pair's band collisions, so max() is the
-    order-free rendering of the batch twin's distinct(). Production
-    bounds the pair state with a watermark over ingest time, exactly
-    like `dedup_stream`."""
-    from pyspark.sql import functions as F
-
-    from log_formatter_spark.operators.dedup import (
-        _bands_with_sig,
-        _probe_bands,
-        minhash_signatures,
-        rowwise_minhash,
-    )
-
-    sig_b = rowwise_minhash(batch_stream, n=n, text_col=text_col, id_col=id_col)
-    sig_c = minhash_signatures(corpus, n=n, text_col=text_col, id_col=id_col)
-    return (
-        _probe_bands(
-            _bands_with_sig(sig_b, "batch_doc", "a", id_col),
-            _bands_with_sig(sig_c, "corpus_doc", "b", id_col),
-            min_est,
-        )
-        .groupBy("batch_doc", "corpus_doc")
-        .agg(F.max("est_jaccard").alias("est_jaccard"))
-    )
-
-
 def streaming_bloom_membership(
     batch_stream: DataFrame,
     corpus_keys: DataFrame,
@@ -189,7 +136,7 @@ def streaming_bloom_membership(
     operator's (the driver hash gate checks it). The static sides are
     re-evaluated per micro-batch at gate scale; production materializes
     the words table once per ingest cycle (it is m/32 rows — driver-
-    sized) exactly as the maintained band index does for near-dup.
+    sized).
 
     Emits one output row per arriving (id, key) row; the batch twin
     emits one per distinct (id, key) — identical whenever ingest ids are

@@ -40,9 +40,6 @@ TRANSCRIPT_PATTERN = (
     r"(?P<level>[A-Z]+) \[(?P<tool_tag>\w*)\] (?P<body>.*) turn=(?P<turn_>\d+)"
 )
 
-# Group order for numbered-group engines (DuckDB regexp_extract(s, p, idx)).
-TRANSCRIPT_GROUPS = ["ts_str", "level", "tool_tag", "body", "turn_"]
-
 _ROLE_CASE = (
     "CASE event_type WHEN 'click' THEN 'user' WHEN 'view' THEN 'assistant' "
     "WHEN 'error' THEN 'system' WHEN 'purchase' THEN 'tool' "

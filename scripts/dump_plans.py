@@ -17,7 +17,6 @@ SHOWCASE = [
     ("pipeline_counts_jvm", "flagship DAG, jvm parse engine"),
     ("pipeline_counts", "flagship DAG, arrow parse engine"),
     ("dedup_minhash", "MinHash-LSH banded candidate pairs"),
-    ("dedup_simhash_pairs", "pigeonhole-blocked SimHash pairs"),
     ("asof_last_click", "as-of join (union+window, no join node)"),
     ("corpus_filter", "single-pass composite corpus cleaner"),
     ("doc_winnow", "winnowing fingerprint selection"),
@@ -25,12 +24,9 @@ SHOWCASE = [
     ("conv_dedup", "conversation dedup (two map-side-combined exchanges)"),
     ("decontaminate", "eval-set decontamination (broadcast eval shingles)"),
     ("incremental_dedup", "new-batch-vs-corpus dedup (key-index join, batch-side window)"),
-    ("incremental_neardup", "verify-inline band probe (ONE join, signatures ride)"),
-    ("neardup_indexed", "ingest probe of the persisted band index"),
     ("source_overlap", "cross-source containment over banded MinHash pairs"),
     ("source_drift", "exact-integer TV drift (window-attached corpus total)"),
     ("exact_substring_spans", "positional-shingle diagonal runs (Lee et al. regime)"),
-    ("dup_families", "multi-signal families (SHARED candidate set, star exact tier)"),
     ("strip_boilerplate", "cross-doc span stripping (hot-start-only coverage explode)"),
     ("strip_repetition", "within-doc repetition stripping (doc-local window)"),
     ("curation_funnel", "six cumulative stages, exchange-reused prefixes"),
@@ -45,8 +41,6 @@ SHOWCASE = [
     ("hll_distinct_users", "HyperLogLog registers (two streaming aggs, no distinct pass)"),
     ("ngram_novelty", "n-gram novelty vs reference (int64 gram join, no probe distinct)"),
     ("stitch_fragments", "fragment stitching (boundary equi-join, count-window guard)"),
-    ("containment_pairs", "doc-in-doc containment (inverted-index blocking, hot-shingle guard)"),
-    ("containment_probe", "bipartite ingest containment gate (stateless below pair aggregate)"),
     ("rater_agreement", "Cohen's kappa label QA (one narrow bool exchange)"),
     ("token_budget_fill", "water-filling budget allocation (|sources|-row windows)"),
     ("quality_calibration", "per-source percentile calibration (narrow projection sort)"),

@@ -101,29 +101,6 @@ def test_temporal_split_matches_bruteforce(spark):
             assert out[c] == "straddle", c
 
 
-def test_incremental_neardup_consistent_with_full_pairs(spark, sf_dir):
-    """Incremental band-probing must find exactly the cross-split subset
-    of the full-corpus minhash_pairs (signatures are doc-local, so the
-    estimates are identical) — the near-dup twin of the exact-tier
-    consistency property."""
-    from log_formatter_spark.operators.dedup import incremental_neardup, minhash_pairs
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    batch = docs.where(F.col("doc_id") % 5 == 0)
-    corpus = docs.where(F.col("doc_id") % 5 != 0)
-    inc = {
-        (min(r["batch_doc"], r["corpus_doc"]), max(r["batch_doc"], r["corpus_doc"])):
-        r["est_jaccard"]
-        for r in incremental_neardup(batch, corpus, n=3).collect()
-    }
-    full = {
-        (r["doc_a"], r["doc_b"]): r["est_jaccard"]
-        for r in minhash_pairs(docs, n=3).collect()
-        if (r["doc_a"] % 5 == 0) != (r["doc_b"] % 5 == 0)
-    }
-    assert inc == full
-
-
 def test_interval_join_matches_bruteforce(spark):
     """Bucketed interval join == the quadratic theta-join spec on random
     data, including bucket-edge timestamps, multi-bucket intervals,

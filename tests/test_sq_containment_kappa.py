@@ -1,10 +1,8 @@
-"""Round-5 session-6 operators: asymmetric containment and the
-rater-agreement kappa audit.
+"""The rater-agreement kappa audit (``corpus.rater_agreement``).
 
-Oracle parity for both catalog entries is covered by the
-parameterized test_contract replica; these tests pin the SEMANTIC
-properties the hash can't see (doc-in-doc detection vs Jaccard, kappa
-algebra / NULL rules)."""
+Oracle parity for the catalog entry is covered by the parameterized
+test_contract replica; these tests pin the SEMANTIC properties the hash
+can't see (kappa algebra, NULL rules, zero-token exclusion)."""
 
 from __future__ import annotations
 
@@ -13,62 +11,12 @@ import math
 from pyspark.sql import Row
 
 from log_formatter_spark.operators.corpus import rater_agreement
-from log_formatter_spark.operators.dedup import containment_pairs, ngram_jaccard_pairs
-
-# --- containment ------------------------------------------------------------
 
 
 def _docs_df(spark, texts):
     return spark.createDataFrame(
         [Row(doc_id=i, text=t, lang="en", source="s", n_chars=len(t)) for i, t in enumerate(texts)]
     )
-
-
-def test_containment_finds_doc_in_doc_jaccard_misses(spark):
-    """A short quote embedded verbatim in a long page: containment 1.0,
-    Jaccard far below any dedup threshold."""
-    quote = "the quick brown fox jumps over the lazy dog tonight"
-    filler = " ".join(f"w{i} x{i} y{i}" for i in range(80))
-    page = filler + " " + quote + " " + filler.replace("w", "z")
-    df = _docs_df(spark, [quote, page])
-    got = containment_pairs(df, n=3, min_containment=0.5).collect()
-    assert len(got) == 1
-    r = got[0]
-    assert (r["doc_a"], r["doc_b"], r["direction"]) == (0, 1, "a_in_b")
-    assert r["containment"] == 1.0
-    assert r["na"] < r["nb"]
-    jac = ngram_jaccard_pairs(df, n=3, min_jaccard=0.0).collect()
-    assert jac and jac[0]["jaccard"] < 0.1  # symmetric similarity misses it
-
-
-def test_containment_direction_and_threshold(spark):
-    """Half-overlap sits exactly at the threshold; disjoint docs never
-    form a pair (blocking: no shared shingle, no candidate)."""
-    a = "a b c d e f"          # shingles: 4
-    b = "c d e f g h i j"      # shares 'c d e', 'd e f' with a
-    c = "p q r s t u"          # disjoint
-    rows = containment_pairs(_docs_df(spark, [a, b, c]), n=3, min_containment=0.5).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["doc_a"], r["doc_b"]) == (0, 1)
-    assert r["containment"] == 0.5  # 2 shared / min(4, 6)
-    assert r["direction"] == "a_in_b"
-
-
-def test_containment_hot_shingle_guard(spark):
-    """max_doc_freq drops ubiquitous shingles BEFORE the self-join: with
-    the boilerplate shingle excluded, the pair loses its only shared
-    shingle and disappears."""
-    boiler = "click here to subscribe"
-    texts = [f"{boiler} unique{i} only{i} text{i}" for i in range(4)]
-    df = _docs_df(spark, texts)
-    unguarded = containment_pairs(df, n=3, min_containment=0.1).collect()
-    assert unguarded  # the boilerplate shingles form pairs
-    guarded = containment_pairs(df, n=3, min_containment=0.1, max_doc_freq=2).collect()
-    assert guarded == []
-
-
-# --- rater agreement --------------------------------------------------------
 
 
 def test_kappa_algebra_internal_consistency(spark, sf_dir):
